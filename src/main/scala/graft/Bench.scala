@@ -389,7 +389,7 @@ object Bench {
                    // One-time partitioned-layout ingests happen here so
                    // the timed q01b / q64 / q94 measure the pruned scan,
                    // not the write (writePartitioned / writeOnce /
-                   // buildOnce memoize). The ANN store is NOT warmed:
+                   // StoreProvenance.once memoize). The ANN store is NOT warmed:
                    // q89_index_build is the explicit timed build, and
                    // q89b-d after it (name order) measure serving.
                    "q01b_delta_pruned" -> sfDir,

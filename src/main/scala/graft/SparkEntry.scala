@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, lit, when}
 import graft.operators._
-import graft.sources.{DocStore, EventLogStore, Tables, VectorIndexStore}
+import graft.sources.{DocStore, EventLogStore, StoreProvenance, Tables,
+  VersionedTextIndex, VersionedVectorIndex}
 
 /** Driver contract — see /root/repo/SURVEY.md §2C for the declared query
   * inventory. Every entry in [[queries]] has, where SQL-expressible, an
@@ -109,7 +110,7 @@ object SparkEntry {
   private val WebMaxTok = 95L
   private val WebHostCap = 40
   /** Q90: vectors with vec_id ≥ this arrive AFTER the index is built
-    * and are admitted by [[graft.sources.VectorIndexStore.append]]
+    * and are admitted by [[VersionedVectorIndex.append]]
     * (below the 500-row sf0.001 embedding count, so both sides are
     * non-empty at every SF). */
   private val AnnAppendSplit = 400L
@@ -120,29 +121,30 @@ object SparkEntry {
     */
   private val AnnDeleteMod = 7L
   private val AnnDeleteRes = 3L
-  /** Per-SF persisted ANN index locations (the q64 DocStore tmpdir
-    * convention): the full-corpus store (q89 family) and the
-    * base-then-append store (q90 family). */
-  private def annStoreDir(d: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_annstore_${new java.io.File(d).getName}"
-  private def annBaseStoreDir(d: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_annstore_base_${new java.io.File(d).getName}"
-  /** The stored-index build for `d`, idempotent per JVM. */
+  /** The one location rule of the per-SF persisted stores (the q64
+    * DocStore tmpdir convention): `<tmpdir>/graft_<name>_<sf dir name>`
+    * — also the key [[StoreProvenance.once]] memoizes the index stores
+    * on.
+    */
+  private def storeDir(name: String, d: String): String =
+    s"${System.getProperty("java.io.tmpdir")}/graft_${name}_${new java.io.File(d).getName}"
+  /** Train the ANN index on `emb` — every stored-ANN query's v0. */
+  private def buildAnn(emb: DataFrame, dir: String): Long =
+    VersionedVectorIndex.build(emb, dir, NumCentroids, PqSub, PqCodes, KmeansIters)
+  /** The full-corpus ANN store (q89 family) for `d`, once per JVM. */
   private def ensureAnnStore(s: SparkSession, d: String): String = {
-    val dir = annStoreDir(d)
-    VectorIndexStore.buildOnce(Tables.table(s, d, "embeddings"), dir,
-      NumCentroids, PqSub, PqCodes, KmeansIters)
-    dir
+    val dir = storeDir("annstore", d)
+    StoreProvenance.once(dir)(buildAnn(Tables.table(s, d, "embeddings"), dir))
   }
-  /** The base-trained + appended store for `d`, idempotent per JVM. */
+  /** The base-trained + appended store (q90 family) for `d`, once per
+    * JVM. */
   private def ensureAppendedAnnStore(s: SparkSession, d: String): String = {
-    val dir = annBaseStoreDir(d)
-    val emb = Tables.table(s, d, "embeddings")
-    VectorIndexStore.buildAppendedOnce(s, dir,
-      emb.filter(col("vec_id") < AnnAppendSplit),
-      emb.filter(col("vec_id") >= AnnAppendSplit),
-      NumCentroids, PqSub, PqCodes, KmeansIters)
-    dir
+    val dir = storeDir("annstore_base", d)
+    StoreProvenance.once(dir) {
+      val emb = Tables.table(s, d, "embeddings")
+      buildAnn(emb.filter(col("vec_id") < AnnAppendSplit), dir)
+      VersionedVectorIndex.append(s, dir, emb.filter(col("vec_id") >= AnnAppendSplit))
+    }
   }
   /** Q99: PageRank power-iteration rounds (oracle unrolls exactly
     * this many; exact-integer grid, so engine and oracle agree
@@ -155,59 +157,69 @@ object SparkEntry {
       .select(col("vec_id"))
       .filter(col("vec_id") % AnnDeleteMod === AnnDeleteRes &&
         col("vec_id") >= BatchQueries)
-  /** The built-then-tombstoned store for `d`, idempotent per JVM. */
+  /** The built-then-tombstoned store (q98) for `d`, once per JVM. */
   private def ensureDeletedAnnStore(s: SparkSession, d: String): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_annstore_del_${new java.io.File(d).getName}"
-    VectorIndexStore.buildDeletedOnce(s, dir, Tables.table(s, d, "embeddings"),
-      annDeleteIds(s, d), NumCentroids, PqSub, PqCodes, KmeansIters)
-    dir
+    val dir = storeDir("annstore_del", d)
+    StoreProvenance.once(dir) {
+      buildAnn(Tables.table(s, d, "embeddings"), dir)
+      VersionedVectorIndex.delete(s, dir, annDeleteIds(s, d))
+    }
   }
-  /** The built-deleted-COMPACTED store for `d`, idempotent per JVM. */
+  /** The built-deleted-COMPACTED store (q98b) for `d`, once per JVM. */
   private def ensureCompactedAnnStore(s: SparkSession, d: String): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_annstore_cmp_${new java.io.File(d).getName}"
-    VectorIndexStore.buildCompactedOnce(s, dir, Tables.table(s, d, "embeddings"),
-      annDeleteIds(s, d), NumCentroids, PqSub, PqCodes, KmeansIters)
-    dir
+    val dir = storeDir("annstore_cmp", d)
+    StoreProvenance.once(dir) {
+      buildAnn(Tables.table(s, d, "embeddings"), dir)
+      VersionedVectorIndex.delete(s, dir, annDeleteIds(s, d))
+      VersionedVectorIndex.compact(s, dir)
+    }
   }
-  /** The manifest-VERSIONED store for `d` after its full q107
-    * lifecycle (v0 build-on-base, v1 append, v2 delete, v3 compact),
-    * idempotent per JVM. Every version stays readable — the time-travel
-    * queries pin v1; the latest-serve query reads v3.
+  /** The q107 lifecycle in `dir`: v0 build-on-base, v1 append, v2
+    * delete, v3 compact. */
+  private def annLifecycle(s: SparkSession, d: String, dir: String): Unit = {
+    val emb = Tables.table(s, d, "embeddings")
+    buildAnn(emb.filter(col("vec_id") < AnnAppendSplit), dir)
+    VersionedVectorIndex.append(s, dir, emb.filter(col("vec_id") >= AnnAppendSplit))
+    VersionedVectorIndex.delete(s, dir, annDeleteIds(s, d))
+    VersionedVectorIndex.compact(s, dir)
+  }
+  /** The versioned store for `d` after its full q107 lifecycle, once
+    * per JVM. Every version stays readable — the time-travel queries
+    * pin v1; the latest-serve query reads v3.
     */
   private def ensureVersionedAnnStore(s: SparkSession, d: String): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_annstore_ver_${new java.io.File(d).getName}"
-    val emb = Tables.table(s, d, "embeddings")
-    graft.sources.VersionedVectorIndex.lifecycleOnce(s, dir,
-      emb.filter(col("vec_id") < AnnAppendSplit),
-      emb.filter(col("vec_id") >= AnnAppendSplit),
-      annDeleteIds(s, d), NumCentroids, PqSub, PqCodes, KmeansIters)
-    dir
+    val dir = storeDir("annstore_ver", d)
+    StoreProvenance.once(dir)(annLifecycle(s, d, dir))
   }
   /** The versioned store taken one step further for `d`: the q107
     * lifecycle plus a v4 REINDEX (full retrain from the store's own
-    * live vectors), idempotent per JVM — the q108b serving state.
+    * live vectors) and a v5 RESTORE back to v3 (the "reindex shipped
+    * bad state, roll it back" drill: v4 stays inspectable, v5 serves
+    * v3's exact files), once per JVM — the q108b/q107d serving state.
     */
   private def ensureReindexedAnnStore(s: SparkSession, d: String): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_annstore_reidx_${new java.io.File(d).getName}"
-    val emb = Tables.table(s, d, "embeddings")
-    graft.sources.VersionedVectorIndex.lifecycleReindexedOnce(s, dir,
-      emb.filter(col("vec_id") < AnnAppendSplit),
-      emb.filter(col("vec_id") >= AnnAppendSplit),
-      annDeleteIds(s, d), NumCentroids, PqSub, PqCodes, KmeansIters)
-    dir
+    val dir = storeDir("annstore_reidx", d)
+    StoreProvenance.once(dir) {
+      annLifecycle(s, d, dir)
+      VersionedVectorIndex.reindex(s, dir)
+      VersionedVectorIndex.restore(s, dir, 3L)
+    }
   }
-  /** The manifest-VERSIONED lexical index for `d` after its full q109
-    * lifecycle (v0 build-on-base, v1 append, v2 delete, v3 compact),
-    * idempotent per JVM — stats move in the same commit as postings.
+  /** The q109 lifecycle in `dir`: v0 build-on-base, v1 append, v2
+    * delete, v3 compact — stats move in the same commit as postings. */
+  private def textLifecycle(s: SparkSession, d: String, dir: String): Unit = {
+    val docs = Tables.table(s, d, "documents")
+    buildText(docs.filter(col("doc_id") < TextAppendSplit), dir)
+    VersionedTextIndex.append(s, dir, docs.filter(col("doc_id") >= TextAppendSplit))
+    VersionedTextIndex.delete(s, dir, textDeleteIds(s, d))
+    VersionedTextIndex.compact(s, dir)
+  }
+  /** The versioned lexical index for `d` after its full q109 lifecycle,
+    * once per JVM.
     */
   private def ensureVersionedTextIndex(s: SparkSession, d: String): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_textindex_ver_${new java.io.File(d).getName}"
-    val docs = Tables.table(s, d, "documents")
-    graft.sources.VersionedTextIndex.lifecycleOnce(s, dir,
-      docs.filter(col("doc_id") < TextAppendSplit),
-      docs.filter(col("doc_id") >= TextAppendSplit),
-      textDeleteIds(s, d), TextIndexBuckets)
-    dir
+    val dir = storeDir("textindex_ver", d)
+    StoreProvenance.once(dir)(textLifecycle(s, d, dir))
   }
   /** Q101: tombstone-deleted documents of the lexical index — residue
     * `TextDeleteRes` mod `TextDeleteMod` (distinct from the ANN
@@ -230,16 +242,15 @@ object SparkEntry {
       .filter(col("doc_id") % TextUpsertMod === TextUpsertRes)
       .withColumn("text", expr(s"concat(text, '$TextUpsertSuffix')"))
   /** The versioned lexical index taken one step further for `d`: the
-    * q109 lifecycle plus a v4 atomic UPSERT, idempotent per JVM.
+    * q109 lifecycle plus a v4 atomic UPSERT (replacements for live docs
+    * AND revivals of deleted ones, one commit), once per JVM.
     */
   private def ensureUpsertedTextIndex(s: SparkSession, d: String): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_textindex_ups_${new java.io.File(d).getName}"
-    val docs = Tables.table(s, d, "documents")
-    graft.sources.VersionedTextIndex.lifecycleUpsertedOnce(s, dir,
-      docs.filter(col("doc_id") < TextAppendSplit),
-      docs.filter(col("doc_id") >= TextAppendSplit),
-      textDeleteIds(s, d), textPatchDocs(s, d), TextIndexBuckets)
-    dir
+    val dir = storeDir("textindex_ups", d)
+    StoreProvenance.once(dir) {
+      textLifecycle(s, d, dir)
+      VersionedTextIndex.upsert(s, dir, textPatchDocs(s, d))
+    }
   }
   /** Q111d: upserted (re-embedded) vector ids — residue `AnnUpsertRes`
     * mod `AnnUpsertMod` among APPENDED ids only (vec_id ≥ the append
@@ -278,7 +289,7 @@ object SparkEntry {
     */
   private val BloomProbeIds = Seq(11L, 97L, 203L, 404L, 555L, 606L, 707L, 808L, 909L, 990L)
   private def ensureSkipStore(s: SparkSession, d: String): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_skipstore_${new java.io.File(d).getName}"
+    val dir = storeDir("skipstore", d)
     graft.sources.SkippingStore.writeOnce(skipEvents(s, d),
       dir, Seq("user_id", "ts_us"), SkipFiles, bloomCols = Seq("event_id"))
     dir
@@ -291,7 +302,7 @@ object SparkEntry {
     * pruning sound but loosened.
     */
   private def ensureAppendedSkipStore(s: SparkSession, d: String): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_skipstore_app_${new java.io.File(d).getName}"
+    val dir = storeDir("skipstore_app", d)
     val ev = skipEvents(s, d)
     graft.sources.SkippingStore.lifecycleAppendedOnce(
       ev.filter(col("event_id") % 4 =!= 0), ev.filter(col("event_id") % 4 === 0),
@@ -302,7 +313,7 @@ object SparkEntry {
     * z-ordered generation again.
     */
   private def ensureOptimizedSkipStore(s: SparkSession, d: String): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_skipstore_opt_${new java.io.File(d).getName}"
+    val dir = storeDir("skipstore_opt", d)
     val ev = skipEvents(s, d)
     graft.sources.SkippingStore.lifecycleOptimizedOnce(
       ev.filter(col("event_id") % 4 =!= 0), ev.filter(col("event_id") % 4 === 0),
@@ -310,48 +321,48 @@ object SparkEntry {
     dir
   }
   /** The versioned ANN store taken one step further for `d`: the q107
-    * lifecycle plus a v4 atomic UPSERT against the stored model,
-    * idempotent per JVM.
+    * lifecycle plus a v4 atomic UPSERT against the stored model (re-
+    * embedded live ids AND revivals of deleted ones, one commit), once
+    * per JVM.
     */
   private def ensureUpsertedAnnStore(s: SparkSession, d: String): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_annstore_ups_${new java.io.File(d).getName}"
-    val emb = Tables.table(s, d, "embeddings")
-    graft.sources.VersionedVectorIndex.lifecycleUpsertedOnce(s, dir,
-      emb.filter(col("vec_id") < AnnAppendSplit),
-      emb.filter(col("vec_id") >= AnnAppendSplit),
-      annDeleteIds(s, d), annPatchVecs(s, d),
-      NumCentroids, PqSub, PqCodes, KmeansIters)
-    dir
+    val dir = storeDir("annstore_ups", d)
+    StoreProvenance.once(dir) {
+      annLifecycle(s, d, dir)
+      VersionedVectorIndex.upsert(s, dir, annPatchVecs(s, d))
+    }
   }
   private def textDeleteIds(s: SparkSession, d: String): DataFrame =
     Tables.table(s, d, "documents").select(col("doc_id"))
       .filter(col("doc_id") % TextDeleteMod === TextDeleteRes)
-  /** The built-then-tombstoned lexical index for `d`, idempotent per JVM. */
+  /** Index `docs` — every stored-text query's v0 (postings and
+    * positions). */
+  private def buildText(docs: DataFrame, dir: String): Long =
+    VersionedTextIndex.build(docs, dir, TextIndexBuckets)
+  /** The built-then-tombstoned lexical index (q101) for `d`, once per
+    * JVM. */
   private def ensureDeletedTextIndex(s: SparkSession, d: String): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_textindex_del_${new java.io.File(d).getName}"
-    graft.sources.TextIndexStore.buildDeletedOnce(s, dir,
-      Tables.table(s, d, "documents"), textDeleteIds(s, d), TextIndexBuckets)
-    dir
+    val dir = storeDir("textindex_del", d)
+    StoreProvenance.once(dir) {
+      buildText(Tables.table(s, d, "documents"), dir)
+      VersionedTextIndex.delete(s, dir, textDeleteIds(s, d))
+    }
   }
-  /** The built-deleted-compacted lexical index for `d`, idempotent per JVM. */
+  /** The built-deleted-compacted lexical index (q101b) for `d`, once
+    * per JVM. */
   private def ensureCompactedTextIndex(s: SparkSession, d: String): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_textindex_cmp_${new java.io.File(d).getName}"
-    graft.sources.TextIndexStore.buildCompactedOnce(s, dir,
-      Tables.table(s, d, "documents"), textDeleteIds(s, d), TextIndexBuckets)
-    dir
+    val dir = storeDir("textindex_cmp", d)
+    StoreProvenance.once(dir) {
+      buildText(Tables.table(s, d, "documents"), dir)
+      VersionedTextIndex.delete(s, dir, textDeleteIds(s, d))
+      VersionedTextIndex.compact(s, dir)
+    }
   }
-  /** The persisted inverted index for `d`, idempotent per JVM. */
+  /** The persisted inverted index (q94/q119/q121 families) for `d`,
+    * once per JVM. */
   private def ensureTextIndex(s: SparkSession, d: String): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_textindex_${new java.io.File(d).getName}"
-    graft.sources.TextIndexStore.buildOnce(Tables.table(s, d, "documents"), dir, TextIndexBuckets)
-    dir
-  }
-  /** [[ensureTextIndex]] plus its positional sidecar (q121 family). */
-  private def ensurePositionalIndex(s: SparkSession, d: String): String = {
-    val dir = ensureTextIndex(s, d)
-    graft.sources.TextIndexStore.buildPositionalOnce(
-      Tables.table(s, d, "documents"), dir, TextIndexBuckets)
-    dir
+    val dir = storeDir("textindex", d)
+    StoreProvenance.once(dir)(buildText(Tables.table(s, d, "documents"), dir))
   }
   /** Q127: the ONE take-down subject id set, shared by both stores. */
   private def erasureIds(df: DataFrame, idCol: String): DataFrame =
@@ -360,28 +371,29 @@ object SparkEntry {
     * guide §2.6: actions are only sequential because the driver calls
     * them sequentially — each build's straggler tail leaves most cores
     * idle, and the stores are independent artifacts under different
-    * object locks). Wall of a multi-store query drops from Σ(builds)
+    * dir locks). Wall of a multi-store query drops from Σ(builds)
     * toward max(builds); results are unchanged because each ensure is
-    * an idempotent, internally-synchronized build of its own dir.
+    * an idempotent build of its own dir, locked per dir.
     */
   private def ensurePar(steps: (() => String)*): Seq[String] =
     graft.sources.ParallelSteps.run(steps: _*)
-  /** Text index (with positional sidecar) after the q127 erasure. */
+  /** Text index after the q127 erasure. */
   private def ensureErasureTextIndex(s: SparkSession, d: String): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_erasure_text_${new java.io.File(d).getName}"
-    val docs = Tables.table(s, d, "documents")
-    graft.sources.TextIndexStore.buildDeletedOnce(s, dir, docs,
-      erasureIds(docs, "doc_id"), TextIndexBuckets)
-    graft.sources.TextIndexStore.buildPositionalOnce(docs, dir, TextIndexBuckets)
-    dir
+    val dir = storeDir("erasure_text", d)
+    StoreProvenance.once(dir) {
+      val docs = Tables.table(s, d, "documents")
+      buildText(docs, dir)
+      VersionedTextIndex.delete(s, dir, erasureIds(docs, "doc_id"))
+    }
   }
   /** Vector store after the SAME q127 erasure. */
   private def ensureErasureAnnStore(s: SparkSession, d: String): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_erasure_ann_${new java.io.File(d).getName}"
-    val emb = Tables.table(s, d, "embeddings")
-    VectorIndexStore.buildDeletedOnce(s, dir, emb,
-      erasureIds(emb, "vec_id"), NumCentroids, PqSub, PqCodes, KmeansIters)
-    dir
+    val dir = storeDir("erasure_ann", d)
+    StoreProvenance.once(dir) {
+      val emb = Tables.table(s, d, "embeddings")
+      buildAnn(emb, dir)
+      VersionedVectorIndex.delete(s, dir, erasureIds(emb, "vec_id"))
+    }
   }
   /** Q140 family: the events fact-store DML lifecycle (memoized per
     * SF; the terminal-version guard rebuilds a half-built store). */
@@ -396,7 +408,7 @@ object SparkEntry {
       .withColumn("event_type",
         org.apache.spark.sql.functions.lit("corrected"))
   private def ensureFactStore(s: SparkSession, d: String): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_factstore_${new java.io.File(d).getName}"
+    val dir = storeDir("factstore", d)
     graft.sources.FactStore.lifecycleOnce(s, dir, finalVersion = 4L) {
       graft.sources.FactStore.build(factEvents(s, d), dir, "event_id",
         Seq("user_id", "ts_us"), FactFiles, Seq("user_id", "ts_us", "event_id"))
@@ -413,7 +425,7 @@ object SparkEntry {
     * contract), pruning stats unaffected (indexed columns are in both
     * generations). */
   private def ensureEvolvedFactStore(s: SparkSession, d: String): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_factstore_evo_${new java.io.File(d).getName}"
+    val dir = storeDir("factstore_evo", d)
     graft.sources.FactStore.lifecycleOnce(s, dir, finalVersion = 2L) {
       val ev = factEvents(s, d)
       graft.sources.FactStore.build(ev.where(col("event_id") % 2 === 0),
@@ -432,7 +444,7 @@ object SparkEntry {
     * migrating the narrow generation to wide files. Reads serve BIGINT
     * from v2 on; v1 time-travels with its own narrow type. */
   private def ensureWidenedFactStore(s: SparkSession, d: String): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_factstore_wd_${new java.io.File(d).getName}"
+    val dir = storeDir("factstore_wd", d)
     graft.sources.FactStore.lifecycleOnce(s, dir, finalVersion = 4L) {
       val ev = factEvents(s, d)
       graft.sources.FactStore.build(
@@ -491,7 +503,7 @@ object SparkEntry {
     * it once; the timed/verified query reads the resulting lake. */
   private def ensureSqlUpdatedFactStore(s: SparkSession, d: String): String = {
     val sf = new java.io.File(d).getName.replace('.', '_')
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_factstore_us_${new java.io.File(d).getName}"
+    val dir = storeDir("factstore_us", d)
     graft.sources.FactStore.lifecycleOnce(s, dir, finalVersion = 2L) {
       graft.sources.FactStore.build(factEvents(s, d), dir, "event_id",
         Seq("user_id", "ts_us"), FactFiles, Seq("user_id", "ts_us", "event_id"))
@@ -545,7 +557,7 @@ object SparkEntry {
     * the round-12 verdict's missing #5. */
   private def ensureFullMergedFactStore(s: SparkSession, d: String): String = {
     val sf = new java.io.File(d).getName.replace('.', '_')
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_factstore_mf_${new java.io.File(d).getName}"
+    val dir = storeDir("factstore_mf", d)
     graft.sources.FactStore.lifecycleOnce(s, dir, finalVersion = 3L) {
       graft.sources.FactStore.build(factEvents(s, d), dir, "event_id",
         Seq("user_id", "ts_us"), FactFiles, Seq("user_id", "ts_us", "event_id"))
@@ -583,8 +595,8 @@ object SparkEntry {
     * the plan; this query pins the RESULTS against the oracle). */
   private def ensureStorageJoinTables(s: SparkSession, d: String): (String, String) = {
     val sf = new java.io.File(d).getName.replace('.', '_')
-    val dirA = s"${System.getProperty("java.io.tmpdir")}/graft_factstore_sja_${new java.io.File(d).getName}"
-    val dirB = s"${System.getProperty("java.io.tmpdir")}/graft_factstore_sjb_${new java.io.File(d).getName}"
+    val dirA = storeDir("factstore_sja", d)
+    val dirB = storeDir("factstore_sjb", d)
     graft.sources.FactStore.lifecycleOnce(s, dirA, finalVersion = 1L) {
       graft.sources.FactStore.build(factEvents(s, d), dirA, "event_id",
         Seq("user_id", "ts_us"), FactFiles, Seq("user_id", "ts_us", "event_id"))
@@ -609,7 +621,7 @@ object SparkEntry {
     * time-travel with their own schema; the change feed stays silent
     * on v1→2 and v2→3. */
   private def ensureRenamedFactStore(s: SparkSession, d: String): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_factstore_cm_${new java.io.File(d).getName}"
+    val dir = storeDir("factstore_cm", d)
     graft.sources.FactStore.lifecycleOnce(s, dir, finalVersion = 4L) {
       graft.sources.FactStore.build(factEvents(s, d), dir, "event_id",
         Seq("user_id", "ts_us"), FactFiles, Seq("user_id", "ts_us", "event_id"))
@@ -630,7 +642,7 @@ object SparkEntry {
     * on ts_us prune only after migration (sound keep-all before);
     * results are invariant throughout. */
   private def ensureReclusteredFactStore(s: SparkSession, d: String): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_factstore_rc_${new java.io.File(d).getName}"
+    val dir = storeDir("factstore_rc", d)
     graft.sources.FactStore.lifecycleOnce(s, dir, finalVersion = 3L) {
       graft.sources.FactStore.build(factEvents(s, d), dir, "event_id",
         Seq("user_id"), FactFiles, Seq("user_id"))
@@ -664,7 +676,7 @@ object SparkEntry {
   /** Q140k: v1 build, v2 one conditional MERGE exercising all three
     * clause kinds (first-match precedence) in ONE atomic commit. */
   private def ensureMergedFactStore(s: SparkSession, d: String): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_factstore_mg_${new java.io.File(d).getName}"
+    val dir = storeDir("factstore_mg", d)
     graft.sources.FactStore.lifecycleOnce(s, dir, finalVersion = 2L) {
       graft.sources.FactStore.build(factEvents(s, d), dir, "event_id",
         Seq("user_id", "ts_us"), FactFiles, Seq("user_id", "ts_us", "event_id"))
@@ -679,7 +691,7 @@ object SparkEntry {
     * one FactStore implementation. The merge source excludes the
     * deleted users so the oracle composes the two DMLs cleanly. */
   private def ensureSqlDmlFactStore(s: SparkSession, d: String): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_factstore_sql_${new java.io.File(d).getName}"
+    val dir = storeDir("factstore_sql", d)
     graft.sources.FactStore.lifecycleOnce(s, dir, finalVersion = 4L) {
       factEvents(s, d).createOrReplaceTempView("graft_dml_ev")
       factMergeSource(factEvents(s, d)
@@ -703,7 +715,7 @@ object SparkEntry {
     * missing the extra rows would also fail the oracle), v3 a
     * satisfying append that lands. */
   private def ensureConstrainedFactStore(s: SparkSession, d: String): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_factstore_ck_${new java.io.File(d).getName}"
+    val dir = storeDir("factstore_ck", d)
     graft.sources.FactStore.lifecycleOnce(s, dir, finalVersion = 3L) {
       val ev = factEvents(s, d)
       graft.sources.FactStore.build(ev, dir, "event_id",
@@ -734,7 +746,7 @@ object SparkEntry {
   private def ensureClonedFactStore(s: SparkSession, d: String): String = {
     val srcDir = ensureFactStore(s, d)
     val want = graft.sources.ManifestLog.commitTimeMs(s, srcDir, 4L).toString
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_factstore_cl_${new java.io.File(d).getName}"
+    val dir = storeDir("factstore_cl", d)
     val ok = try {
       graft.sources.ManifestLog.currentVersion(s, dir) == 5L &&
         graft.sources.ManifestLog.snapshot(s, dir, 4L).meta
@@ -758,7 +770,7 @@ object SparkEntry {
     * residue) — the takedown must land on the source of truth, not
     * just the derived indexes. */
   private def ensureErasureFactStore(s: SparkSession, d: String): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_erasure_raw_${new java.io.File(d).getName}"
+    val dir = storeDir("erasure_raw", d)
     graft.sources.FactStore.lifecycleOnce(s, dir, finalVersion = 2L) {
       val docs = Tables.table(s, d, "documents")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
@@ -775,11 +787,21 @@ object SparkEntry {
     Similarity.withEmb(Tables.table(s, d, "embeddings"))
       .filter(col("vec_id") < BatchQueries)
       .select(col("vec_id").as("qid"), col("emb"))
+  /** IVF-PQ ADC search of the query batch against ONE resolved
+    * snapshot of the ANN store at `dir` (Latest unless pinned): the
+    * live codes of the vec_id ≥ BatchQueries corpus, nSub from the
+    * snapshot's recorded parameters. */
+  private def annSearch(s: SparkSession, d: String, dir: String,
+                        version: Long = VersionedVectorIndex.Latest): DataFrame = {
+    val a = VersionedVectorIndex.serving(s, dir, version)
+    Similarity.ivfPqSearchFrames(annQueryBatch(s, d), a.centroids, a.codebooks,
+      a.liveCodes.filter(col("vec_id") >= BatchQueries), a.nSub, BatchTopK, IvfPqProbes)
+  }
   /** The stored code table summarized for the oracle: one row per
     * vector, codes joined to a CSV (cell id + codes pin the whole
     * artifact). */
   private def codesSummary(s: SparkSession, dir: String): DataFrame =
-    VectorIndexStore.codes(s, dir)
+    VersionedVectorIndex.codes(s, dir)
       .select(col("vec_id"), col("cid"),
         expr("array_join(transform(codes, c -> CAST(c AS STRING)), ',')").as("codes_csv"))
       .orderBy("vec_id")
@@ -1732,7 +1754,7 @@ object SparkEntry {
     "q01b_delta_pruned" -> ((s, d) => {
       // Round-trip through the time-partitioned layout: write once per
       // SF dir, then answer the same delta scan with partition pruning.
-      val out = s"${System.getProperty("java.io.tmpdir")}/graft_evstore_${new java.io.File(d).getName}"
+      val out = storeDir("evstore", d)
       EventLogStore.writePartitioned(Tables.events(s, d), out, DeltaBucketUs)
       EventLogStore.deltaEvents(s, out, DeltaLastKnownUs, DeltaServerTUs, DeltaBucketUs)
     }),
@@ -1829,8 +1851,7 @@ object SparkEntry {
         () => ensureErasureFactStore(s, d))
       Compliance.erasureAudit(s, text,
         ann, Bm25Terms, PhraseTerms, RrfK,
-        annQueryBatch(s, d), PqSub, BatchTopK, IvfPqProbes,
-        BatchQueries.toLong, TextIndexBuckets,
+        annQueryBatch(s, d), BatchTopK, IvfPqProbes, BatchQueries.toLong,
         raw, ErasureMod, ErasureRes)
     }),
     "q128_fuzzy_match" -> ((s, d) =>
@@ -2229,7 +2250,7 @@ object SparkEntry {
       // The q49 scorer deployed: model persisted from the base corpus
       // (doc_id < split) once, the arriving batch (the rest) scored
       // against the store with OOV backoff — no corpus rescan.
-      val dir = s"${System.getProperty("java.io.tmpdir")}/graft_lmstore_${new java.io.File(d).getName}"
+      val dir = storeDir("lmstore", d)
       val docs = Tables.table(s, d, "documents")
       graft.sources.LmStore.buildOnce(
         docs.filter(col("doc_id") < TextAppendSplit), dir, TextIndexBuckets)
@@ -2239,7 +2260,7 @@ object SparkEntry {
       // Log-structured maintenance, append direction: the new batch's
       // counts land as a positive segment; serving nets segments, so
       // scores equal one model over the union.
-      val dir = s"${System.getProperty("java.io.tmpdir")}/graft_lmstore_app_${new java.io.File(d).getName}"
+      val dir = storeDir("lmstore_app", d)
       val docs = Tables.table(s, d, "documents")
       graft.sources.LmStore.buildAppendedOnce(s, dir,
         docs.filter(col("doc_id") < LmBaseSplit),
@@ -2251,7 +2272,7 @@ object SparkEntry {
       // Delete direction: an aggregated store has no per-doc rows to
       // tombstone — the deleted docs' counts enter as a NEGATIVE
       // segment and the serving net equals a live-corpus model.
-      val dir = s"${System.getProperty("java.io.tmpdir")}/graft_lmstore_del_${new java.io.File(d).getName}"
+      val dir = storeDir("lmstore_del", d)
       val docs = Tables.table(s, d, "documents")
       graft.sources.LmStore.buildDeletedOnce(s, dir,
         docs.filter(col("doc_id") < TextAppendSplit),
@@ -2262,7 +2283,7 @@ object SparkEntry {
     "q104c_compacted_lm" -> ((s, d) => {
       // Compaction folds the segment stack to one net row per word
       // (zero nets dropped) and must not change a single score.
-      val dir = s"${System.getProperty("java.io.tmpdir")}/graft_lmstore_cmp_${new java.io.File(d).getName}"
+      val dir = storeDir("lmstore_cmp", d)
       val docs = Tables.table(s, d, "documents")
       graft.sources.LmStore.buildCompactedOnce(s, dir,
         docs.filter(col("doc_id") < TextAppendSplit),
@@ -2385,51 +2406,36 @@ object SparkEntry {
       codesSummary(s, ensureAnnStore(s, d))),
     "q89b_stored_ivf_search" -> ((s, d) =>
       Similarity.ivfSearchFrames(Tables.table(s, d, "embeddings"),
-        VectorIndexStore.centroids(s, ensureAnnStore(s, d)), BatchQueries, BatchTopK)),
-    "q89c_stored_adc_search" -> ((s, d) => {
-      val dir = ensureAnnStore(s, d)
-      Similarity.ivfPqSearchFrames(annQueryBatch(s, d),
-        VectorIndexStore.centroids(s, dir), VectorIndexStore.codebooks(s, dir),
-        VectorIndexStore.codes(s, dir).filter(col("vec_id") >= BatchQueries),
-        PqSub, BatchTopK, IvfPqProbes)
-    }),
+        VersionedVectorIndex.centroids(s, ensureAnnStore(s, d)), BatchQueries, BatchTopK)),
+    "q89c_stored_adc_search" -> ((s, d) => annSearch(s, d, ensureAnnStore(s, d))),
     "q89d_stored_rerank" -> ((s, d) => {
-      val dir = ensureAnnStore(s, d)
-      Similarity.ivfPqRerankFrames(annQueryBatch(s, d),
-        VectorIndexStore.centroids(s, dir), VectorIndexStore.codebooks(s, dir),
-        VectorIndexStore.codes(s, dir).filter(col("vec_id") >= BatchQueries),
+      val a = VersionedVectorIndex.serving(s, ensureAnnStore(s, d))
+      Similarity.ivfPqRerankFrames(annQueryBatch(s, d), a.centroids, a.codebooks,
+        a.liveCodes.filter(col("vec_id") >= BatchQueries),
         Similarity.withEmb(Tables.table(s, d, "embeddings")),
-        PqSub, PqShortlist, BatchTopK, IvfPqProbes)
+        a.nSub, PqShortlist, BatchTopK, IvfPqProbes)
     }),
     "q122_filtered_ann" -> ((s, d) => {
       // Metadata-filtered vector search (the production "filtered
       // ANN" surface): only label == FilterLabel vectors may rank;
       // the filter pre-joins the code table so disallowed vectors
       // never reach the ADC fold.
-      val dir = ensureAnnStore(s, d)
+      val a = VersionedVectorIndex.serving(s, ensureAnnStore(s, d))
       val allowed = Tables.table(s, d, "embeddings")
         .filter(col("label") === FilterLabel && col("vec_id") >= BatchQueries)
         .select("vec_id")
-      Similarity.ivfPqFilteredSearch(annQueryBatch(s, d),
-        VectorIndexStore.centroids(s, dir), VectorIndexStore.codebooks(s, dir),
-        VectorIndexStore.codes(s, dir).filter(col("vec_id") >= BatchQueries),
-        allowed, PqSub, BatchTopK, IvfPqProbes)
+      Similarity.ivfPqFilteredSearch(annQueryBatch(s, d), a.centroids, a.codebooks,
+        a.liveCodes.filter(col("vec_id") >= BatchQueries),
+        allowed, a.nSub, BatchTopK, IvfPqProbes)
     }),
     "q90_index_append" -> ((s, d) =>
       codesSummary(s, ensureAppendedAnnStore(s, d))),
-    "q90b_appended_search" -> ((s, d) => {
-      val dir = ensureAppendedAnnStore(s, d)
-      Similarity.ivfPqSearchFrames(annQueryBatch(s, d),
-        VectorIndexStore.centroids(s, dir), VectorIndexStore.codebooks(s, dir),
-        VectorIndexStore.codes(s, dir).filter(col("vec_id") >= BatchQueries),
-        PqSub, BatchTopK, IvfPqProbes)
-    }),
+    "q90b_appended_search" -> ((s, d) => annSearch(s, d, ensureAppendedAnnStore(s, d))),
     "q90c_index_stats" -> ((s, d) => {
       // Maintenance monitoring: per-cell occupancy of the appended
       // store, split base vs appended — the inverted-list skew signal
       // that tells an operator when append drift warrants a retrain.
-      val dir = ensureAppendedAnnStore(s, d)
-      VectorIndexStore.codes(s, dir)
+      VersionedVectorIndex.codes(s, ensureAppendedAnnStore(s, d))
         .groupBy("cid")
         .agg(
           org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1))
@@ -2452,50 +2458,48 @@ object SparkEntry {
     "q93_web_funnel" -> ((s, d) =>
       Html.webFunnel(Tables.table(s, d, "documents"), WebMinTok, WebMaxTok, WebHostCap)),
     "q94_stored_bm25" -> ((s, d) =>
-      TextAnalysis.bm25Stored(s, ensureTextIndex(s, d), Bm25Terms, Bm25K, TextIndexBuckets)),
+      VersionedTextIndex.bm25(s, ensureTextIndex(s, d), Bm25Terms, Bm25K)),
     "q119_sparse_retrieval" -> ((s, d) =>
       // Learned-sparse serving (SPLADE shape): Σ w_t · tf over the
       // stored postings — no corpus model, exact-integer ranking,
       // query-bucket file pruning; the third retrieval scorer next to
       // BM25 and the dense leg.
       TextAnalysis.sparseDotStored(s, ensureTextIndex(s, d),
-        SparseQueryWeights, Bm25K, TextIndexBuckets)),
+        SparseQueryWeights, Bm25K)),
     "q121_phrase_search" -> ((s, d) =>
-      // Exact phrase query from the positional sidecar: consecutive-
+      // Exact phrase query from the stored positions: consecutive-
       // offset intersection over bucket-pruned per-term legs; the
       // corpus text is never read at query time.
-      TextAnalysis.phraseSearchStored(s, ensurePositionalIndex(s, d),
-        PhraseTerms, Bm25K, TextIndexBuckets)),
+      TextAnalysis.phraseSearchStored(s, ensureTextIndex(s, d),
+        PhraseTerms, Bm25K)),
     "q121b_proximity_search" -> ((s, d) =>
-      // NEAR/slop query from the same sidecar: nearest co-occurrence
+      // NEAR/slop query from the same positions: nearest co-occurrence
       // of two terms within ProximityWindow tokens, unordered.
-      TextAnalysis.proximitySearchStored(s, ensurePositionalIndex(s, d),
-        ProximityTerms._1, ProximityTerms._2, ProximityWindow, Bm25K,
-        TextIndexBuckets)),
+      TextAnalysis.proximitySearchStored(s, ensureTextIndex(s, d),
+        ProximityTerms._1, ProximityTerms._2, ProximityWindow, Bm25K)),
     "q101_deleted_bm25" -> ((s, d) =>
       // Lexical takedown serving: ~1/9 of the corpus tombstoned (no
       // posting file rewritten, stats retreated by exact counts);
       // scores must equal a from-scratch index over the live corpus.
-      TextAnalysis.bm25StoredLive(s, ensureDeletedTextIndex(s, d),
-        Bm25Terms, Bm25K, TextIndexBuckets)),
+      VersionedTextIndex.bm25(s, ensureDeletedTextIndex(s, d), Bm25Terms, Bm25K)),
     "q101b_compacted_bm25" -> ((s, d) =>
       // After physical postings compaction the plain store must answer
       // exactly what the tombstone view answered (same oracle, twice).
-      TextAnalysis.bm25Stored(s, ensureCompactedTextIndex(s, d),
-        Bm25Terms, Bm25K, TextIndexBuckets)),
+      VersionedTextIndex.bm25(s, ensureCompactedTextIndex(s, d), Bm25Terms, Bm25K)),
     "q97_batch_bm25" -> ((s, d) =>
       TextAnalysis.bm25BatchStored(s, ensureTextIndex(s, d),
-        BatchBm25Queries, BatchBm25K, TextIndexBuckets)),
+        BatchBm25Queries, BatchBm25K)),
     "q96_appended_bm25" -> ((s, d) => {
       // Lexical ingest: build the postings on the base corpus, admit
       // the rest via append, then serve — scores must equal a
       // from-scratch index over everything (= the q86 oracle).
-      val dir = s"${System.getProperty("java.io.tmpdir")}/graft_textindex_app_${new java.io.File(d).getName}"
-      val docs = Tables.table(s, d, "documents")
-      graft.sources.TextIndexStore.buildAppendedOnce(s, dir,
-        docs.filter(col("doc_id") < TextAppendSplit),
-        docs.filter(col("doc_id") >= TextAppendSplit), TextIndexBuckets)
-      TextAnalysis.bm25Stored(s, dir, Bm25Terms, Bm25K, TextIndexBuckets)
+      val dir = storeDir("textindex_app", d)
+      StoreProvenance.once(dir) {
+        val docs = Tables.table(s, d, "documents")
+        buildText(docs.filter(col("doc_id") < TextAppendSplit), dir)
+        VersionedTextIndex.append(s, dir, docs.filter(col("doc_id") >= TextAppendSplit))
+      }
+      VersionedTextIndex.bm25(s, dir, Bm25Terms, Bm25K)
     }),
     "q100_cluster_split" -> ((s, d) =>
       Pipeline.clusterSafeSplit(Tables.table(s, d, "documents"), NearDupThreshold, SplitSalt)),
@@ -2523,28 +2527,19 @@ object SparkEntry {
       // Takedown serving: the stored index with ~1/7 of the corpus
       // tombstoned; search reads the live view (codes anti-join
       // tombstones) — no code file was rewritten.
-      val dir = ensureDeletedAnnStore(s, d)
-      Similarity.ivfPqSearchFrames(annQueryBatch(s, d),
-        VectorIndexStore.centroids(s, dir), VectorIndexStore.codebooks(s, dir),
-        VectorIndexStore.liveCodes(s, dir).filter(col("vec_id") >= BatchQueries),
-        PqSub, BatchTopK, IvfPqProbes)
+      annSearch(s, d, ensureDeletedAnnStore(s, d))
     }),
     "q98b_compacted_search" -> ((s, d) => {
       // After physical compaction (dead rows dropped, one file per
       // cell, tombstones cleared) the plain code table must answer
       // exactly what the tombstone-serving view answered (same oracle
       // as q98).
-      val dir = ensureCompactedAnnStore(s, d)
-      Similarity.ivfPqSearchFrames(annQueryBatch(s, d),
-        VectorIndexStore.centroids(s, dir), VectorIndexStore.codebooks(s, dir),
-        VectorIndexStore.codes(s, dir).filter(col("vec_id") >= BatchQueries),
-        PqSub, BatchTopK, IvfPqProbes)
+      annSearch(s, d, ensureCompactedAnnStore(s, d))
     }),
     "q98c_compacted_stats" -> ((s, d) => {
       // Maintenance monitoring: per-cell occupancy AFTER compaction —
       // the tombstoned residue must be physically gone from every cell.
-      val dir = ensureCompactedAnnStore(s, d)
-      VectorIndexStore.codes(s, dir)
+      VersionedVectorIndex.codes(s, ensureCompactedAnnStore(s, d))
         .groupBy("cid")
         .agg(org.apache.spark.sql.functions.count(
           org.apache.spark.sql.functions.lit(1)).as("n_live"))
@@ -2554,30 +2549,20 @@ object SparkEntry {
       // The commit log of the manifest-versioned store after its full
       // lifecycle (build/append/delete/compact) — a metadata-only read:
       // sizes come from the manifests, not from data files.
-      graft.sources.VersionedVectorIndex.history(s, ensureVersionedAnnStore(s, d))),
+      VersionedVectorIndex.history(s, ensureVersionedAnnStore(s, d))),
     "q107b_time_travel_search" -> ((s, d) => {
       // Time travel: serve the index AS OF v1 (post-append, pre-delete)
       // even though a delete (v2) and a compaction (v3) committed since
       // — the pinned manifest's file list is immutable, so the answer
       // is exactly the appended store's (the q90b oracle, verbatim).
-      val dir = ensureVersionedAnnStore(s, d)
-      val V = graft.sources.VersionedVectorIndex
-      Similarity.ivfPqSearchFrames(annQueryBatch(s, d),
-        V.centroids(s, dir, 1L), V.codebooks(s, dir, 1L),
-        V.codes(s, dir, 1L).filter(col("vec_id") >= BatchQueries),
-        PqSub, BatchTopK, IvfPqProbes)
+      annSearch(s, d, ensureVersionedAnnStore(s, d), version = 1L)
     }),
     "q107c_versioned_live_search" -> ((s, d) => {
       // Serving the LATEST committed version (post-compact): base-
       // trained model, deleted residue physically gone — and the
       // compaction never blocked or perturbed a concurrent pinned
       // reader, because it only ADDED files and a manifest.
-      val dir = ensureVersionedAnnStore(s, d)
-      val V = graft.sources.VersionedVectorIndex
-      Similarity.ivfPqSearchFrames(annQueryBatch(s, d),
-        V.centroids(s, dir), V.codebooks(s, dir),
-        V.liveCodes(s, dir).filter(col("vec_id") >= BatchQueries),
-        PqSub, BatchTopK, IvfPqProbes)
+      annSearch(s, d, ensureVersionedAnnStore(s, d))
     }),
     "q108_pruned_rerank" -> ((s, d) => {
       // IVFADC+R with the exact-float tier ALSO file-pruned: the
@@ -2585,14 +2570,14 @@ object SparkEntry {
       // raw-vector segments, so a query touches float files only for
       // its probed cells (vs q89d's full id-keyed vector table scan).
       val dir = ensureVersionedAnnStore(s, d)
-      val V = graft.sources.VersionedVectorIndex
-      Similarity.ivfPqRerankPruned(annQueryBatch(s, d),
-        V.centroids(s, dir), V.codebooks(s, dir),
-        V.liveCodes(s, dir).filter(col("vec_id") >= BatchQueries),
-        V.liveVectors(s, dir)
+      val v = VersionedVectorIndex.currentVersion(s, dir)
+      val a = VersionedVectorIndex.serving(s, dir, v)
+      Similarity.ivfPqRerankPruned(annQueryBatch(s, d), a.centroids, a.codebooks,
+        a.liveCodes.filter(col("vec_id") >= BatchQueries),
+        VersionedVectorIndex.liveVectors(s, dir, v)
           .withColumn("emb", col("embedding").cast("array<double>"))
           .select(col("vec_id"), col("cid"), col("emb")),
-        PqSub, PqShortlist, BatchTopK, IvfPqProbes)
+        a.nSub, PqShortlist, BatchTopK, IvfPqProbes)
     }),
     "q108b_reindexed_search" -> ((s, d) => {
       // Serving the REINDEX version (v4): its model was retrained from
@@ -2601,12 +2586,7 @@ object SparkEntry {
       // later ROLLS BACK to v3 (q107d), so the reindexed state is
       // addressed by its version pin, exactly how a versioned store
       // names a superseded-but-inspectable state.
-      val dir = ensureReindexedAnnStore(s, d)
-      val V = graft.sources.VersionedVectorIndex
-      Similarity.ivfPqSearchFrames(annQueryBatch(s, d),
-        V.centroids(s, dir, 4L), V.codebooks(s, dir, 4L),
-        V.liveCodes(s, dir, 4L).filter(col("vec_id") >= BatchQueries),
-        PqSub, BatchTopK, IvfPqProbes)
+      annSearch(s, d, ensureReindexedAnnStore(s, d), version = 4L)
     }),
     "q107d_restored_search" -> ((s, d) => {
       // The undo button: v5 = restore(v3) — one manifest commit, zero
@@ -2614,30 +2594,25 @@ object SparkEntry {
       // files again while v4 stays inspectable for the post-mortem.
       // Same oracle as q107c: a restore must reproduce its target
       // bit-for-bit.
-      val dir = ensureReindexedAnnStore(s, d)
-      val V = graft.sources.VersionedVectorIndex
-      Similarity.ivfPqSearchFrames(annQueryBatch(s, d),
-        V.centroids(s, dir), V.codebooks(s, dir),
-        V.liveCodes(s, dir).filter(col("vec_id") >= BatchQueries),
-        PqSub, BatchTopK, IvfPqProbes)
+      annSearch(s, d, ensureReindexedAnnStore(s, d))
     }),
     "q109_versioned_bm25" -> ((s, d) =>
       // Latest version of the manifest-versioned lexical index (post
       // append/delete/compact): postings AND the BM25 stats moved in
       // the same atomic commits, so scores equal a from-scratch index
       // over the live corpus (q101's oracle, verbatim).
-      graft.sources.VersionedTextIndex.bm25(s,
+      VersionedTextIndex.bm25(s,
         ensureVersionedTextIndex(s, d), Bm25Terms, Bm25K)),
     "q109b_bm25_time_travel" -> ((s, d) =>
       // Time travel to v1 (post-append, pre-delete): the full-corpus
       // ranking (q86's oracle) keeps serving even though a delete and a
       // compaction committed since — including the OLD stats row, which
       // the delete's stats retreat never touched (immutable segment).
-      graft.sources.VersionedTextIndex.bm25(s,
+      VersionedTextIndex.bm25(s,
         ensureVersionedTextIndex(s, d), Bm25Terms, Bm25K, version = 1L)),
     "q109c_postings_history" -> ((s, d) =>
       // The lexical commit log, from manifests alone.
-      graft.sources.VersionedTextIndex.history(s, ensureVersionedTextIndex(s, d))),
+      VersionedTextIndex.history(s, ensureVersionedTextIndex(s, d))),
     "q110_versioned_hybrid" -> ((s, d) => {
       // Hybrid retrieval with BOTH legs pinned to committed snapshots
       // of the versioned stores (Latest here = each store's post-
@@ -2648,8 +2623,8 @@ object SparkEntry {
       val Seq(textDir, annDir) = ensurePar(
         () => ensureVersionedTextIndex(s, d), () => ensureVersionedAnnStore(s, d))
       Similarity.hybridRrfVersioned(s,
-        textDir, graft.sources.VersionedTextIndex.Latest,
-        annDir, graft.sources.VersionedVectorIndex.Latest,
+        textDir, VersionedTextIndex.Latest,
+        annDir, VersionedVectorIndex.Latest,
         Bm25Terms, Bm25K, RrfK, IvfPqProbes,
         Similarity.withEmb(Tables.table(s, d, "embeddings"))
           .filter(col("vec_id") === 0L).select(col("vec_id").as("qid"), col("emb")),
@@ -2661,31 +2636,26 @@ object SparkEntry {
       // postings, version-scoped tombstones, and stats moved together,
       // so the ranking equals a from-scratch index over the patched
       // live corpus with no delete-then-append window in the lineage.
-      graft.sources.VersionedTextIndex.bm25(s,
+      VersionedTextIndex.bm25(s,
         ensureUpsertedTextIndex(s, d), Bm25Terms, Bm25K)),
     "q111b_upsert_time_travel" -> ((s, d) =>
       // A reader pinned to v3 (pre-upsert compact) is untouched by the
       // upsert — q101's oracle verbatim, served from files the upsert
       // never rewrote.
-      graft.sources.VersionedTextIndex.bm25(s,
+      VersionedTextIndex.bm25(s,
         ensureUpsertedTextIndex(s, d), Bm25Terms, Bm25K, version = 3L)),
     "q111c_upsert_history" -> ((s, d) =>
       // The upserted lexical commit log, from manifests alone — v4
       // shows the carried-forward live postings plus the patch's new
       // generation, and one tombstone per upserted id.
-      graft.sources.VersionedTextIndex.history(s, ensureUpsertedTextIndex(s, d))),
+      VersionedTextIndex.history(s, ensureUpsertedTextIndex(s, d))),
     "q111d_upserted_ann_search" -> ((s, d) => {
       // ANN serving after an atomic vector upsert: mod-5 appended ids
       // were re-embedded (reversed) and re-encoded against the STORED
       // model in one commit — search sees old codes for untouched ids,
       // new codes for upserted ones, revived deleted ids, and never a
       // half-swapped state.
-      val dir = ensureUpsertedAnnStore(s, d)
-      val V = graft.sources.VersionedVectorIndex
-      Similarity.ivfPqSearchFrames(annQueryBatch(s, d),
-        V.centroids(s, dir), V.codebooks(s, dir),
-        V.liveCodes(s, dir).filter(col("vec_id") >= BatchQueries),
-        PqSub, BatchTopK, IvfPqProbes)
+      annSearch(s, d, ensureUpsertedAnnStore(s, d))
     }),
     "q112_asof_join" -> ((s, d) =>
       // Point-in-time join: each click carries the same user's most
@@ -2747,17 +2717,17 @@ object SparkEntry {
       // The change data feed of the v4 upsert: content-based per-doc
       // diff — revived docs surface as inserts, replaced ones as
       // updates, and physical rewrites can never leak in.
-      graft.sources.VersionedTextIndex.changes(s,
+      VersionedTextIndex.changes(s,
         ensureUpsertedTextIndex(s, d), 3L, 4L)),
     "q115b_change_feed_deletes" -> ((s, d) =>
       // The delete commit's feed (v1 → v2): exactly the takedown set.
-      graft.sources.VersionedTextIndex.changes(s,
+      VersionedTextIndex.changes(s,
         ensureUpsertedTextIndex(s, d), 1L, 2L)),
     "q115c_vector_change_feed" -> ((s, d) =>
       // The vector upsert's feed (v3 → v4): revived ids as inserts,
       // re-embedded live ids as updates — (cell, codes) content
       // compared exactly, so the v3 compaction's rewrite emits nothing.
-      graft.sources.VersionedVectorIndex.changes(s,
+      VersionedVectorIndex.changes(s,
         ensureUpsertedAnnStore(s, d), 3L, 4L)),
     "q117_incremental_df" -> ((s, d) => {
       // Materialized-view maintenance off the feed: the v3 df table
@@ -2769,8 +2739,10 @@ object SparkEntry {
         .orderBy("term")
     }),
     "q95_stored_hybrid" -> ((s, d) =>
-      Similarity.hybridRrfStored(s, ensureTextIndex(s, d), ensureAnnStore(s, d),
-        Bm25Terms, Bm25K, RrfK, TextIndexBuckets, PqSub, IvfPqProbes,
+      Similarity.hybridRrfVersioned(s,
+        ensureTextIndex(s, d), VersionedTextIndex.Latest,
+        ensureAnnStore(s, d), VersionedVectorIndex.Latest,
+        Bm25Terms, Bm25K, RrfK, IvfPqProbes,
         Similarity.withEmb(Tables.table(s, d, "embeddings"))
           .filter(col("vec_id") === 0L).select(col("vec_id").as("qid"), col("emb")),
         BatchQueries.toLong)),
@@ -2783,8 +2755,7 @@ object SparkEntry {
       val Seq(textDir, annDir) = ensurePar(
         () => ensureTextIndex(s, d), () => ensureAnnStore(s, d))
       Similarity.hybridRrf3Stored(s, textDir, annDir,
-        Bm25Terms, SparseQueryWeights, Bm25K, RrfK, TextIndexBuckets,
-        PqSub, IvfPqProbes,
+        Bm25Terms, SparseQueryWeights, Bm25K, RrfK, IvfPqProbes,
         Similarity.withEmb(Tables.table(s, d, "embeddings"))
           .filter(col("vec_id") === 0L).select(col("vec_id").as("qid"), col("emb")),
         BatchQueries.toLong)
@@ -2819,7 +2790,7 @@ object SparkEntry {
       // Round-trip through the id-partitioned corpus store: write once
       // per SF dir, then answer an id-range lookup with partition
       // pruning (the q01b pattern for documents).
-      val out = s"${System.getProperty("java.io.tmpdir")}/graft_docstore_${new java.io.File(d).getName}"
+      val out = storeDir("docstore", d)
       DocStore.writeOnce(Tables.table(s, d, "documents"), out, DocSpan)
       DocStore.lookup(s, out, DocLookupLo, DocLookupHi, DocSpan)
     }),

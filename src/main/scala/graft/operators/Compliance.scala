@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   * retrieval stack owes its counsel: ONE take-down id set must
   * disappear from EVERY serving surface — lexical, positional, and
   * dense — without rebuilding any of them. Each store already honors
-  * tombstones in its live view (TextIndexStore.livePostings /
-  * livePositions, VectorIndexStore.liveCodes); the audit here proves
+  * tombstones in its live view (VersionedTextIndex.livePostings /
+  * livePositions, VersionedVectorIndex.liveCodes); the audit here proves
   * the composition: run every surface's query against the tombstoned
   * stores and emit the actual ranked lists, which the oracle must
   * reproduce from the live corpus alone — if any surface leaked an
@@ -40,7 +40,7 @@ object Compliance {
         col("col.sc").as("sc"))
 
   /** Q127 — the post-erasure serving audit: BM25 (stored postings,
-    * live view), exact phrase (positional sidecar, live view), and
+    * live view), exact phrase (stored positions, live view), and
     * IVF-PQ ADC (stored codes, live view) ranked lists after the SAME
     * subject id set was tombstoned in both stores — PLUS the RAW
     * document lake itself ([[graft.sources.FactStore]], `rawDir`): the
@@ -64,26 +64,21 @@ object Compliance {
     */
   def erasureAudit(spark: SparkSession, textDir: String, annDir: String,
                    terms: Seq[String], phrase: Seq[String], kLex: Int,
-                   queries: DataFrame, nSub: Int, kAnn: Int, nProbe: Int,
-                   denseFrom: Long, nBuckets: Int,
+                   queries: DataFrame, kAnn: Int, nProbe: Int, denseFrom: Long,
                    rawDir: String, rawMod: Long, rawRes: Long): DataFrame = {
-    import graft.sources.VectorIndexStore
     val lex = rankedDesc(
-      TextAnalysis.bm25StoredLive(spark, textDir, terms, kLex, nBuckets),
+      graft.sources.VersionedTextIndex.bm25(spark, textDir, terms, kLex),
       "score_micros", "doc_id")
       .select(lit("bm25").as("surface"), lit(0L).as("qid"), col("rnk"),
         col("id"), (col("sc").cast("double") / 1e6).as("score"))
     val phr = rankedDesc(
-      TextAnalysis.phraseSearchStored(spark, textDir, phrase, kLex, nBuckets),
+      TextAnalysis.phraseSearchStored(spark, textDir, phrase, kLex),
       "phrase_tf", "doc_id")
       .select(lit("phrase").as("surface"), lit(0L).as("qid"), col("rnk"),
         col("id"), col("sc").cast("double").as("score"))
-    val den = Similarity.ivfPqSearchFrames(queries,
-        VectorIndexStore.centroids(spark, annDir),
-        VectorIndexStore.codebooks(spark, annDir),
-        VectorIndexStore.liveCodes(spark, annDir)
-          .filter(col("vec_id") >= denseFrom),
-        nSub, kAnn, nProbe)
+    val ann = graft.sources.VersionedVectorIndex.serving(spark, annDir)
+    val den = Similarity.ivfPqSearchFrames(queries, ann.centroids, ann.codebooks,
+        ann.liveCodes.filter(col("vec_id") >= denseFrom), ann.nSub, kAnn, nProbe)
       .select(lit("ann").as("surface"), col("qid"), col("rnk"),
         col("vec_id").as("id"), col("adc").as("score"))
     // Raw-lake leg: live subject rows (expected none) + the live total.

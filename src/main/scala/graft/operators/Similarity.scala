@@ -498,7 +498,7 @@ object Similarity {
 
   /** [[ivfSearchTrained]]'s search half over an EXPLICIT centroid
     * frame — the stored-index entry point: q18i passes the centroids
-    * it just trained; [[graft.sources.VectorIndexStore]] consumers
+    * it just trained; [[graft.sources.VersionedVectorIndex]] consumers
     * pass the parquet-read coarse quantizer, so a trained-once index
     * serves any number of query batches without re-running Lloyd.
     */
@@ -1182,21 +1182,16 @@ object Similarity {
   def hybridRrf3Stored(spark: org.apache.spark.sql.SparkSession,
                        textDir: String, annDir: String, terms: Seq[String],
                        termWeights: Seq[(String, Long)], kLex: Int,
-                       kFuse: Int, nBuckets: Int, nSub: Int, nProbe: Int,
+                       kFuse: Int, nProbe: Int,
                        queryVec: DataFrame, denseFrom: Long): DataFrame = {
     require(kFuse <= 10 && kFuse <= kLex,
       s"kFuse must be within every leg's depth (dense leg fixed at 10), got $kFuse")
-    import graft.sources.VectorIndexStore
     val lex = lexRanksOf(
-      TextAnalysis.bm25Stored(spark, textDir, terms, kLex, nBuckets))
+      graft.sources.VersionedTextIndex.bm25(spark, textDir, terms, kLex))
     val sp = sparseRanksOf(
-      TextAnalysis.sparseDotStored(spark, textDir, termWeights, kLex, nBuckets))
-    val den = ivfPqSearchFrames(queryVec,
-      VectorIndexStore.centroids(spark, annDir),
-      VectorIndexStore.codebooks(spark, annDir),
-      VectorIndexStore.codes(spark, annDir).filter(col("vec_id") >= denseFrom),
-      nSub, 10, nProbe)
-      .select(col("rnk").as("rd"), col("vec_id").as("id"))
+      TextAnalysis.sparseDotStored(spark, textDir, termWeights, kLex))
+    val den = denseRanks(spark, annDir, graft.sources.VersionedVectorIndex.Latest,
+      nProbe, queryVec, denseFrom)
     val contrib = (r: String) =>
       coalesce(expr(s"CAST(floor(1e9 / (60.0 + $r) + 0.5) AS BIGINT)"), lit(0L))
     lex.join(sp, Seq("id"), "full_outer")
@@ -1219,46 +1214,23 @@ object Similarity {
       .select(col("id").as("doc_id"), col("rl"), col("rd"), col("fused_nanos"),
         (col("fused_nanos").cast("double") / 1e9).as("rrf"))
 
-  /** Q95 — hybrid RRF where BOTH legs serve from PERSISTED indexes:
-    * the lexical ranking from the stored postings
-    * ([[TextAnalysis.bm25Stored]] — q94) and the dense ranking from
-    * the stored IVF-PQ index ([[ivfPqSearchFrames]] over the q89
-    * artifacts, query vector 0 vs the vec_id ≥ `denseFrom` corpus),
-    * fused with q87's exact-integer reciprocal-rank rule
-    * (`floor(1e9/(60+r))`, full outer join, fused DESC / doc_id).
-    * This is the retrieval stack's serving configuration: no corpus
-    * text and no corpus floats are scanned at query time — only the
-    * query terms' posting buckets and the probed cells' code files.
-    */
-  def hybridRrfStored(spark: org.apache.spark.sql.SparkSession,
-                      textDir: String, annDir: String, terms: Seq[String],
-                      kLex: Int, kFuse: Int, nBuckets: Int, nSub: Int,
-                      nProbe: Int, queryVec: DataFrame,
-                      denseFrom: Long): DataFrame = {
-    require(kFuse <= 10 && kFuse <= kLex,
-      s"kFuse must be within both legs' depth (dense leg fixed at 10), got $kFuse")
-    import graft.sources.VectorIndexStore
-    val den = ivfPqSearchFrames(queryVec,
-      VectorIndexStore.centroids(spark, annDir),
-      VectorIndexStore.codebooks(spark, annDir),
-      VectorIndexStore.codes(spark, annDir).filter(col("vec_id") >= denseFrom),
-      nSub, 10, nProbe)
-      .select(col("rnk").as("rd"), col("vec_id").as("id"))
-    rrfFuse(
-      lexRanksOf(TextAnalysis.bm25Stored(spark, textDir, terms, kLex, nBuckets)),
-      den, kFuse)
-  }
-
-  /** [[hybridRrfStored]] with BOTH legs pinned to explicit versions of
-    * the MANIFEST-VERSIONED stores — the cross-store consistency the
-    * un-versioned hybrid cannot promise: its two directory reads can
-    * interleave with maintenance and fuse a pre-delete lexical leg
-    * with a post-delete dense leg (or vice versa). Here the caller
-    * names one committed snapshot per store (Latest or pinned), each
-    * leg serves exactly that manifest's files, and the fusion is a
-    * pure function of the two pins — reproducible after any amount of
-    * later maintenance, which is what an A/B experiment or an audit
-    * replay actually needs.
+  /** Q95/q110 — hybrid RRF where BOTH legs serve from PERSISTED
+    * indexes: the lexical ranking from the stored postings
+    * ([[graft.sources.VersionedTextIndex.bm25]] — q94) and the dense
+    * ranking from the stored IVF-PQ index ([[ivfPqSearchFrames]] over
+    * the q89 artifacts, query vector 0 vs the vec_id ≥ `denseFrom`
+    * corpus), fused with q87's exact-integer reciprocal-rank rule
+    * (`floor(1e9/(60+r))`, full outer join, fused DESC / doc_id). No
+    * corpus text and no corpus floats are scanned at query time — only
+    * the query terms' posting buckets and the probed cells' code files.
+    *
+    * The caller names one committed snapshot per store (Latest or
+    * pinned); each leg serves exactly that manifest's files, so two
+    * reads can never interleave with maintenance and fuse a pre-delete
+    * lexical leg with a post-delete dense leg, and the fusion is a pure
+    * function of the two pins — reproducible after any amount of later
+    * maintenance, which is what an A/B experiment or an audit replay
+    * needs.
     */
   def hybridRrfVersioned(spark: org.apache.spark.sql.SparkSession,
                          textDir: String, textVersion: Long,
@@ -1267,26 +1239,24 @@ object Similarity {
                          queryVec: DataFrame, denseFrom: Long): DataFrame = {
     require(kFuse <= 10 && kFuse <= kLex,
       s"kFuse must be within both legs' depth (dense leg fixed at 10), got $kFuse")
-    import graft.sources.{VersionedTextIndex, VersionedVectorIndex}
-    // Resolve Latest to ONE pinned snapshot before touching any
-    // accessor — three independent Latest resolutions could straddle a
-    // concurrent commit and fuse artifacts of two versions, the exact
-    // tear this function exists to rule out. nSub comes from the
-    // resolved snapshot's own recorded parameters: a caller-supplied
-    // value disagreeing with the pinned model would silently mis-slice
-    // the LUT join.
-    val annSnap = VersionedVectorIndex.snapshot(spark, annDir, annVersion)
-    val nSub = annSnap.meta("nSub").toInt
-    val den = ivfPqSearchFrames(queryVec,
-      VersionedVectorIndex.centroids(spark, annDir, annSnap.version),
-      VersionedVectorIndex.codebooks(spark, annDir, annSnap.version),
-      VersionedVectorIndex.liveCodes(spark, annDir, annSnap.version)
-        .filter(col("vec_id") >= denseFrom),
-      nSub, 10, nProbe)
-      .select(col("rnk").as("rd"), col("vec_id").as("id"))
     rrfFuse(
-      lexRanksOf(VersionedTextIndex.bm25(spark, textDir, terms, kLex, textVersion)),
-      den, kFuse)
+      lexRanksOf(graft.sources.VersionedTextIndex.bm25(spark, textDir, terms, kLex,
+        textVersion)),
+      denseRanks(spark, annDir, annVersion, nProbe, queryVec, denseFrom), kFuse)
+  }
+
+  /** The dense leg of the stored hybrids: top-10 ADC ranks (rd, id) of
+    * `queryVec` against ONE resolved snapshot of the vector store —
+    * three independent Latest resolutions could straddle a concurrent
+    * commit and fuse artifacts of two versions.
+    */
+  private def denseRanks(spark: org.apache.spark.sql.SparkSession, annDir: String,
+                         annVersion: Long, nProbe: Int, queryVec: DataFrame,
+                         denseFrom: Long): DataFrame = {
+    val a = graft.sources.VersionedVectorIndex.serving(spark, annDir, annVersion)
+    ivfPqSearchFrames(queryVec, a.centroids, a.codebooks,
+      a.liveCodes.filter(col("vec_id") >= denseFrom), a.nSub, 10, nProbe)
+      .select(col("rnk").as("rd"), col("vec_id").as("id"))
   }
 
   /** Per-dimension corpus means as ONE broadcastable row (`mus`),
@@ -1449,7 +1419,7 @@ object Similarity {
     * pair — the shared candidate generator of [[ivfPqSearch]] and
     * [[ivfPqRerankSearch]], composed from the artifact builders below
     * (train everything in-engine, then score — the per-query-retrain
-    * path; [[graft.sources.VectorIndexStore]] persists the same
+    * path; [[graft.sources.VersionedVectorIndex]] persists the same
     * artifacts for the train-once / serve-many path).
     */
   private def ivfPqScored(emb: DataFrame, nCentroids: Int, nSub: Int, nCodes: Int,
@@ -1474,7 +1444,7 @@ object Similarity {
     * centroids `(cid, cemb)` from [[kmeansTrain]], residual-trained
     * sub-codebooks `(m, cid, cemb)`, and the code table
     * `(vec_id, cid, codes)` covering EVERY input vector. These ARE the
-    * index — [[graft.sources.VectorIndexStore]] writes them to parquet
+    * index — [[graft.sources.VersionedVectorIndex]] writes them to parquet
     * and the `*Frames` searches below consume them from either source,
     * so "index" is a value, not a per-query side effect.
     */
@@ -1636,7 +1606,7 @@ object Similarity {
 
   /** Stored-index IVF-PQ ADC search — [[ivfPqSearch]]'s ranking over
     * EXPLICIT artifact frames (centroids/codebooks/codes, typically
-    * [[graft.sources.VectorIndexStore]] reads): nothing here trains;
+    * [[graft.sources.VersionedVectorIndex]] reads): nothing here trains;
     * the query cost is LUT construction (bounded) plus a scan of the
     * probed cells' code rows. Because the probe set is bounded
     * (≤ nQueries × nProbe cell ids), it is collected and pushed into

@@ -760,20 +760,6 @@ object TextAnalysis {
       .limit(k)
   }
 
-  /** Q94 — BM25 over the PERSISTED inverted index
-    * ([[graft.sources.TextIndexStore]]): the q86 ranking, bit-identical
-    * (same cast points, same 1e-6 contribution grid, same tie order —
-    * the oracle is q86's verbatim), but the query never scans the
-    * corpus text. Cost shape: the postings scan prunes to the query
-    * terms' hash buckets at FILE level (bounded bucket list pushed as
-    * a partition `IN`) with the `term IN` predicate pushed to parquet;
-    * df comes from the pruned read itself (a bounded per-term count);
-    * idf/avgdl fold into one broadcast model row; scoring is map-only
-    * over posting rows (tf and dl are IN the row) and the final
-    * ranking is one exact-integer sum per candidate doc + TakeOrdered.
-    * Exchanges: O(candidate docs) for the per-doc sum — candidates are
-    * the query terms' postings, not the corpus.
-    */
   /** Q97 — MULTI-query BM25 over the stored postings as ONE
     * distributed plan: the production serving shape (a query batch,
     * not a driver loop). All queries' terms prune the postings scan
@@ -784,24 +770,21 @@ object TextAnalysis {
     * is exact integers; ranking runs per query through the bounded
     * top-k Aggregator, so the final exchange is O(queries · k) no
     * matter how many candidates a query touches. Same math as
-    * [[bm25Stored]] per query (q97's oracle stacks one q86 chain per
-    * query); duplicate terms weight after the floor as there.
+    * [[graft.sources.VersionedTextIndex.bm25]] per query (q97's oracle
+    * stacks one q86 chain per query); duplicate terms weight after the
+    * floor as there. Postings and stats come from ONE snapshot.
     */
   def bm25BatchStored(spark: org.apache.spark.sql.SparkSession, dir: String,
-                      queries: Seq[(Long, Seq[String])], k: Int,
-                      nBuckets: Int): DataFrame = {
+                      queries: Seq[(Long, Seq[String])], k: Int): DataFrame = {
     require(k <= 10, "k is capped by the graft_top10 buffer")
     require(queries.nonEmpty && queries.forall(_._2.nonEmpty)
       && queries.flatMap(_._2).forall(_.matches("[a-z0-9]+")),
       s"query terms must be non-empty [a-z0-9]+ tokens, got $queries")
-    import graft.sources.TextIndexStore
-    val allTerms = queries.flatMap(_._2).distinct
-    val buckets = allTerms.map(TextIndexStore.bucketOf(_, nBuckets)).distinct
-    val p = TextIndexStore.postings(spark, dir)
-      .filter(col("t_bucket").isin(buckets.map(Long.box): _*)
-        && col("term").isin(allTerms: _*))
+    val V = graft.sources.VersionedTextIndex
+    val v = V.currentVersion(spark, dir)
+    val p = V.termPostings(spark, dir, queries.flatMap(_._2), v)
     val model = p.groupBy("term").agg(count(lit(1)).as("df"))
-      .crossJoin(broadcast(TextIndexStore.stats(spark, dir)))
+      .crossJoin(broadcast(V.stats(spark, dir, v)))
       .withColumn("idf", expr(
         """ln(1.0 + (CAST(n_docs - df AS DOUBLE) + 0.5)
                     / (CAST(df AS DOUBLE) + 0.5))"""))
@@ -832,11 +815,6 @@ object TextAnalysis {
       .orderBy("qid", "rnk")
   }
 
-  def bm25Stored(spark: org.apache.spark.sql.SparkSession, dir: String,
-                 terms: Seq[String], k: Int, nBuckets: Int): DataFrame =
-    bm25Served(graft.sources.TextIndexStore.postings(spark, dir),
-      graft.sources.TextIndexStore.stats(spark, dir), terms, k, nBuckets)
-
   /** Q119 — learned-sparse (impact-weighted) retrieval over the stored
     * postings: score(doc) = Σ w_t · tf(t, doc) for the query's bounded
     * (term, weight) set — the SPLADE/DeepImpact serving shape, where a
@@ -845,27 +823,21 @@ object TextAnalysis {
     * (no df/idf/avgdl): integer weights × the posting rows' integer tf
     * sum as exact BIGINTs, so the ranking is float-free end to end.
     *
-    * Cost shape: same as [[bm25Stored]] minus the model pass — the
+    * Cost shape: same as stored BM25 minus the model pass — the
     * postings scan file-prunes to the query terms' hash buckets, the
     * weight lookup is a CASE literal (no join), the only exchange is
     * the O(candidate docs) per-doc sum, and ranking is TakeOrdered k.
     */
   def sparseDotStored(spark: org.apache.spark.sql.SparkSession, dir: String,
-                      termWeights: Seq[(String, Long)], k: Int,
-                      nBuckets: Int): DataFrame = {
+                      termWeights: Seq[(String, Long)], k: Int): DataFrame = {
     require(termWeights.nonEmpty &&
       termWeights.forall { case (t, w) => t.matches("[a-z0-9]+") && w > 0 },
       s"query terms must be [a-z0-9]+ with positive weights, got $termWeights")
     require(termWeights.map(_._1).distinct.size == termWeights.size,
       "duplicate query terms: merge their weights upstream")
-    import graft.sources.TextIndexStore
-    val terms = termWeights.map(_._1)
-    val buckets = terms.map(TextIndexStore.bucketOf(_, nBuckets)).distinct
     val wCase = termWeights.map { case (t, w) => s"WHEN '$t' THEN ${w}L" }
       .mkString("CASE term ", " ", " ELSE 0L END")
-    TextIndexStore.postings(spark, dir)
-      .filter(col("t_bucket").isin(buckets.map(Long.box): _*)
-        && col("term").isin(terms: _*))
+    graft.sources.VersionedTextIndex.termPostings(spark, dir, termWeights.map(_._1))
       .withColumn("c", expr(s"($wCase) * tf"))
       .groupBy("doc_id")
       .agg(sum("c").as("score"))
@@ -873,27 +845,18 @@ object TextAnalysis {
       .limit(k)
   }
 
-  /** [[bm25Stored]] over the LIVE view (postings minus tombstoned
-    * docs, stats already retreated at delete time): after a takedown
-    * ([[graft.sources.TextIndexStore.delete]]) scores equal a
-    * from-scratch index over the live corpus — df, idf and avgdl all
-    * follow because df derives from the (live) pruned read and the
-    * stats row was adjusted by the deleted docs' exact counts.
+  /** The q86 ranking over `p`, the query terms' already-pruned
+    * postings, and the one-row `stats` of the same snapshot — the
+    * kernel of [[graft.sources.VersionedTextIndex.bm25]]. The
+    * postings join sees each (term, doc) row once; idf/avgdl fold into
+    * one broadcast model row; scoring is map-only over posting rows
+    * (tf and dl are IN the row) and the ranking is one exact-integer
+    * sum per candidate doc + TakeOrdered.
     */
-  def bm25StoredLive(spark: org.apache.spark.sql.SparkSession, dir: String,
-                     terms: Seq[String], k: Int, nBuckets: Int): DataFrame =
-    bm25Served(graft.sources.TextIndexStore.livePostings(spark, dir),
-      graft.sources.TextIndexStore.stats(spark, dir), terms, k, nBuckets)
-
-  private[graft] def bm25Served(postings: DataFrame, stats: DataFrame,
-                         terms: Seq[String], k: Int, nBuckets: Int): DataFrame = {
+  private[graft] def bm25Served(p: DataFrame, stats: DataFrame,
+                                terms: Seq[String], k: Int): DataFrame = {
     require(terms.nonEmpty && terms.forall(_.matches("[a-z0-9]+")),
       s"query terms must be non-empty [a-z0-9]+ tokens, got $terms")
-    import graft.sources.TextIndexStore
-    val buckets = terms.map(TextIndexStore.bucketOf(_, nBuckets)).distinct
-    val p = postings
-      .filter(col("t_bucket").isin(buckets.map(Long.box): _*)
-        && col("term").isin(terms.distinct: _*))
     // A term listed n times in the query contributes n times in q86's
     // per-position fold — the postings join sees each (term, doc) row
     // once, so the multiplicity becomes a weight. Weighting AFTER the
@@ -926,7 +889,8 @@ object TextAnalysis {
   }
 
   /** Q121 — exact PHRASE search from the stored positional postings
-    * (TextIndexStore's `positions/` sidecar): a document matches when
+    * (the `positions` segments of [[graft.sources.VersionedTextIndex]],
+    * live view): a document matches when
     * the phrase's words occur at consecutive token offsets. The
     * classic positional-intersection plan: leg i reads ONLY term i's
     * bucket-pruned posting rows and normalizes its offsets to
@@ -944,14 +908,10 @@ object TextAnalysis {
     * lambdas. The corpus text is never read.
     */
   def phraseSearchStored(spark: org.apache.spark.sql.SparkSession, dir: String,
-                         phrase: Seq[String], k: Int, nBuckets: Int): DataFrame = {
+                         phrase: Seq[String], k: Int): DataFrame = {
     require(phrase.size >= 2 && phrase.forall(_.matches("[a-z0-9]+")),
       s"phrase must be >= 2 [a-z0-9]+ tokens, got $phrase")
-    import graft.sources.TextIndexStore
-    val buckets = phrase.map(TextIndexStore.bucketOf(_, nBuckets)).distinct
-    val pos = TextIndexStore.livePositions(spark, dir)
-      .filter(col("t_bucket").isin(buckets.map(Long.box): _*)
-        && col("term").isin(phrase.distinct: _*))
+    val pos = graft.sources.VersionedTextIndex.termPositions(spark, dir, phrase)
     val legs = phrase.zipWithIndex.map { case (t, i) =>
       pos.filter(col("term") === t)
         .select(col("doc_id"),
@@ -969,7 +929,7 @@ object TextAnalysis {
       .limit(k)
   }
 
-  /** Q121b — PROXIMITY search from the same positional sidecar: rank
+  /** Q121b — PROXIMITY search from the same positional rows: rank
     * documents where `a` and `b` co-occur within `window` tokens
     * (unordered — the Lucene slop/NEAR operator). Two bucket-pruned
     * legs join on doc_id; per doc the codegen'd lambda pass computes
@@ -980,14 +940,10 @@ object TextAnalysis {
     */
   def proximitySearchStored(spark: org.apache.spark.sql.SparkSession,
                             dir: String, a: String, b: String, window: Int,
-                            k: Int, nBuckets: Int): DataFrame = {
+                            k: Int): DataFrame = {
     require(a != b && Seq(a, b).forall(_.matches("[a-z0-9]+")) && window >= 1,
       s"need two distinct [a-z0-9]+ terms and window >= 1, got ($a, $b, $window)")
-    import graft.sources.TextIndexStore
-    val buckets = Seq(a, b).map(TextIndexStore.bucketOf(_, nBuckets)).distinct
-    val pos = TextIndexStore.livePositions(spark, dir)
-      .filter(col("t_bucket").isin(buckets.map(Long.box): _*)
-        && col("term").isin(a, b))
+    val pos = graft.sources.VersionedTextIndex.termPositions(spark, dir, Seq(a, b))
     val pa = pos.filter(col("term") === a).select(col("doc_id"), col("positions").as("pa"))
     val pb = pos.filter(col("term") === b).select(col("doc_id"), col("positions").as("pb"))
     pa.join(pb, "doc_id")

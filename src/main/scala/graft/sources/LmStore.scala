@@ -20,7 +20,7 @@ import graft.functions.PortableHash.hash48
   *     the per-word NET across segments (appends positive, deletes
   *     negative — see the maintenance doc below). Scoring joins on
   *     `word`, so bucketing is not a per-query pruning device like
-  *     TextIndexStore's (every batch token needs a lookup) — it
+  *     [[VersionedTextIndex]]'s (every batch token needs a lookup) — it
   *     bounds file sizes and keeps the store layout consistent with
   *     the postings convention.
   *   - `stats/` — ONE row (n_total).
@@ -48,7 +48,7 @@ object LmStore {
 
   /** Maintenance is LOG-STRUCTURED (the LSM/compacted-topic shape,
     * deliberately contrasting the tombstone-id sets of
-    * [[TextIndexStore]]/[[VectorIndexStore]]): the stored table is a
+    * [[VersionedTextIndex]]/[[VersionedVectorIndex]]): the stored table is a
     * stack of count SEGMENTS and the serving view ([[vocab]]) sums
     * them per word. [[append]] writes the new batch's counts as a
     * positive segment; [[deleteDocs]] writes the deleted docs' counts
@@ -130,9 +130,11 @@ object LmStore {
   }
 
   /** Fold the segment stack into one net row per word (one file per
-    * bucket; zero-or-negative nets dropped), scratch + rename swap —
-    * the [[VectorIndexStore.compact]] contract, summed instead of
-    * anti-joined. Serving reads are IDENTICAL before and after.
+    * bucket; zero-or-negative nets dropped), scratch + rename swap,
+    * summed instead of anti-joined. Serving reads are IDENTICAL before
+    * and after. The swap is not a transaction: a crash between the
+    * delete and the rename leaves only the scratch dir, which holds the
+    * complete new table (recovery = finish the rename).
     */
   def compact(spark: SparkSession, dir: String): Unit = synchronized {
     import org.apache.hadoop.fs.Path

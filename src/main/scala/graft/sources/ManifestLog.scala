@@ -203,6 +203,23 @@ object ManifestLog {
     out.sorted.toSeq
   }
 
+  /** The manifest entry of a segment just written to `dir/name`: its
+    * parquet files, frozen, and their row count summed from the file
+    * footers — metadata reads on the driver, no Spark job. An EMPTY
+    * frame writes no parquet files, and zero files means zero rows.
+    */
+  def segment(spark: SparkSession, dir: String, kind: String, name: String): Segment = {
+    val segDir = new Path(s"$dir/$name")
+    val files = listParquet(fs(spark, dir), segDir)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val rows = files.map { rel =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(segDir, rel), conf))
+      try r.getRecordCount finally r.close()
+    }.sum
+    Segment(kind, name, files, rows)
+  }
+
   /** Union of the snapshot's `kind` segments, each read by its frozen
     * file list. `partitioned` reads recover the partition column via
     * basePath; files added to a segment dir AFTER the commit are not in

@@ -20,6 +20,30 @@ object StoreProvenance {
     import scala.jdk.CollectionConverters._
     state.asScala.toMap
   }
+
+  private val done = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private val locks = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+
+  /** Run `build` for the index store at `dir` at most once per JVM and
+    * return `dir` — the one memoizer of the text and vector index
+    * stores. A store under a fixed dir is a pure function of its
+    * inputs, so queries against it measure serving, not maintenance.
+    * The lock is per directory: builds of different stores (ensurePar)
+    * run concurrently, while two callers of one dir wait for a single
+    * build. A build that throws is not recorded, so the next caller
+    * retries it.
+    */
+  def once(dir: String)(build: => Unit): String = {
+    locks.computeIfAbsent(dir, _ => new AnyRef).synchronized {
+      if (done.contains(dir)) reused(dir)
+      else {
+        built(dir)
+        build
+        done.add(dir)
+      }
+    }
+    dir
+  }
 }
 
 /** Run independent driver-side steps (store builds, artifact writes)

@@ -95,9 +95,22 @@ class SyncHttpServer(
   // Must be set before the server class initializes its config.
   System.setProperty("sun.net.httpserver.nodelay", "true")
 
+  // The request handlers' pool, kept so [[stop]] can drain and end it;
+  // its threads (the default factory's) are recorded so a stopped
+  // server can prove none is left.
+  private val handlerThreads = new java.util.concurrent.ConcurrentLinkedQueue[Thread]
+  private val handlers = {
+    val threads = Executors.defaultThreadFactory()
+    Executors.newFixedThreadPool(8, r => {
+      val t = threads.newThread(r)
+      handlerThreads.add(t)
+      t
+    })
+  }
+
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
   server.createContext("/", (ex: HttpExchange) => handle(ex))
-  server.setExecutor(Executors.newFixedThreadPool(8))
+  server.setExecutor(handlers)
 
   private val sweeper = Executors.newSingleThreadScheduledExecutor(r => {
     val t = new Thread(r, "graft-sync-sweeper"); t.setDaemon(true); t
@@ -105,14 +118,32 @@ class SyncHttpServer(
 
   def start(): SyncHttpServer = { server.start(); this }
 
-  /** The reference's background ticker (main.go:14-24). */
+  /** The reference's background ticker (main.go:14-24). A failing
+    * sweep is reported and the next tick runs: an exception escaping a
+    * fixed-rate task would silently cancel every later sweep.
+    */
   def startSweeper(periodMs: Long = 60000L): Unit =
-    sweeper.scheduleAtFixedRate(() => sweep(clock()), periodMs, periodMs, TimeUnit.MILLISECONDS)
+    sweeper.scheduleAtFixedRate(() =>
+      try sweep(clock())
+      catch { case e: Exception => System.err.println(s"graft-sync-sweeper: sweep failed: $e") },
+      periodMs, periodMs, TimeUnit.MILLISECONDS)
 
+  /** Stop listening, let the handlers already running finish (they may
+    * still be appending to the spool), end the handler pool, and only
+    * then close the spool. Afterwards no thread of this server is
+    * running, so a JVM that only calls `stop()` can exit.
+    */
   def stop(): Unit = {
-    server.stop(0); sweeper.shutdownNow()
+    server.stop(0)
+    sweeper.shutdownNow()
+    handlers.shutdown()
+    if (!handlers.awaitTermination(30, TimeUnit.SECONDS)) handlers.shutdownNow()
+    handlerThreads.forEach(_.join(1000L))
     spoolWriter.foreach(w => w.synchronized(w.close()))
   }
+
+  /** The handler pool's threads, for tests. */
+  private[graft] def poolThreads: Seq[Thread] = handlerThreads.asScala.toSeq
 
   /** Bound address (ephemeral-port tests read the real port here). */
   def address: InetSocketAddress = server.getAddress

@@ -3,14 +3,18 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.PortableHash.hash48
 import graft.sources.{ManifestLog => M}
 
-/** Manifest-versioned inverted index — [[VersionedVectorIndex]]'s
-  * transaction layer for the lexical store, closing the durability
-  * caveat [[TextIndexStore.append]] documents: postings-then-stats was
-  * NOT a transaction (a crash between the two writes left postings
-  * ahead of stats, and readers could hit the stats overwrite window).
-  * Here the corpus stats are a SEGMENT like any other — every
+/** Manifest-versioned inverted index — the train-once / serve-many
+  * lexical store: `build` scans the corpus once and materializes the
+  * postings; every later query reads ONLY its own terms' posting
+  * buckets and the one-row corpus stats, never the text. q86's
+  * per-query path recomputes df/avgdl with a full corpus scan; against
+  * the store the same ranking (bit-identical — the oracle is shared
+  * verbatim) costs a file-pruned postings read of the query terms.
+  *
+  * The corpus stats are a SEGMENT like any other — every
   * maintenance commit writes a new immutable one-row stats segment and
   * publishes it in the SAME manifest as its postings/tombstone change,
   * so a reader sees postings and stats move together, atomically, or
@@ -19,13 +23,21 @@ import graft.sources.{ManifestLog => M}
   * stats row — a torn pair skews every score.
   *
   * Segment kinds: `postings` (term, doc_id, tf, dl, PARTITIONED BY
-  * t_bucket — the serving layout; a query's terms prune every other
-  * bucket at file level within each segment), `stats` (ONE row
-  * (n_docs, total_dl); exactly one stats segment referenced per
-  * version), `tombstones` (deleted doc_ids, VERSION-SCOPED: a
-  * tombstone retires only generations committed before it, which is
-  * what makes the single-commit [[upsert]] sound). meta records
-  * nBuckets — the store is self-describing, appends cannot mis-bucket.
+  * `t_bucket = hash48(term) mod nBuckets` — the serving layout; a
+  * query's terms prune every other bucket at file level within each
+  * segment, and `term IN (...)` pushes to parquet; `dl` is denormalized
+  * into the row so scoring never joins a doc-length table),
+  * `positions` (term, doc_id, positions, same bucketing — the
+  * proximity index, written by every operation that writes postings,
+  * for the same docs), `stats` (ONE row (n_docs, total_dl); exactly
+  * one stats segment referenced per version), `tombstones` (deleted
+  * doc_ids, VERSION-SCOPED: a tombstone retires only generations
+  * committed before it, which is what makes the single-commit
+  * [[upsert]] sound). Per-term document frequency is NOT stored: it is
+  * the term's own live posting-row count, exact from the pruned read.
+  * meta records nBuckets — the store is self-describing, appends
+  * cannot mis-bucket, and serving reads the bucket count from the
+  * snapshot it serves.
   *
   * Compaction is ADD-only (the [[VersionedVectorIndex.compact]]
   * contract) and — because stats were already adjusted at delete time —
@@ -55,34 +67,74 @@ object VersionedTextIndex {
   private def segName(v: Long, op: String): String =
     f"seg-$v%08d-$op-${java.util.UUID.randomUUID().toString.take(8)}"
 
-  private def writePostingsSegment(spark: SparkSession, dir: String, name: String,
-                                   docs: DataFrame, nBuckets: Int): Segment = {
-    val segDir = s"$dir/$name"
-    // The postings/bucketing formula is TextIndexStore's, shared — a
-    // drifting second copy would silently prune the wrong buckets.
-    TextIndexStore.postingsFrame(docs, nBuckets)
+  /** (doc_id, text …, words, dl) — the ONE length/tokenization
+    * convention of postings, positions and stats.
+    */
+  private def docLengths(docs: DataFrame): DataFrame =
+    Tables.widen(docs)
+      .withColumn("words", split(col("text"), " "))
+      .withColumn("dl", size(col("words")).cast("long"))
+
+  /** The postings frame (term, doc_id, dl, tf, t_bucket) — the ONE
+    * definition of the bucketing formula; [[bucketOf]] is its Scala
+    * twin, and a drift between them would silently prune the wrong
+    * buckets at serve time.
+    */
+  private def postingsFrame(docs: DataFrame, nBuckets: Int): DataFrame =
+    docLengths(docs)
+      .select(col("doc_id"), col("dl"), explode(col("words")).as("term"))
+      .groupBy("term", "doc_id", "dl")
+      .agg(count(lit(1)).as("tf"))
+      .withColumn("t_bucket", pmod(expr(hash48("term")), lit(nBuckets.toLong)))
+
+  /** Positional postings (term, doc_id, positions, t_bucket): per
+    * (term, doc) the SORTED 0-based token offsets of every occurrence,
+    * bucketed by the SAME formula as the postings so a phrase query's
+    * terms file-prune exactly as BM25's do. A separate segment kind,
+    * not a postings column, because offsets are the heavy payload (Σtf
+    * longs vs one tf per row) and frequency-only queries must not scan
+    * past them. `size(positions) == tf` by construction — both derive
+    * from [[docLengths]]'s split.
+    */
+  private def positionsFrame(docs: DataFrame, nBuckets: Int): DataFrame =
+    docLengths(docs)
+      .select(col("doc_id"), posexplode(col("words")).as(Seq("pos", "term")))
+      .groupBy("term", "doc_id")
+      .agg(sort_array(collect_list(col("pos").cast("long"))).as("positions"))
+      .withColumn("t_bucket", pmod(expr(hash48("term")), lit(nBuckets.toLong)))
+
+  /** The bucket a term's rows live in — the Scala twin of the build's
+    * `hash48(term) mod nBuckets` (VersionedTextIndexSpec pins the
+    * Scala and SQL hash48 bit-equal on the corpus vocabulary), used to
+    * push the bounded bucket list into the scan as a partition filter.
+    */
+  def bucketOf(term: String, nBuckets: Int): Long =
+    java.lang.Math.floorMod(graft.streaming.SyncCore.hash48(term), nBuckets.toLong)
+
+  /** Write an already-bucketed frame (postings or positions) as an
+    * immutable `kind` segment: one file per bucket.
+    */
+  private def writeBucketedSegment(spark: SparkSession, dir: String, name: String,
+                                   kind: String, rowsDf: DataFrame): Segment = {
+    rowsDf
       .repartition(col("t_bucket"))
       .sortWithinPartitions("term", "doc_id")
-      .write.partitionBy("t_bucket").mode("overwrite").parquet(segDir)
-    val files = M.listParquet(M.fs(spark, dir), new Path(segDir))
-    val rows = if (files.isEmpty) 0L else spark.read.parquet(segDir).count()
-    M.Segment("postings", name, files, rows)
+      .write.partitionBy("t_bucket").mode("overwrite").parquet(s"$dir/$name")
+    M.segment(spark, dir, kind, name)
   }
 
-  /** Rewrite of an already-bucketed postings frame (compaction): one
-    * file per bucket.
+  /** The postings AND positions segments of `docs` — every operation
+    * that indexes documents writes both, for the same docs, in the same
+    * commit. Disjoint dirs, no shared lineage: the two write jobs run
+    * concurrently.
     */
-  private def writeCompactedSegment(spark: SparkSession, dir: String, name: String,
-                                    postings: DataFrame): Segment = {
-    val segDir = s"$dir/$name"
-    postings
-      .repartition(col("t_bucket"))
-      .sortWithinPartitions("term", "doc_id")
-      .write.partitionBy("t_bucket").mode("overwrite").parquet(segDir)
-    val files = M.listParquet(M.fs(spark, dir), new Path(segDir))
-    val rows = if (files.isEmpty) 0L else spark.read.parquet(segDir).count()
-    M.Segment("postings", name, files, rows)
-  }
+  private def writeDocSegments(spark: SparkSession, dir: String, v: Long, op: String,
+                               docs: DataFrame, nBuckets: Int): Seq[Segment] =
+    ParallelSteps.run(
+      () => writeBucketedSegment(spark, dir, segName(v, op), "postings",
+        postingsFrame(docs, nBuckets)),
+      () => writeBucketedSegment(spark, dir, segName(v, s"$op-pos"), "positions",
+        positionsFrame(docs, nBuckets)))
 
   private def writeStatsSegment(spark: SparkSession, dir: String, name: String,
                                 nDocs: Long, totalDl: Long): Segment = {
@@ -96,12 +148,9 @@ object VersionedTextIndex {
 
   private def writeTombstoneSegment(spark: SparkSession, dir: String, name: String,
                                     ids: DataFrame): Segment = {
-    val segDir = s"$dir/$name"
     ids.select(col("doc_id").cast("long").as("doc_id"))
-      .write.mode("overwrite").parquet(segDir)
-    val files = M.listParquet(M.fs(spark, dir), new Path(segDir))
-    val rows = if (files.isEmpty) 0L else spark.read.parquet(segDir).count()
-    M.Segment("tombstones", name, files, rows)
+      .write.mode("overwrite").parquet(s"$dir/$name")
+    M.segment(spark, dir, "tombstones", name)
   }
 
   // ------------------------------------------------------------- reads
@@ -115,13 +164,18 @@ object VersionedTextIndex {
         col("t_bucket").cast("long").as("t_bucket"))
   }
 
-  /** Typed empty frame for a version whose postings segments hold zero
-    * files (a fully-deleted corpus compacts to nothing).
+  /** Typed empty frames for a version whose segments of a kind hold
+    * zero files (a fully-deleted corpus compacts to nothing).
     */
-  private def emptyPostings(spark: SparkSession): DataFrame =
+  private def emptyOf(spark: SparkSession, ddl: String): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "term STRING, doc_id BIGINT, dl BIGINT, tf BIGINT, t_bucket BIGINT"))
+      org.apache.spark.sql.types.StructType.fromDDL(ddl))
+
+  private def emptyPostings(spark: SparkSession): DataFrame =
+    emptyOf(spark, "term STRING, doc_id BIGINT, dl BIGINT, tf BIGINT, t_bucket BIGINT")
+
+  private def emptyPositions(spark: SparkSession): DataFrame =
+    emptyOf(spark, "term STRING, doc_id BIGINT, positions ARRAY<BIGINT>, t_bucket BIGINT")
 
   /** The one-row corpus stats at `version` — committed in the SAME
     * manifest as the postings state it describes.
@@ -150,15 +204,40 @@ object VersionedTextIndex {
     * same-commit tombstone. For plain deletes (tombstone postdating
     * every generation) this reduces exactly to the unscoped anti-join.
     * Bucket and term pruning stay effective — filters push below the
-    * anti-join (the [[TextIndexStore.livePostings]] contract).
+    * anti-join, so the tombstone pass touches only the query terms'
+    * already-pruned rows.
     */
-  def livePostings(spark: SparkSession, dir: String, version: Long = Latest): DataFrame = {
+  def livePostings(spark: SparkSession, dir: String, version: Long = Latest): DataFrame =
+    liveOf(spark, dir, version, "postings", emptyPostings(spark), Seq("tf", "dl"))
+
+  /** The positional rows at `version` (term, doc_id, positions, t_bucket). */
+  def positions(spark: SparkSession, dir: String, version: Long = Latest): DataFrame = {
     val snap = snapshot(spark, dir, version)
-    val p = M.readSegmentsScoped(spark, dir, snap.segments, "postings",
+    M.readSegments(spark, dir, snap.segments, "positions", partitioned = true)
+      .getOrElse(emptyPositions(spark))
+      .select(col("term"), col("doc_id"), col("positions"),
+        col("t_bucket").cast("long").as("t_bucket"))
+  }
+
+  /** Serving view of the positions at `version`: the [[livePostings]]
+    * rule (generation-scoped tombstones), so phrase and proximity
+    * queries honor takedowns and upserts exactly as BM25 does.
+    */
+  def livePositions(spark: SparkSession, dir: String, version: Long = Latest): DataFrame =
+    liveOf(spark, dir, version, "positions", emptyPositions(spark), Seq("positions"))
+
+  /** The `kind` rows of `version` minus tombstoned generations: a
+    * tombstone kills only rows whose segment was created strictly
+    * before it. Columns: term, doc_id, `payload`, t_bucket.
+    */
+  private def liveOf(spark: SparkSession, dir: String, version: Long, kind: String,
+                     empty: DataFrame, payload: Seq[String]): DataFrame = {
+    val snap = snapshot(spark, dir, version)
+    val p = M.readSegmentsScoped(spark, dir, snap.segments, kind,
         partitioned = true, "seg_v")
-      .getOrElse(emptyPostings(spark).withColumn("seg_v", lit(0L)))
-      .select(col("term"), col("doc_id"), col("tf"), col("dl"),
-        col("t_bucket").cast("long").as("t_bucket"), col("seg_v"))
+      .getOrElse(empty.withColumn("seg_v", lit(0L)))
+      .select((Seq(col("term"), col("doc_id")) ++ payload.map(col) ++
+        Seq(col("t_bucket").cast("long").as("t_bucket"), col("seg_v"))): _*)
     M.readSegmentsScoped(spark, dir, snap.segments, "tombstones",
         partitioned = false, "tomb_v") match {
       case Some(t) =>
@@ -169,6 +248,31 @@ object VersionedTextIndex {
           .drop("seg_v")
       case None => p.drop("seg_v")
     }
+  }
+
+  /** The live postings of `terms` at `version`, pruned to the terms'
+    * buckets at FILE level (partition `IN`, with the bucket count read
+    * from the snapshot) and to the terms themselves by a parquet-pushed
+    * `term IN`. Bucket and term filters sit below the tombstone
+    * anti-join, so a takedown does not un-scale serving.
+    */
+  def termPostings(spark: SparkSession, dir: String, terms: Seq[String],
+                   version: Long = Latest): DataFrame = {
+    val v = snapshot(spark, dir, version).version
+    termRows(livePostings(spark, dir, v), nBuckets(spark, dir, v), terms)
+  }
+
+  /** [[termPostings]] for the positional rows. */
+  def termPositions(spark: SparkSession, dir: String, terms: Seq[String],
+                    version: Long = Latest): DataFrame = {
+    val v = snapshot(spark, dir, version).version
+    termRows(livePositions(spark, dir, v), nBuckets(spark, dir, v), terms)
+  }
+
+  private def termRows(rows: DataFrame, nb: Int, terms: Seq[String]): DataFrame = {
+    val buckets = terms.map(bucketOf(_, nb)).distinct
+    rows.filter(col("t_bucket").isin(buckets.map(Long.box): _*)
+      && col("term").isin(terms.distinct: _*))
   }
 
   /** The bucket count recorded at build time. */
@@ -257,16 +361,21 @@ object VersionedTextIndex {
       .orderBy("version")
   }
 
-  /** Stored BM25 over the `version` snapshot — q86's ranking from the
-    * pinned postings + their same-manifest stats (the torn-pair hazard
-    * this store exists to remove).
+  /** Stored BM25 over ONE resolved snapshot (q94) — q86's ranking,
+    * bit-identical, from the pinned live postings + their same-manifest
+    * stats (the torn-pair hazard this store exists to remove). The
+    * query never scans corpus text: the postings read prunes to the
+    * query terms' buckets at FILE level, df comes from the pruned read,
+    * and after a takedown or upsert the scores equal a from-scratch
+    * index over the live corpus (df from the live rows, n_docs/avgdl
+    * from the stats row the same commit moved).
     */
   def bm25(spark: SparkSession, dir: String, terms: Seq[String], k: Int,
            version: Long = Latest): DataFrame = {
     val snap = snapshot(spark, dir, version)
     graft.operators.TextAnalysis.bm25Served(
-      livePostings(spark, dir, snap.version), stats(spark, dir, snap.version),
-      terms, k, snap.meta("nBuckets").toInt)
+      termPostings(spark, dir, terms, snap.version), stats(spark, dir, snap.version),
+      terms, k)
   }
 
   // -------------------------------------------------------- operations
@@ -278,20 +387,25 @@ object VersionedTextIndex {
     val spark = docs.sparkSession
     val f = M.fs(spark, dir)
     f.delete(new Path(dir), true)
-    val batch = TextIndexStore.docLengths(docs)
-      .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("s")).first()
-    val seg = writePostingsSegment(spark, dir, segName(0L, "build"), docs, nBuckets)
-    val stat = writeStatsSegment(spark, dir, segName(0L, "build-stats"),
-      batch.getLong(0), batch.getLong(1))
-    M.commit(f, dir, M.Snapshot(0L, "build", "", Seq(seg, stat),
+    // The stats row depends on the corpus alone, not on the postings:
+    // its scan runs beside the segment writes.
+    val segs = ParallelSteps.run[Seq[Segment]](
+      () => writeDocSegments(spark, dir, 0L, "build", docs, nBuckets),
+      () => {
+        val batch = docLengths(docs)
+          .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("s")).first()
+        Seq(writeStatsSegment(spark, dir, segName(0L, "build-stats"),
+          batch.getLong(0), batch.getLong(1)))
+      }).flatten
+    M.commit(f, dir, M.Snapshot(0L, "build", "", segs,
       Map("nBuckets" -> nBuckets.toString)))
     0L
   }
 
-  /** Admit new documents: their postings land as a new segment and the
-    * stats ADVANCE by the batch's exact counts — one manifest commit
-    * carries both, so no reader ever sees postings ahead of stats (the
-    * [[TextIndexStore.append]] crash window, closed). df needs no
+  /** Admit new documents: their postings (and positions) land as new
+    * segments and the stats ADVANCE by the batch's exact counts — one
+    * manifest commit carries all of them, so no reader ever sees
+    * postings ahead of stats. df needs no
     * maintenance (derived from the pruned live read), so append-then-
     * serve scores exactly like a from-scratch build over the full
     * corpus. Returns the committed version (unchanged for an empty
@@ -323,7 +437,7 @@ object VersionedTextIndex {
     */
   def appendStreamBatch(spark: SparkSession, dir: String, newDocs: DataFrame,
                         batchId: Long, appId: String = "stream"): Long = synchronized {
-    require(!appId.contains(' ') && appId.nonEmpty, "appId must be a non-empty string")
+    require(!appId.contains('\u0000') && appId.nonEmpty, "appId must be a non-empty string")
     val key = s"lastBatchId.$appId"
     val last = snapshot(spark, dir).meta.get(key).map(_.toLong).getOrElse(-1L)
     if (batchId <= last) currentVersion(spark, dir)
@@ -332,12 +446,13 @@ object VersionedTextIndex {
 
   private def appendImpl(spark: SparkSession, dir: String, newDocs: DataFrame,
                          extraMeta: Map[String, String]): Long = {
-    val batch = TextIndexStore.docLengths(newDocs)
+    val batch = docLengths(newDocs)
       .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("s")).first()
     if (batch.getLong(0) == 0L) return currentVersion(spark, dir)
-    // Revival of a tombstoned doc: fold deletions physically first so
-    // the new postings land as the doc's only generation (the
-    // TextIndexStore.append resurrection contract).
+    // Revival of a tombstoned doc: the store still holds its OLD rows
+    // behind the anti-join, and an unscoped append would serve BOTH
+    // generations (double tf). Fold deletions physically first so the
+    // new postings land as the doc's only generation.
     val newIds = newDocs.select(col("doc_id").cast("long").as("doc_id")).distinct()
     if (!tombstones(spark, dir).join(broadcast(newIds), Seq("doc_id"), "left_semi").isEmpty)
       compact(spark, dir)
@@ -345,13 +460,13 @@ object VersionedTextIndex {
     val v = prior.version + 1
     val old = stats(spark, dir, prior.version)
       .select(col("n_docs"), col("total_dl")).first()
-    val seg = writePostingsSegment(spark, dir, segName(v, "append"), newDocs,
+    val segs = writeDocSegments(spark, dir, v, "append", newDocs,
       prior.meta("nBuckets").toInt)
     val stat = writeStatsSegment(spark, dir, segName(v, "append-stats"),
       old.getLong(0) + batch.getLong(0), old.getLong(1) + batch.getLong(1))
     M.commit(M.fs(spark, dir), dir,
       M.Snapshot(v, "append", "",
-        prior.segments.filter(_.kind != "stats") :+ seg :+ stat,
+        prior.segments.filter(_.kind != "stats") ++ segs :+ stat,
         prior.meta ++ extraMeta))
     v
   }
@@ -388,7 +503,7 @@ object VersionedTextIndex {
 
   private def upsertImpl(spark: SparkSession, dir: String, docs: DataFrame,
                          extraMeta: Map[String, String]): Long = {
-    val batch = TextIndexStore.docLengths(docs)
+    val batch = docLengths(docs)
       .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("s")).first()
     if (batch.getLong(0) == 0L) return currentVersion(spark, dir)
     val ids = docs.select(col("doc_id").cast("long").as("doc_id")).distinct()
@@ -407,14 +522,14 @@ object VersionedTextIndex {
     val old = stats(spark, dir, prior.version)
       .select(col("n_docs"), col("total_dl")).first()
     val tomb = writeTombstoneSegment(spark, dir, segName(v, "upsert-tomb"), ids)
-    val seg = writePostingsSegment(spark, dir, segName(v, "upsert"), docs,
+    val segs = writeDocSegments(spark, dir, v, "upsert", docs,
       prior.meta("nBuckets").toInt)
     val stat = writeStatsSegment(spark, dir, segName(v, "upsert-stats"),
       old.getLong(0) - replaced.getLong(0) + batch.getLong(0),
       old.getLong(1) - replaced.getLong(1) + batch.getLong(1))
     M.commit(M.fs(spark, dir), dir,
       M.Snapshot(v, "upsert", "",
-        prior.segments.filter(_.kind != "stats") :+ tomb :+ seg :+ stat,
+        (prior.segments.filter(_.kind != "stats") :+ tomb) ++ segs :+ stat,
         prior.meta ++ extraMeta))
     v
   }
@@ -459,8 +574,11 @@ object VersionedTextIndex {
     v
   }
 
-  /** ADD-only compaction: the live postings rewrite into one merged
-    * segment (one file per bucket), tombstones drop, and the stats
+  /** ADD-only compaction: the live postings and the live positions
+    * each rewrite into one merged segment (one file per bucket — the
+    * dead positions fold in the SAME commit as the dead postings, so
+    * dropping the tombstones resurrects nothing), tombstones drop, and
+    * the stats
     * segment is CARRIED FORWARD BY REFERENCE — delete adjusted it
     * already, so compaction provably changes no number (it does not
     * even rewrite the row). Old segments stay for time travel until
@@ -469,11 +587,14 @@ object VersionedTextIndex {
   def compact(spark: SparkSession, dir: String): Long = synchronized {
     val prior = snapshot(spark, dir)
     val v = prior.version + 1
-    val seg = writeCompactedSegment(spark, dir, segName(v, "compact"),
-      livePostings(spark, dir, prior.version))
+    val segs = ParallelSteps.run(
+      () => writeBucketedSegment(spark, dir, segName(v, "compact"), "postings",
+        livePostings(spark, dir, prior.version)),
+      () => writeBucketedSegment(spark, dir, segName(v, "compact-pos"), "positions",
+        livePositions(spark, dir, prior.version)))
     val stat = prior.segments.filter(_.kind == "stats")
     M.commit(M.fs(spark, dir), dir,
-      M.Snapshot(v, "compact", "", seg +: stat, prior.meta))
+      M.Snapshot(v, "compact", "", segs ++ stat, prior.meta))
     v
   }
 
@@ -481,44 +602,4 @@ object VersionedTextIndex {
   def vacuum(spark: SparkSession, dir: String, retain: Int): Unit = synchronized {
     M.vacuum(spark, dir, retain)
   }
-
-  // ----------------------------------------------------- query helpers
-
-  /** The q109 lifecycle — build(base) v0, append(rest) v1, delete v2,
-    * compact v3 — once per (dir, nBuckets) per JVM.
-    */
-  def lifecycleOnce(spark: SparkSession, dir: String, baseDocs: DataFrame,
-                    newDocs: DataFrame, delIds: DataFrame,
-                    nBuckets: Int): Unit = synchronized {
-    val key = (dir, nBuckets)
-    if (!lifecycled.contains(key)) {
-      StoreProvenance.built(dir)
-      build(baseDocs, dir, nBuckets)
-      append(spark, dir, newDocs)
-      delete(spark, dir, delIds)
-      compact(spark, dir)
-      lifecycled += key
-    } else StoreProvenance.reused(dir)
-  }
-
-  /** The q111 lifecycle — the q109 lifecycle (v0..v3) plus a v4
-    * UPSERT of `patchDocs` (replacements for live docs AND revivals of
-    * deleted ones, one atomic commit) — once per (dir, nBuckets) per
-    * JVM.
-    */
-  def lifecycleUpsertedOnce(spark: SparkSession, dir: String, baseDocs: DataFrame,
-                            newDocs: DataFrame, delIds: DataFrame,
-                            patchDocs: DataFrame, nBuckets: Int): Unit = synchronized {
-    val key = (dir, nBuckets)
-    if (!lifecycled.contains(key)) {
-      build(baseDocs, dir, nBuckets)
-      append(spark, dir, newDocs)
-      delete(spark, dir, delIds)
-      compact(spark, dir)
-      upsert(spark, dir, patchDocs)
-      lifecycled += key
-    }
-  }
-
-  private val lifecycled = scala.collection.mutable.Set.empty[(String, Int)]
 }

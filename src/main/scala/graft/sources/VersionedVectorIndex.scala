@@ -6,12 +6,16 @@ import org.apache.spark.sql.functions._
 import graft.operators.Similarity
 import graft.sources.{ManifestLog => M}
 
-/** Manifest-versioned IVF-PQ index — the transactional layer
-  * [[VectorIndexStore.compact]]'s durability note promises ("a
-  * production deployment stages the swap under one manifest/table-format
-  * commit (the Delta/Iceberg shape) instead of raw directory renames").
-  * Same trained artifacts and serving kernels as [[VectorIndexStore]];
-  * what changes is VISIBILITY, via the [[ManifestLog]] core:
+/** Manifest-versioned IVF-PQ index — the train-once / serve-many
+  * artifact the per-query trainers (q18i/q80/q85) deliberately lack.
+  * `build` runs the in-engine training pipeline
+  * ([[Similarity.ivfPqArtifacts]]: coarse k-means, residual PQ
+  * sub-codebooks, corpus encode) exactly once and materializes the
+  * artifacts as parquet; every later search loads them and pays only
+  * LUT construction plus a pruned code-table scan. Doubles round-trip
+  * parquet bit-exactly, so searches over the loaded artifacts equal
+  * searches over the just-trained frames verbatim. Visibility goes
+  * through the [[ManifestLog]] core:
   *
   *   - Data files are IMMUTABLE once written. No operation deletes or
   *     rewrites a referenced file — compaction writes NEW merged files
@@ -25,7 +29,10 @@ import graft.sources.{ManifestLog => M}
   *     [[vacuum]].
   *
   * Segment kinds: `codes` (vec_id, codes, PARTITIONED BY cid — the
-  * serving layout, pruned at FILE level within every segment),
+  * serving layout: a query batch probes a bounded cell set, so the scan
+  * prunes unprobed cells at FILE level within every segment, and code
+  * bytes are ~nSub integers per vector; the ADC path never reads a
+  * float),
   * `vectors` (cell-partitioned raw floats, see [[writeVectorSegment]]),
   * `tombstones` (deleted vec_ids). The manifest's meta records the
   * training parameters, so the store is self-describing and [[reindex]]
@@ -73,18 +80,11 @@ object VersionedVectorIndex {
     */
   private def writeCodeSegment(spark: SparkSession, dir: String, name: String,
                                codesDf: DataFrame): Segment = {
-    val segDir = s"$dir/$name"
     codesDf
       .repartition(col("cid"))
       .sortWithinPartitions("vec_id")
-      .write.partitionBy("cid").mode("overwrite").parquet(segDir)
-    val files = M.listParquet(M.fs(spark, dir), new Path(segDir))
-    // Footer-level count of what actually landed (at cluster scale the
-    // write job's task metrics carry this for free). An EMPTY frame
-    // writes no parquet files at all — reading the dir back would
-    // throw, and zero files means zero rows.
-    val rows = if (files.isEmpty) 0L else spark.read.parquet(segDir).count()
-    M.Segment("codes", name, files, rows)
+      .write.partitionBy("cid").mode("overwrite").parquet(s"$dir/$name")
+    M.segment(spark, dir, "codes", name)
   }
 
   /** Write `assigned` (vec_id, cid, embedding) as an immutable
@@ -98,25 +98,19 @@ object VersionedVectorIndex {
     */
   private def writeVectorSegment(spark: SparkSession, dir: String, name: String,
                                  assigned: DataFrame): Segment = {
-    val segDir = s"$dir/$name"
     assigned
       .select(col("vec_id"), col("cid").cast("long").as("cid"), col("embedding"))
       .repartition(col("cid"))
       .sortWithinPartitions("vec_id")
-      .write.partitionBy("cid").mode("overwrite").parquet(segDir)
-    val files = M.listParquet(M.fs(spark, dir), new Path(segDir))
-    val rows = if (files.isEmpty) 0L else spark.read.parquet(segDir).count()
-    M.Segment("vectors", name, files, rows)
+      .write.partitionBy("cid").mode("overwrite").parquet(s"$dir/$name")
+    M.segment(spark, dir, "vectors", name)
   }
 
   private def writeTombstoneSegment(spark: SparkSession, dir: String, name: String,
                                     ids: DataFrame): Segment = {
-    val segDir = s"$dir/$name"
     ids.select(col("vec_id").cast("long").as("vec_id"))
-      .write.mode("overwrite").parquet(segDir)
-    val files = M.listParquet(M.fs(spark, dir), new Path(segDir))
-    val rows = if (files.isEmpty) 0L else spark.read.parquet(segDir).count()
-    M.Segment("tombstones", name, files, rows)
+      .write.mode("overwrite").parquet(s"$dir/$name")
+    M.segment(spark, dir, "tombstones", name)
   }
 
   /** Typed empty frames for a version whose segments hold zero files
@@ -156,9 +150,10 @@ object VersionedVectorIndex {
       }
   }
 
-  /** Serving view at `version`: codes minus tombstoned ids (broadcast
-    * anti-join AFTER cell pruning, the [[VectorIndexStore.liveCodes]]
-    * contract).
+  /** Serving view at `version`: codes minus tombstoned ids. The
+    * tombstone side is broadcast (between compactions it is small —
+    * compact precisely when it is not), and cell pruning happens on the
+    * codes side first, so the anti-join touches only probed-cell rows.
     */
   def liveCodes(spark: SparkSession, dir: String, version: Long = Latest): DataFrame = {
     val snap = snapshot(spark, dir, version)
@@ -221,6 +216,20 @@ object VersionedVectorIndex {
   def codebooks(spark: SparkSession, dir: String, version: Long = Latest): DataFrame =
     spark.read.parquet(s"$dir/${snapshot(spark, dir, version).modelDir}/codebooks")
 
+  /** The ADC serving artifacts of ONE resolved snapshot: the model,
+    * the live code table, and the `nSub` the model was trained with,
+    * read from the snapshot's own recorded parameters — a caller-held
+    * copy could disagree with the model and mis-slice the LUT join.
+    */
+  final case class Serving(centroids: DataFrame, codebooks: DataFrame,
+                           liveCodes: DataFrame, nSub: Int)
+
+  def serving(spark: SparkSession, dir: String, version: Long = Latest): Serving = {
+    val snap = snapshot(spark, dir, version)
+    Serving(centroids(spark, dir, snap.version), codebooks(spark, dir, snap.version),
+      liveCodes(spark, dir, snap.version), snap.meta("nSub").toInt)
+  }
+
   /** Change data feed — (vec_id, change ∈ insert | update | delete)
     * between two committed versions, CONTENT-based like
     * [[VersionedTextIndex.changes]]: per live id the (cell, codes)
@@ -260,8 +269,10 @@ object VersionedVectorIndex {
   // -------------------------------------------------------- operations
 
   /** Train on `emb` and commit version 0. Wipes any prior lineage under
-    * `dir` first — a rebuild is a NEW index (the
-    * [[VectorIndexStore.build]] contract, manifest edition).
+    * `dir` first — a rebuild is a NEW index: tombstones of an old
+    * lineage must not shadow fresh rows. Training already ran when the
+    * writes start, and the artifacts live in disjoint dirs, so the
+    * model, code and vector writes run as concurrent jobs.
     */
   def build(emb: DataFrame, dir: String, nCentroids: Int, nSub: Int,
             nCodes: Int, iters: Int): Long = synchronized {
@@ -271,14 +282,18 @@ object VersionedVectorIndex {
     val (coarse, books, codesDf) =
       Similarity.ivfPqArtifacts(emb, nCentroids, nSub, nCodes, iters)
     val modelDir = segName(0L, "model")
-    coarse.write.mode("overwrite").parquet(s"$dir/$modelDir/centroids")
-    books.write.mode("overwrite").parquet(s"$dir/$modelDir/codebooks")
-    val seg = writeCodeSegment(spark, dir, segName(0L, "build"), codesDf)
-    // Raw vectors, cell-partitioned under the SAME assignment the codes
-    // carry (assignTo is deterministic) — map-only, one broadcast row.
-    val vseg = writeVectorSegment(spark, dir, segName(0L, "build-vecs"),
-      Similarity.assignTo(Similarity.withEmb(emb), coarse))
-    M.commit(f, dir, M.Snapshot(0L, "build", modelDir, Seq(seg, vseg),
+    val segs = ParallelSteps.run[Seq[Segment]](
+      () => {
+        coarse.write.mode("overwrite").parquet(s"$dir/$modelDir/centroids")
+        books.write.mode("overwrite").parquet(s"$dir/$modelDir/codebooks")
+        Nil
+      },
+      () => Seq(writeCodeSegment(spark, dir, segName(0L, "build"), codesDf)),
+      // Raw vectors, cell-partitioned under the SAME assignment the
+      // codes carry (assignTo is deterministic) — map-only.
+      () => Seq(writeVectorSegment(spark, dir, segName(0L, "build-vecs"),
+        Similarity.assignTo(Similarity.withEmb(emb), coarse)))).flatten
+    M.commit(f, dir, M.Snapshot(0L, "build", modelDir, segs,
       trainParams(nCentroids, nSub, nCodes, iters)))
     0L
   }
@@ -288,9 +303,10 @@ object VersionedVectorIndex {
     Map("nCentroids" -> nCentroids.toString, "nSub" -> nSub.toString,
       "nCodes" -> nCodes.toString, "iters" -> iters.toString)
 
-  /** Admit new vectors against the STORED model (assign to stored
-    * centroids, encode against stored books — the
-    * [[VectorIndexStore.append]] kernel) and commit a version whose
+  /** Admit new vectors against the STORED model without retraining
+    * (assign to stored centroids, encode the residual against stored
+    * books with [[Similarity.encodeResiduals]], the kernel the build
+    * used) and commit a version whose
     * manifest is the prior segments plus new code/vector segments.
     * Existing files and the model are untouched. Returns the committed
     * version.
@@ -298,9 +314,9 @@ object VersionedVectorIndex {
   def append(spark: SparkSession, dir: String, newVecs: DataFrame): Long = synchronized {
     // Empty batch: a no-op tick of the ingest loop, not a version.
     if (newVecs.isEmpty) return currentVersion(spark, dir)
-    // Revival of a tombstoned id must not leave two live generations:
-    // fold deletions physically first (an extra committed version, the
-    // same amortized rewrite VectorIndexStore.append performs).
+    // Revival of a tombstoned id must not leave two live generations
+    // (double ADC contributions): fold deletions physically first — an
+    // extra committed version, amortized because revivals are rare.
     val newIds = newVecs.select(col("vec_id").cast("long").as("vec_id")).distinct()
     if (!tombstones(spark, dir).join(broadcast(newIds), Seq("vec_id"), "left_semi").isEmpty)
       compact(spark, dir)
@@ -445,70 +461,4 @@ object VersionedVectorIndex {
   def restore(spark: SparkSession, dir: String, toVersion: Long): Long = synchronized {
     M.restore(spark, dir, toVersion)
   }
-
-  // ----------------------------------------------------- query helpers
-
-  /** The q107 lifecycle — build(base) v0, append(rest) v1, delete v2,
-    * compact v3 — once per (dir, params) per JVM: queries against the
-    * versioned store measure SERVING and TIME TRAVEL, not maintenance
-    * (the [[VectorIndexStore.buildOnce]] idempotence contract).
-    */
-  def lifecycleOnce(spark: SparkSession, dir: String, baseEmb: DataFrame,
-                    newEmb: DataFrame, delIds: DataFrame, nCentroids: Int,
-                    nSub: Int, nCodes: Int, iters: Int): Unit = synchronized {
-    val key = (dir, nCentroids, nSub, nCodes, iters)
-    if (!lifecycled.contains(key)) {
-      StoreProvenance.built(dir)
-      build(baseEmb, dir, nCentroids, nSub, nCodes, iters)
-      append(spark, dir, newEmb)
-      delete(spark, dir, delIds)
-      compact(spark, dir)
-      lifecycled += key
-    } else StoreProvenance.reused(dir)
-  }
-
-  /** The q108b/q107d lifecycle — q107's four versions plus a v4
-    * [[reindex]] and a v5 [[restore]] back to the pre-reindex state
-    * (the "reindex shipped bad state, roll it back" drill: v4 stays
-    * inspectable, v5 serves v3's exact files) — once per (dir, params)
-    * per JVM.
-    */
-  def lifecycleReindexedOnce(spark: SparkSession, dir: String, baseEmb: DataFrame,
-                             newEmb: DataFrame, delIds: DataFrame, nCentroids: Int,
-                             nSub: Int, nCodes: Int, iters: Int): Unit = synchronized {
-    val key = (dir, nCentroids, nSub, nCodes, iters)
-    if (!reindexed.contains(key)) {
-      build(baseEmb, dir, nCentroids, nSub, nCodes, iters)
-      append(spark, dir, newEmb)
-      delete(spark, dir, delIds)
-      compact(spark, dir)
-      reindex(spark, dir)
-      restore(spark, dir, 3L)
-      reindexed += key
-    }
-  }
-
-  /** The q111d lifecycle — q107's four versions plus a v4 [[upsert]]
-    * of `patchVecs` (re-embedded replacements for live ids AND
-    * revivals of deleted ones, one atomic commit) — once per
-    * (dir, params) per JVM.
-    */
-  def lifecycleUpsertedOnce(spark: SparkSession, dir: String, baseEmb: DataFrame,
-                            newEmb: DataFrame, delIds: DataFrame,
-                            patchVecs: DataFrame, nCentroids: Int,
-                            nSub: Int, nCodes: Int, iters: Int): Unit = synchronized {
-    val key = (dir, nCentroids, nSub, nCodes, iters)
-    if (!upserted.contains(key)) {
-      build(baseEmb, dir, nCentroids, nSub, nCodes, iters)
-      append(spark, dir, newEmb)
-      delete(spark, dir, delIds)
-      compact(spark, dir)
-      upsert(spark, dir, patchVecs)
-      upserted += key
-    }
-  }
-
-  private val lifecycled = scala.collection.mutable.Set.empty[(String, Int, Int, Int, Int)]
-  private val reindexed = scala.collection.mutable.Set.empty[(String, Int, Int, Int, Int)]
-  private val upserted = scala.collection.mutable.Set.empty[(String, Int, Int, Int, Int)]
 }

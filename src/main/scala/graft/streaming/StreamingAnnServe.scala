@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.Similarity
 
 /** Streaming ANN serving — the trained, PERSISTED IVF-PQ index
-  * ([[graft.sources.VectorIndexStore]]) answering a continuous stream
+  * ([[graft.sources.VersionedVectorIndex]]) answering a continuous stream
   * of query vectors: the S17 broadcast-model pattern (Classifier
   * .scoreWith) applied to the vector index. Each microbatch of
   * queries (qid, embedding) runs [[Similarity.ivfPqSearchFrames]]
@@ -18,15 +18,11 @@ import graft.operators.Similarity
   * state (no watermark, no state store) — the "state" is the index
   * artifact on disk, shared by every batch and every concurrent
   * query stream, which is what lets one trained index fan out to any
-  * number of serving queries. Index maintenance (VectorIndexStore
-  * .append) and serving compose — with one caveat a long-running
-  * server must respect: a codes DataFrame captured ONCE pins its
-  * parquet file listing (the InMemoryFileIndex) at read time, so
-  * codes appended later are invisible to it. [[scoreBatchFromStore]]
-  * re-reads the store per microbatch (a file listing per batch —
-  * cheap next to the scan) and therefore serves appended vectors as
-  * soon as their files land; [[scoreBatch]] over captured frames is
-  * the frozen-snapshot variant.
+  * number of serving queries. Index maintenance and serving compose:
+  * [[scoreBatchVersioned]] resolves the store's manifest per
+  * microbatch and therefore serves a commit (append, delete, compact,
+  * reindex) from the very next batch; [[scoreBatch]] over captured
+  * frames is the frozen-snapshot variant.
   */
 object StreamingAnnServe {
 
@@ -49,54 +45,24 @@ object StreamingAnnServe {
     Similarity.ivfPqSearchFrames(q, centroids, codebooks, codes, nSub, k, nProbe)
   }
 
-  /** [[scoreBatch]] against a FRESHLY-READ store: re-lists the parquet
-    * each call, so codes appended between microbatches (the q90 ingest
-    * path) are served by the very next batch — and vec_ids tombstoned
-    * between microbatches (the q98 takedown path, served through
-    * [[graft.sources.VectorIndexStore.liveCodes]]) disappear from the
-    * very next batch too; both maintenance directions compose with a
-    * long-running server through file visibility alone. `corpusFrom`
+  /** [[scoreBatch]] against the stored index at `dir`: each
+    * microbatch resolves one committed snapshot and serves exactly its
+    * file list — never a torn mix of two versions while a writer is
+    * mid-flight. Maintenance commits landing between microbatches are
+    * served by the very next batch: appended vectors rank, tombstoned
+    * ids disappear (the live view), and a reindex is a zero-downtime
+    * model swap at a batch boundary (S19b/S19c/S21 pin all three).
+    * Passing a pinned `version` instead serves that version forever —
+    * in-stream time travel, the reproducible-replay knob (S21 pins a
+    * pinned stream riding through a reindex unchanged). `corpusFrom`
     * excludes low vec_ids (the query-batch convention of the q89
     * family).
-    */
-  def scoreBatchFromStore(queries: DataFrame, dir: String, k: Int, nProbe: Int,
-                          corpusFrom: Long = 0L): DataFrame = {
-    val spark = queries.sparkSession
-    val books = graft.sources.VectorIndexStore.codebooks(spark, dir)
-    val nSub = books.agg(org.apache.spark.sql.functions.max("m"))
-      .first().getAs[Number](0).intValue + 1
-    scoreBatch(queries,
-      graft.sources.VectorIndexStore.centroids(spark, dir), books,
-      graft.sources.VectorIndexStore.liveCodes(spark, dir)
-        .filter(col("vec_id") >= corpusFrom),
-      nSub, k, nProbe)
-  }
-
-  /** [[scoreBatch]] against the MANIFEST-VERSIONED store
-    * ([[graft.sources.VersionedVectorIndex]]): each microbatch resolves
-    * one committed snapshot and serves exactly its file list — never a
-    * torn mix of two versions, which is what raw directory re-listing
-    * ([[scoreBatchFromStore]]) cannot promise while a writer is mid-
-    * flight. Maintenance commits (append/delete/compact/REINDEX)
-    * landing between microbatches are served by the very next batch,
-    * so a reindex is a zero-downtime model swap at a batch boundary
-    * (S21 pins the swap). Passing a pinned `version` instead serves
-    * that version forever — in-stream time travel, the reproducible-
-    * replay knob (S21 pins a pinned stream riding through a reindex
-    * unchanged).
     */
   def scoreBatchVersioned(queries: DataFrame, dir: String, k: Int, nProbe: Int,
                           corpusFrom: Long = 0L,
                           version: Long = graft.sources.VersionedVectorIndex.Latest): DataFrame = {
-    val spark = queries.sparkSession
-    val V = graft.sources.VersionedVectorIndex
-    val snap = V.snapshot(spark, dir, version)
-    // nSub from the snapshot's own recorded parameters — no per-batch
-    // aggregation job, and it can never disagree with the pinned model.
-    val nSub = snap.meta("nSub").toInt
-    val books = V.codebooks(spark, dir, snap.version)
-    scoreBatch(queries, V.centroids(spark, dir, snap.version), books,
-      V.liveCodes(spark, dir, snap.version).filter(col("vec_id") >= corpusFrom),
-      nSub, k, nProbe)
+    val a = graft.sources.VersionedVectorIndex.serving(queries.sparkSession, dir, version)
+    scoreBatch(queries, a.centroids, a.codebooks,
+      a.liveCodes.filter(col("vec_id") >= corpusFrom), a.nSub, k, nProbe)
   }
 }

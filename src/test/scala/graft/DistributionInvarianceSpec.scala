@@ -156,9 +156,9 @@ class DistributionInvarianceSpec extends AnyFunSuite with BeforeAndAfterAll {
         Similarity.ivfPqSearchFrames(
           Similarity.withEmb(emb).filter(col("vec_id") < 4)
             .select(col("vec_id").as("qid"), col("emb")),
-          graft.sources.VectorIndexStore.centroids(spark, annDir),
-          graft.sources.VectorIndexStore.codebooks(spark, annDir),
-          f(graft.sources.VectorIndexStore.codes(spark, annDir)
+          graft.sources.VersionedVectorIndex.centroids(spark, annDir),
+          graft.sources.VersionedVectorIndex.codebooks(spark, annDir),
+          f(graft.sources.VersionedVectorIndex.codes(spark, annDir)
             .filter(col("vec_id") >= 4)),
           4, 5, 2)
       }),
@@ -190,7 +190,7 @@ class DistributionInvarianceSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** One persisted index for the storedAdcSearch case (built once). */
   private lazy val annDir: String = {
     val d = java.nio.file.Files.createTempDirectory("graft_dinv_ann").toString
-    graft.sources.VectorIndexStore.build(
+    graft.sources.VersionedVectorIndex.build(
       Tables.table(spark, sf, "embeddings"), d, 8, 4, 8, 2)
     d
   }

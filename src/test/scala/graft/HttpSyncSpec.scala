@@ -30,10 +30,15 @@ class HttpSyncSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = server.stop()
 
   private def post(path: String, body: String): HttpResponse[String] =
+    postTo(base, path, body)
+
+  private def postTo(root: String, path: String, body: String): HttpResponse[String] =
     client.send(
-      HttpRequest.newBuilder(URI.create(s"$base$path"))
+      HttpRequest.newBuilder(URI.create(s"$root$path"))
         .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
       HttpResponse.BodyHandlers.ofString())
+
+  private def rootOf(srv: SyncHttpServer): String = s"http://127.0.0.1:${srv.address.getPort}"
 
   test("CORS preflight returns the reference's headers and no body (main.go:50-55)") {
     val r = client.send(
@@ -150,5 +155,38 @@ class HttpSyncSpec extends AnyFunSuite with BeforeAndAfterAll {
       val coreEvents = r.deltaEvents.map { case (_, e) => (e.t, e.eventType, e.origin, e.body) }
       assert(wireEvents == coreEvents)
     }
+  }
+
+  test("stop() drains and ends the handler pool before closing the spool") {
+    val spool = java.nio.file.Files.createTempDirectory("graft_http_stop").resolve("spool.jsonl")
+    val srv = new SyncHttpServer(cfg, clock = () => nowMs, seed = 7L,
+      spoolPath = Some(spool.toString)).start()
+    (1 to 5).foreach(i => assert(postTo(rootOf(srv), s"/stop/c$i/0", "{}").statusCode() == 200))
+    assert(srv.poolThreads.nonEmpty, "the requests must have run on the server's pool")
+    srv.stop()
+    assert(srv.poolThreads.forall(!_.isAlive),
+      s"no handler thread may outlive stop(): ${srv.poolThreads.filter(_.isAlive)}")
+    assert(java.nio.file.Files.readAllLines(spool).size == 5,
+      "every answered request must be in the closed spool")
+  }
+
+  test("a sweep that throws does not cancel the later sweeps") {
+    @volatile var now = 5000000L
+    val failNext = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val srv = new SyncHttpServer(cfg, seed = 7L, gameTimeout = 60000L, clock = () => {
+      if (failNext.compareAndSet(true, false)) throw new IllegalStateException("clock failed")
+      now
+    }).start()
+    try {
+      postTo(rootOf(srv), "/idle/a/0", "{}")
+      assert(srv.liveStreams == Seq("idle"))
+      now += 60001L // past gameTimeout
+      failNext.set(true) // the sweeper's first tick reads the clock and throws
+      srv.startSweeper(20)
+      val deadline = System.nanoTime() + 10000000000L
+      while (srv.liveStreams.nonEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(!failNext.get, "the failing tick must have run")
+      assert(srv.liveStreams.isEmpty, "a later tick must still drop the idle stream")
+    } finally srv.stop()
   }
 }

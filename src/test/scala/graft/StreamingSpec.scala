@@ -1095,7 +1095,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("S19: stored ANN index serves a query-vector stream ≡ batch, stateless") {
     implicit val sql = spark.sqlContext
     import spark.implicits._
-    import graft.sources.{Tables, VectorIndexStore}
+    import graft.sources.{Tables, VersionedVectorIndex => V}
     import graft.streaming.StreamingAnnServe
     // The serve-many half of train-once/serve-many: the PERSISTED
     // IVF-PQ index (S17's broadcast-model pattern, for vectors)
@@ -1105,10 +1105,10 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val emb = Tables.table(spark, "/root/testdata/sf0.001", "embeddings")
     val dir = java.nio.file.Files.createTempDirectory("graft_s19").toString
     val (nSub, k, nProbe) = (4, 10, 2)
-    VectorIndexStore.build(emb, dir, 8, nSub, 8, 2)
-    val coarse = VectorIndexStore.centroids(spark, dir)
-    val books = VectorIndexStore.codebooks(spark, dir)
-    val codes = VectorIndexStore.codes(spark, dir).filter(col("vec_id") >= 4)
+    V.build(emb, dir, 8, nSub, 8, 2)
+    val coarse = V.centroids(spark, dir)
+    val books = V.codebooks(spark, dir)
+    val codes = V.codes(spark, dir).filter(col("vec_id") >= 4)
     val queryVecs = emb.filter(col("vec_id") < 4)
       .select(col("vec_id"), col("embedding").cast("array<double>"))
       .as[(Long, Seq[Double])].collect().toSeq
@@ -1142,16 +1142,16 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("S19b: serving re-reads the store per batch, so mid-stream appends are served immediately") {
     implicit val sql = spark.sqlContext
     import spark.implicits._
-    import graft.sources.{Tables, VectorIndexStore}
+    import graft.sources.{Tables, VersionedVectorIndex => V}
     import graft.streaming.StreamingAnnServe
     // Maintenance + serving composition: a frame captured once pins
-    // its file listing, so the serving loop must RE-READ the store —
-    // scoreBatchFromStore — for appended codes to be queryable. Batch
+    // its snapshot, so the serving loop must RE-RESOLVE the store —
+    // scoreBatchVersioned — for appended codes to be queryable. Batch
     // 1 runs against the base index; vectors 400+ are appended between
     // microbatches; batch 2 must rank them.
     val emb = Tables.table(spark, "/root/testdata/sf0.001", "embeddings")
     val dir = java.nio.file.Files.createTempDirectory("graft_s19b").toString
-    VectorIndexStore.build(emb.filter(col("vec_id") < 400), dir, 8, 4, 8, 2)
+    V.build(emb.filter(col("vec_id") < 400), dir, 8, 4, 8, 2)
     val queryVecs = emb.filter(col("vec_id") < 4)
       .select(col("vec_id"), col("embedding").cast("array<double>"))
       .as[(Long, Seq[Double])].collect().toSeq
@@ -1161,7 +1161,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val q = src.toDF().toDF("qid", "embedding").writeStream
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
         if (b.count() > 0) {
-          val v = StreamingAnnServe.scoreBatchFromStore(b, dir, 10, 8, corpusFrom = 4L)
+          val v = StreamingAnnServe.scoreBatchVersioned(b, dir, 10, 8, corpusFrom = 4L)
             .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
           perBatch.synchronized { perBatch += v.toSeq }
         }
@@ -1170,7 +1170,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .outputMode("update").start()
     try {
       src.addData(queryVecs.take(2): _*); q.processAllAvailable()
-      VectorIndexStore.append(spark, dir, emb.filter(col("vec_id") >= 400))
+      V.append(spark, dir, emb.filter(col("vec_id") >= 400))
       src.addData(queryVecs.drop(2): _*); q.processAllAvailable()
     } finally q.stop()
     assert(perBatch.size == 2)
@@ -1181,8 +1181,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val fresh = graft.operators.Similarity.ivfPqSearchFrames(
       emb.filter(col("vec_id") >= 2 && col("vec_id") < 4)
         .select(col("vec_id").as("qid"), col("embedding").cast("array<double>").as("emb")),
-      VectorIndexStore.centroids(spark, dir), VectorIndexStore.codebooks(spark, dir),
-      VectorIndexStore.codes(spark, dir).filter(col("vec_id") >= 4), 4, 10, 8)
+      V.centroids(spark, dir), V.codebooks(spark, dir),
+      V.codes(spark, dir).filter(col("vec_id") >= 4), 4, 10, 8)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
     assert(perBatch(1).sortBy(r => (r._1, r._2)) == fresh.sortBy(r => (r._1, r._2)),
       "post-append batch must equal a fresh full-store search")
@@ -1193,15 +1193,15 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("S19c: mid-stream tombstone deletes disappear from the very next batch") {
     implicit val sql = spark.sqlContext
     import spark.implicits._
-    import graft.sources.{Tables, VectorIndexStore}
+    import graft.sources.{Tables, VersionedVectorIndex => V}
     import graft.streaming.StreamingAnnServe
     // The takedown half of maintenance + serving composition:
-    // scoreBatchFromStore serves the LIVE view (codes minus
+    // scoreBatchVersioned serves the LIVE view (codes minus
     // tombstones), so ids deleted between microbatches are gone from
     // the very next batch — no server restart, no index rebuild.
     val emb = Tables.table(spark, "/root/testdata/sf0.001", "embeddings")
     val dir = java.nio.file.Files.createTempDirectory("graft_s19c").toString
-    VectorIndexStore.build(emb, dir, 8, 4, 8, 2)
+    V.build(emb, dir, 8, 4, 8, 2)
     val queryVecs = emb.filter(col("vec_id") < 4)
       .select(col("vec_id"), col("embedding").cast("array<double>"))
       .as[(Long, Seq[Double])].collect().toSeq
@@ -1211,7 +1211,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val q = src.toDF().toDF("qid", "embedding").writeStream
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
         if (b.count() > 0) {
-          val v = StreamingAnnServe.scoreBatchFromStore(b, dir, 10, 8, corpusFrom = 4L)
+          val v = StreamingAnnServe.scoreBatchVersioned(b, dir, 10, 8, corpusFrom = 4L)
             .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
           perBatch.synchronized { perBatch += v.toSeq }
         }
@@ -1220,7 +1220,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .outputMode("update").start()
     try {
       src.addData(queryVecs.take(2): _*); q.processAllAvailable()
-      VectorIndexStore.delete(spark, dir,
+      V.delete(spark, dir,
         emb.select(col("vec_id")).filter(col("vec_id") % 7 === 3 && col("vec_id") >= 4))
       src.addData(queryVecs.drop(2): _*); q.processAllAvailable()
     } finally q.stop()
@@ -1232,8 +1232,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val fresh = graft.operators.Similarity.ivfPqSearchFrames(
       emb.filter(col("vec_id") >= 2 && col("vec_id") < 4)
         .select(col("vec_id").as("qid"), col("embedding").cast("array<double>").as("emb")),
-      VectorIndexStore.centroids(spark, dir), VectorIndexStore.codebooks(spark, dir),
-      VectorIndexStore.liveCodes(spark, dir).filter(col("vec_id") >= 4), 4, 10, 8)
+      V.centroids(spark, dir), V.codebooks(spark, dir),
+      V.liveCodes(spark, dir).filter(col("vec_id") >= 4), 4, 10, 8)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
     assert(perBatch(1).sortBy(r => (r._1, r._2)) == fresh.sortBy(r => (r._1, r._2)),
       "post-delete batch must equal a fresh live-view search")
@@ -1317,7 +1317,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("S22: exactly-once streaming ingest into the versioned lexical index — replayed batches are version no-ops") {
     implicit val sql = spark.sqlContext
     import spark.implicits._
-    import graft.sources.{Tables, TextIndexStore, VersionedTextIndex => V}
+    import graft.sources.{Tables, VersionedTextIndex => V}
     // The transactional streaming sink: foreachBatch re-delivers the
     // last batch after failure-recovery, and the manifest's own
     // lastBatchId (carried in meta, atomically with the data) turns
@@ -1354,11 +1354,11 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // The streamed store scores exactly like a from-scratch index over
     // everything — postings AND stats arrived exactly once.
     val d2 = java.nio.file.Files.createTempDirectory("graft_s22_ref").toString
-    TextIndexStore.build(docs, d2, 8)
+    V.build(docs, d2, 8)
     val terms = Seq("spark", "join", "window")
     val got = V.bm25(spark, dir, terms, 20)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
-    val want = graft.operators.TextAnalysis.bm25Stored(spark, d2, terms, 20, 8)
+    val want = V.bm25(spark, d2, terms, 20)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
     assert(got == want,
       "exactly-once streamed ingest must equal a from-scratch build over the full corpus")
@@ -1367,7 +1367,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("S23: streaming upsert (CDC document revisions) — exactly-once, last-write-wins across batches, equals a from-scratch patched build") {
     implicit val sql = spark.sqlContext
     import spark.implicits._
-    import graft.sources.{Tables, TextIndexStore, VersionedTextIndex => V}
+    import graft.sources.{Tables, VersionedTextIndex => V}
     // A revision stream: each microbatch carries REPLACEMENT documents
     // (the CDC shape), sunk through the one-commit upsert — no
     // delete-then-append window inside a batch, (appId, batchId) replay
@@ -1410,11 +1410,11 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
         .when(col("doc_id") % 5 === 1, expr("concat(text, ' spark spark')"))
         .otherwise(col("text")))
     val d2 = java.nio.file.Files.createTempDirectory("graft_s23_ref").toString
-    TextIndexStore.build(patched, d2, 8)
+    V.build(patched, d2, 8)
     val terms = Seq("spark", "join", "window")
     val got = V.bm25(spark, dir, terms, 20)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
-    val want = graft.operators.TextAnalysis.bm25Stored(spark, d2, terms, 20, 8)
+    val want = V.bm25(spark, d2, terms, 20)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
     assert(got == want,
       "streamed revisions must serve exactly like a from-scratch build over the last-revision corpus")
@@ -1956,12 +1956,12 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("S20: stored postings serve a term-set query stream ≡ batch, stateless") {
     implicit val sql = spark.sqlContext
     import spark.implicits._
-    import graft.sources.{Tables, TextIndexStore}
+    import graft.sources.{Tables, VersionedTextIndex => V}
     import graft.streaming.StreamingBm25Serve
     val docs = Tables.table(spark, "/root/testdata/sf0.001", "documents")
     val dir = java.nio.file.Files.createTempDirectory("graft_s20").toString
     val nBuckets = 16
-    TextIndexStore.build(docs, dir, nBuckets)
+    V.build(docs, dir, nBuckets)
     val queries = Seq(
       (0L, Seq("spark", "join", "window")),
       (1L, Seq("merge", "table")),
@@ -1972,7 +1972,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val src = MemoryStream[(Long, Seq[String])]
     val q = src.toDF().toDF("qid", "terms").writeStream
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        val v = StreamingBm25Serve.scoreBatch(b, dir, 10, nBuckets)
+        val v = StreamingBm25Serve.scoreBatch(b, dir, 10)
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3)))
         got.synchronized { got ++= v }
         ()
@@ -1983,7 +1983,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       src.addData(queries.drop(2): _*); q.processAllAvailable()
     } finally q.stop()
     val want = queries.flatMap { case (qid, terms) =>
-      graft.operators.TextAnalysis.bm25Stored(spark, dir, terms, 10, nBuckets)
+      V.bm25(spark, dir, terms, 10)
         .collect().map(r => (qid, r.getLong(0), r.getLong(2)))
     }
     assert(got.nonEmpty && want.nonEmpty)
@@ -1996,7 +1996,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("S20b: mid-stream lexical deletes disappear from the very next batch, model included") {
     implicit val sql = spark.sqlContext
     import spark.implicits._
-    import graft.sources.{Tables, TextIndexStore}
+    import graft.sources.{Tables, VersionedTextIndex => V}
     import graft.streaming.StreamingBm25Serve
     // The q101 takedown composed with the serving stream: scoreBatch
     // serves the LIVE view, so docs tombstoned between microbatches —
@@ -2005,7 +2005,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val docs = Tables.table(spark, "/root/testdata/sf0.001", "documents")
     val dir = java.nio.file.Files.createTempDirectory("graft_s20b").toString
     val nBuckets = 16
-    TextIndexStore.build(docs, dir, nBuckets)
+    V.build(docs, dir, nBuckets)
     val terms = Seq("spark", "join", "window")
     type R = (Long, Long, Long)
     val perBatch = scala.collection.mutable.ArrayBuffer.empty[Seq[R]]
@@ -2013,7 +2013,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val q = src.toDF().toDF("qid", "terms").writeStream
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
         if (b.count() > 0) {
-          val v = StreamingBm25Serve.scoreBatch(b, dir, 10, nBuckets)
+          val v = StreamingBm25Serve.scoreBatch(b, dir, 10)
             .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3)))
           perBatch.synchronized { perBatch += v.toSeq }
         }
@@ -2022,7 +2022,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .outputMode("update").start()
     try {
       src.addData((0L, terms)); q.processAllAvailable()
-      TextIndexStore.delete(spark, dir,
+      V.delete(spark, dir,
         docs.select(col("doc_id")).filter(col("doc_id") % 9 === 4))
       src.addData((1L, terms)); q.processAllAvailable()
     } finally q.stop()
@@ -2034,8 +2034,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // Not just membership: SCORES equal a from-scratch index over the
     // live corpus (df/n_docs/avgdl all retreated).
     val fresh = java.nio.file.Files.createTempDirectory("graft_s20b_fresh").toString
-    TextIndexStore.build(docs.filter(col("doc_id") % 9 =!= 4), fresh, nBuckets)
-    val want = graft.operators.TextAnalysis.bm25Stored(spark, fresh, terms, 10, nBuckets)
+    V.build(docs.filter(col("doc_id") % 9 =!= 4), fresh, nBuckets)
+    val want = V.bm25(spark, fresh, terms, 10)
       .collect().map(r => (1L, r.getLong(0), r.getLong(2))).toSeq
     assert(perBatch(1).sortBy(r => (r._1, r._2)) == want.sortBy(r => (r._1, r._2)),
       "post-delete serving must equal a from-scratch live-corpus index")

@@ -8,13 +8,16 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Similarity
 import graft.sources.{Tables, VersionedVectorIndex => V}
 
-/** Transactional contract of the manifest-versioned index (q107
-  * family): immutable data files + atomic manifest commits give
+/** Contract of the persisted, manifest-versioned ANN index (q89/q90/
+  * q98/q107 families): the store is train-once / serve-many — searches
+  * over the loaded artifacts equal the retrain-per-query path
+  * row-for-row, append admits new vectors WITHOUT touching the trained
+  * model or existing codes, and serving reads only the probed cells'
+  * code files. Immutable data files + atomic manifest commits give
   * snapshot isolation (a pinned reader is unaffected by later
   * append/delete/compact), crash-invisible partial writes, optimistic
   * conflict detection, time travel through compaction, and vacuum that
-  * reclaims only unreferenced files — while keeping the cid-partitioned
-  * serving layout's file-level pruning.
+  * reclaims only unreferenced files.
   */
 class VersionedStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -56,6 +59,20 @@ class VersionedStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   private lazy val store = freshLifecycle()
+
+  /** ADC search of the query batch over the live codes at `version`. */
+  private def search(dir: String, version: Long = V.Latest): Seq[org.apache.spark.sql.Row] =
+    Similarity.ivfPqSearchFrames(queries,
+      V.centroids(spark, dir, version), V.codebooks(spark, dir, version),
+      V.liveCodes(spark, dir, version).filter(col("vec_id") >= nQ),
+      nSub, k, nProbe).collect().toSeq
+
+  /** A fresh v0 over the whole corpus. */
+  private lazy val full = {
+    val d = Files.createTempDirectory("graft_verspec_full").toString
+    V.build(emb, d, nCents, nSub, nCodes, iters)
+    d
+  }
 
   private def codesSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Seq[Long])] =
     df.collect().map(r => (r.getLong(0), r.getLong(1),
@@ -103,16 +120,12 @@ class VersionedStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       V.centroids(spark, store, 1L), V.codebooks(spark, store, 1L),
       V.codes(spark, store, 1L).filter(col("vec_id") >= nQ),
       nSub, k, nProbe).collect().toSeq
-    // v1 ≡ the un-versioned appended store's answers (the q90b contract).
+    // v1 ≡ a fresh build-then-append store's answers (the q90b contract).
     val appended = {
       val d2 = Files.createTempDirectory("graft_verspec_ref").toString
-      graft.sources.VectorIndexStore.build(base, d2, nCents, nSub, nCodes, iters)
-      graft.sources.VectorIndexStore.append(spark, d2, rest)
-      Similarity.ivfPqSearchFrames(queries,
-        graft.sources.VectorIndexStore.centroids(spark, d2),
-        graft.sources.VectorIndexStore.codebooks(spark, d2),
-        graft.sources.VectorIndexStore.codes(spark, d2).filter(col("vec_id") >= nQ),
-        nSub, k, nProbe).collect().toSeq
+      V.build(base, d2, nCents, nSub, nCodes, iters)
+      V.append(spark, d2, rest)
+      search(d2)
     }
     assert(fromV1 == appended)
     // v2 (tombstone view) ≡ v3 (compacted) — compaction changes no answer.
@@ -178,16 +191,12 @@ class VersionedStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(V.snapshot(spark, d).op == "reindex" && V.currentVersion(spark, d) == 4L)
     assert(searchAt(3L) == oldModel,
       "the pinned pre-reindex version must keep serving the OLD model unchanged")
-    // The reindexed store ≡ a from-scratch un-versioned build on the
-    // live population (same kernels, same training input).
+    // The reindexed store ≡ a fresh v0 build on the live population
+    // (same kernels, same training input).
     val live = emb.filter(!(col("vec_id") % 7 === 3 && col("vec_id") >= nQ))
     val d2 = Files.createTempDirectory("graft_verspec_fresh").toString
-    graft.sources.VectorIndexStore.build(live, d2, nCents, nSub, nCodes, iters)
-    val fresh = Similarity.ivfPqSearchFrames(queries,
-      graft.sources.VectorIndexStore.centroids(spark, d2),
-      graft.sources.VectorIndexStore.codebooks(spark, d2),
-      graft.sources.VectorIndexStore.codes(spark, d2).filter(col("vec_id") >= nQ),
-      nSub, k, nProbe).collect().toSeq
+    V.build(live, d2, nCents, nSub, nCodes, iters)
+    val fresh = search(d2)
     assert(searchLatest() == fresh,
       "reindex-from-store must equal retraining from scratch on the live corpus")
   }
@@ -326,5 +335,124 @@ class VersionedStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select(input_file_name()).distinct().count()
     assert(oneCell < allFiles,
       s"a one-cell read must touch fewer files than the full scan ($oneCell vs $allFiles)")
+  }
+
+  test("stored-index search equals the retrain-per-query path row-for-row") {
+    val retrained = Similarity.ivfPqSearch(emb, nCents, nSub, nCodes, iters,
+      nQ, k, nProbe).collect().toSeq
+    assert(search(full) == retrained,
+      "a persisted index must answer exactly what the just-trained one answers")
+  }
+
+  test("append admits new vectors without retraining: model frozen, existing codes untouched") {
+    val d = Files.createTempDirectory("graft_verspec_app").toString
+    V.build(base, d, nCents, nSub, nCodes, iters)
+    val centsBefore = V.centroids(spark, d).orderBy("cid").collect().toSeq
+    val booksBefore = V.codebooks(spark, d).orderBy("m", "cid").collect().toSeq
+    val codesBefore = V.codes(spark, d).orderBy("vec_id").collect().toSeq
+    V.append(spark, d, rest)
+    assert(V.centroids(spark, d).orderBy("cid").collect().toSeq == centsBefore,
+      "append must not touch the coarse quantizer")
+    assert(V.codebooks(spark, d).orderBy("m", "cid").collect().toSeq == booksBefore,
+      "append must not touch the sub-codebooks")
+    val after = V.codes(spark, d).orderBy("vec_id").collect().toSeq
+    assert(after.filter(_.getLong(0) < 400) == codesBefore,
+      "existing code rows must be byte-stable under append")
+    val total = emb.count()
+    assert(after.length.toLong == total && after.map(_.getLong(0)).distinct.length.toLong == total,
+      "every vector coded exactly once after append")
+    // The appended rows are coded against the STORED model: re-encoding
+    // them from the stored artifacts reproduces them.
+    val expected = Similarity.encodeResiduals(
+      Similarity.residuals(Similarity.withEmb(rest), V.centroids(spark, d)),
+      V.codebooks(spark, d), nSub).orderBy("vec_id").collect().toSeq
+    assert(after.filter(_.getLong(0) >= 400).map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2)))
+      == expected.map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2))))
+  }
+
+  test("tombstone delete hides rows from serving without touching code files; compact preserves answers") {
+    val d = Files.createTempDirectory("graft_verspec_del").toString
+    V.build(emb, d, nCents, nSub, nCodes, iters)
+    def codeFiles(): Set[String] = V.codes(spark, d).inputFiles.toSet
+    val filesBefore = codeFiles()
+    val before = search(d)
+
+    // Tombstone ~1/7 of the corpus: serving flips to the live view,
+    // yet not one code file changed (deletion is metadata-only).
+    V.delete(spark, d, delIds)
+    val live = search(d)
+    assert(codeFiles() == filesBefore, "delete must not rewrite code files")
+    assert(live != before, "a 1/7 deletion must visibly reshape top-k on the fixture")
+    assert(!live.exists(r => r.getLong(2) % 7 == 3), "no tombstoned id may be served")
+
+    // Cell pruning SURVIVES the tombstone anti-join: a cid filter on
+    // the live view pushes below the join and lands on the parquet
+    // scan as a PARTITION filter — without this the takedown path
+    // would silently un-scale serving.
+    val pruned = V.liveCodes(spark, d).filter(col("cid").isin(0L, 1L))
+    val storeScans = pruned.queryExecution.sparkPlan.collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec
+          if f.relation.location.rootPaths.exists(_.toString.contains(d)) &&
+            f.requiredSchema.fieldNames.contains("codes") => f
+    }
+    assert(storeScans.nonEmpty)
+    assert(storeScans.forall(_.partitionFilters.exists(
+        _.references.exists(_.name == "cid"))),
+      s"cid filter must reach the scan's partition filters through the anti-join: " +
+        storeScans.map(_.partitionFilters).mkString(";"))
+
+    // Physical compaction: identical answers from the merged code
+    // segment, tombstones gone, exactly one file per cell.
+    V.compact(spark, d)
+    assert(search(d) == live, "compaction must not change a single answer")
+    assert(V.tombstones(spark, d).count() == 0)
+    val perCell = V.codes(spark, d)
+      .select(col("cid"), input_file_name().as("f"))
+      .distinct()
+      .groupBy("cid").count()
+      .collect()
+    assert(perCell.nonEmpty && perCell.forall(_.getLong(1) == 1L),
+      s"compaction must leave one file per cell: ${perCell.mkString(",")}")
+    // liveCodes degenerates to codes once tombstones are folded in.
+    assert(V.liveCodes(spark, d).count() == V.codes(spark, d).count())
+
+    // Compaction is IDEMPOTENT: a second pass over an already-compacted
+    // store must reproduce the same rows (a maintenance scheduler may
+    // fire it redundantly).
+    val snap = V.codes(spark, d).orderBy("vec_id").collect().toSeq
+    V.compact(spark, d)
+    assert(V.codes(spark, d).orderBy("vec_id").collect().toSeq == snap,
+      "double compaction must be a no-op on the rows")
+
+    // REVIVAL: re-ingesting tombstoned ids must serve them again with
+    // exactly ONE generation of codes — append folds deletions
+    // physically first, so the full-corpus ranking comes back.
+    val d2 = Files.createTempDirectory("graft_verspec_rev").toString
+    V.build(emb, d2, nCents, nSub, nCodes, iters)
+    V.delete(spark, d2, delIds)
+    V.append(spark, d2, emb.join(delIds, "vec_id"))
+    assert(V.tombstones(spark, d2).count() == 0,
+      "revival must clear the revived ids' tombstones")
+    val after2 = V.codes(spark, d2)
+    assert(after2.count() == after2.select("vec_id").distinct().count(),
+      "exactly one code generation per id after revival")
+    assert(search(d2) == before, "delete-then-reingest must restore the full-corpus ranking")
+  }
+
+  test("ADC serving never scans the float embedding column on the corpus side") {
+    val a = V.serving(spark, full)
+    assert(a.nSub == nSub, "nSub comes from the snapshot's recorded training parameters")
+    val q = Similarity.ivfPqSearchFrames(queries, a.centroids, a.codebooks,
+      a.liveCodes.filter(col("vec_id") >= nQ), a.nSub, k, nProbe)
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val storeScans = q.queryExecution.sparkPlan.collectLeaves().collect {
+      case f: FileSourceScanExec
+          if f.relation.location.rootPaths.exists(_.toString.contains(full)) =>
+        f.requiredSchema.fieldNames.toSet
+    }
+    assert(storeScans.nonEmpty, "the stored code table must be scanned")
+    storeScans.foreach(cols =>
+      assert(!cols.contains("emb") && !cols.contains("embedding"),
+        s"store scans must read codes only, got $cols"))
   }
 }
