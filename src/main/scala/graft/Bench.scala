@@ -163,16 +163,15 @@ object Bench {
   }
 
   // ------------------------------------------------------- sharding
-  /** Family key: the qNNN prefix — families share stores and, for the
-    * ANN build/serve pair (q89/q89b-d), an intra-family order, so a
-    * family never splits across shards. */
+  /** Family key: the qNNN prefix — families share stores (each shard
+    * JVM builds the stores its own queries read), so a family never
+    * splits across shards. */
   private def family(name: String): String =
     "q\\d+".r.findPrefixOf(name).getOrElse(name)
 
   /** Contiguous family-preserving split of the sorted query names into
     * `n` shards, balanced by reference cpu (a flat guess when a query
-    * has no reference yet). Contiguity preserves intra-family order
-    * across the whole run (q89_index_build still precedes q89b-d). */
+    * has no reference yet). */
   private def shardSlices(names: Seq[String], n: Int,
                           refCpu: Map[String, Double]): Seq[Seq[String]] = {
     val sorted = names.sorted
@@ -301,23 +300,19 @@ object Bench {
     val qs = mergeMap("queries")
     val total = sumD("value")
     val firstAttemptTotal = sumD("first_attempt_total_s")
-    // Provenance dedup across shards (every shard's warm-up touches the
-    // shared /tmp stores): "built" wins — if ANY shard paid the build,
-    // that cost is in the artifact somewhere.
-    val prov: Map[String, String] = shards.flatMap { s =>
-      Option(s.get("store_provenance")).toSeq.flatMap(node =>
-        node.fieldNames().asScala.map(n => n -> node.get(n).asText()).toSeq)
-    }.groupBy(_._1).map { case (k, vs) =>
-      k -> (if (vs.exists(_._2 == "built")) "built" else "reused")
-    }
-    val provenanceJson = prov.toSeq.sorted
-      .map { case (d, v) => "\"" + d + "\":\"" + v + "\"" }
+    // Fixture build seconds summed over the shards: each shard JVM
+    // builds the stores its own queries read.
+    val fixturesJson = shards.flatMap { s =>
+      Option(s.get("fixtures")).toSeq.flatMap(node =>
+        node.fieldNames().asScala.map(n => n -> node.get(n).asDouble()).toSeq)
+    }.groupBy(_._1).toSeq.sortBy(_._1)
+      .map { case (k, vs) => "\"" + k + "\":" + f"${vs.map(_._2).sum}%.3f" }
       .mkString("{", ",", "}")
     val jvmDiag = f""""jit_total_s":${sumD("jit_total_s")}%.3f,"codecache_end_mb":${lastD("codecache_end_mb")}%.1f,"codecache_max_mb":${lastD("codecache_max_mb")}%.0f,"metaspace_end_mb":${lastD("metaspace_end_mb")}%.1f,"calib_series":$calibSeries"""
     val common = f""""queries":$qs,"suspect":${mergeList("suspect")},"retried":${mergeList("retried")},"deferred":${mergeList("deferred")},"cpu_suspect":${mergeList("cpu_suspect")},"ref_suspect":${mergeList("ref_suspect")},"shard_reruns":$rerunsJson,"errors":$nErr,"error_names":${mergeList("error_names")},"calib_wall_s":${headD("calib_wall_s")}%.3f,"calib_cpu_s":${headD("calib_cpu_s")}%.3f,"total_cpu_s":${sumD("total_cpu_s")}%.3f,"total_gc_s":${sumD("total_gc_s")}%.3f,"first_attempt_total_s":$firstAttemptTotal%.3f,$jvmDiag,"shards":${shards.length},"cores":$cpus,"spark_version":"$sparkVersion","sf":"$sfDir""""
     val line = s"""{"metric":"total","unit":"sec",$common,"value":${f"$total%.3f"}}"""
     println(line)
-    val full = s"""{"metric":"total","unit":"sec",$common,"cpu_s":${mergeMap("cpu_s")},"gc_s":${mergeMap("gc_s")},"jit_s":${mergeMap("jit_s")},"codecache_mb":${mergeMap("codecache_mb")},"attempts":${mergeMap("attempts")},"first_attempt":${mergeMap("first_attempt")},"store_provenance":$provenanceJson,"value":${f"$total%.3f"}}"""
+    val full = s"""{"metric":"total","unit":"sec",$common,"cpu_s":${mergeMap("cpu_s")},"gc_s":${mergeMap("gc_s")},"jit_s":${mergeMap("jit_s")},"codecache_mb":${mergeMap("codecache_mb")},"attempts":${mergeMap("attempts")},"first_attempt":${mergeMap("first_attempt")},"fixtures":$fixturesJson,"value":${f"$total%.3f"}}"""
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/BENCH_LAST.json")), full + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] could not write BENCH_LAST.json: $e") }
@@ -380,85 +375,13 @@ object Bench {
     // Warm-up, untimed: one scan+shuffle query at the bench SF, plus the
     // typed-encoder/sync-fold and array-lambda paths at the smallest SF
     // (they have their own codegen/JIT surfaces the first query would
-    // otherwise be billed for).
+    // otherwise be billed for). Store builds are not warm-up: every
+    // query's fixtures are prepared untimed right before it runs.
     val warmSf = "/root/testdata/sf0.001"
     for (wq <- Seq("q06_pricing_summary" -> sfDir,
                    "q20_sync_replay" -> warmSf,
                    "q17b_minhash" -> warmSf,
-                   "q18_similarity_topk" -> warmSf,
-                   // One-time partitioned-layout ingests happen here so
-                   // the timed q01b / q64 / q94 measure the pruned scan,
-                   // not the write (writePartitioned / writeOnce /
-                   // StoreProvenance.once memoize). The ANN store is NOT warmed:
-                   // q89_index_build is the explicit timed build, and
-                   // q89b-d after it (name order) measure serving.
-                   "q01b_delta_pruned" -> sfDir,
-                   "q64_doc_lookup" -> sfDir,
-                   "q94_stored_bm25" -> sfDir,
-                   // The q98 deleted/compacted stores: their build is
-                   // the same training pipeline q89_index_build times
-                   // explicitly; the timed q98/q98b should measure
-                   // tombstone-view / compacted serving, not re-bill
-                   // the build.
-                   "q98_deleted_search" -> sfDir,
-                   "q98b_compacted_search" -> sfDir,
-                   "q101_deleted_bm25" -> sfDir,
-                   "q101b_compacted_bm25" -> sfDir,
-                   "q96_appended_bm25" -> sfDir,
-                   "q102_stored_lm" -> sfDir,
-                   "q104_appended_lm" -> sfDir,
-                   "q104b_deleted_lm" -> sfDir,
-                   "q104c_compacted_lm" -> sfDir,
-                   // The versioned store's lifecycle (build/append/
-                   // delete/compact commits) happens here so the timed
-                   // q107 queries measure manifest-resolved serving and
-                   // time travel, not maintenance; likewise the
-                   // reindexed store for q108b.
-                   "q107_version_history" -> sfDir,
-                   "q108b_reindexed_search" -> sfDir,
-                   "q109c_postings_history" -> sfDir,
-                   // The upserted lifecycles (text + ANN) and the three
-                   // z-order layouts: built here so the timed q111/q113/
-                   // q114/q115/q117 queries measure serving/pruned reads,
-                   // not store maintenance.
-                   "q111c_upsert_history" -> sfDir,
-                   "q111d_upserted_ann_search" -> sfDir,
-                   "q113_zorder_box" -> sfDir,
-                   "q114_layout_append" -> sfDir,
-                   "q114b_layout_optimized" -> sfDir,
-                   // The fact-store DML lifecycles (build/delete/upsert/
-                   // compact, rename/drop) happen here so the timed q140
-                   // queries measure manifest-resolved serving and time
-                   // travel, not store maintenance.
-                   // Round 14 (measurement fix, guide §1): q127's three
-                   // takedown builds move here too. Before, what the
-                   // timed q127 measured was store-provenance-dependent:
-                   // a fresh /tmp run billed builds+audit (r13: 7.96s),
-                   // while a retried run billed the audit alone against
-                   // the first attempt's memoized stores (r12: 78.8s
-                   // first attempt kept at 3.46s) — the same query name
-                   // timed two different computations round over round.
-                   // Warming the builds pins the timed q127 to the
-                   // audit-vs-restatement computation on every attempt,
-                   // the q98/q107/q140 store convention.
-                   "q127_erasure_audit" -> sfDir,
-                   "q140_fact_delete" -> sfDir,
-                   "q140f_fact_evolution" -> sfDir,
-                   "q140g_fact_rename_drop" -> sfDir,
-                   "q140i_fact_recluster" -> sfDir,
-                   // Round 12: the CTAS catalog table, the SQL-updated
-                   // lake, and the bucketed-mirror pair build here so
-                   // the timed queries measure the catalog read, the
-                   // updated serving, and the ZERO-EXCHANGE join — not
-                   // store/mirror construction.
-                   "q140r_fact_ctas" -> sfDir,
-                   "q140s_fact_sql_update" -> sfDir,
-                   "q140t_fact_storage_join" -> sfDir,
-                   // Round 13: the ALTER-DDL lineage and the full-MERGE
-                   // store build here, so the timed q140u/q140v measure
-                   // the evolved/merged lake's serving, not DDL/DML.
-                   "q140u_fact_alter_ddl" -> sfDir,
-                   "q140v_fact_merge_full" -> sfDir))
+                   "q18_similarity_topk" -> warmSf))
       try SparkEntry.queries(wq._1)(spark, wq._2).count()
       catch { case e: Throwable => System.err.println(s"[bench] warmup ${wq._1} failed: $e") }
     // Fixed-work CPU calibration: a constant amount of pure computation
@@ -546,12 +469,19 @@ object Bench {
         cpuSuspect = err.isEmpty && cpuInflated(name, wall, cpu),
         refSuspect = err.isEmpty && !accepted(name, wall, cpu),
         attempts, err)
+    val prepared = scala.collection.mutable.Set.empty[Fixture]
     val firstPass = selected.zipWithIndex.map { case ((name, fn), i) =>
       if (i > 0 && i % CalibEvery == 0) {
         val (cw, cc, drift) = runCalib()
         snapCalib(i, cw, cc, drift)
         System.err.println(f"[bench] calib@$i wall=$cw%.3fs cpu=$cc%.3fs codecache=${codeCacheUsedMb()}%.0fMB jitTotal=${jitMillis() / 1e3}%.1fs classes=${loadedClasses()} threads=${liveThreads()}")
       }
+      // The query's stores are built here, untimed (a failed build is
+      // retried — and billed — by the timed run, which then reports it).
+      val fixtures = SparkEntry.fixturesOf(name)
+      prepared ++= Fixtures.closure(fixtures)
+      try Fixtures.prepare(spark, sfDir, fixtures)
+      catch { case e: Throwable => System.err.println(s"[bench] $name fixtures FAILED: $e") }
       val (w1, c1, g1, j1, e1) = timeOnce(spark, name, fn, sfDir)
       e1.foreach(e => System.err.println(s"[bench] $name FAILED: $e"))
       val starved = e1.isEmpty && isSuspect(w1, c1)
@@ -619,12 +549,11 @@ object Bench {
     // from the attempts map.
     val firstAttemptTotal =
       results.collect { case r if r.err.isEmpty => r.attempts.head._1 }.sum
-    // Memoized-store provenance (built vs reused per store dir, this
-    // JVM): the round-12 verdict's cross-round interpretability action
-    // — a timed query over a store BUILT this run is paying lifecycle
-    // cost an earlier round's memoized run did not.
-    val provenanceJson = graft.sources.StoreProvenance.snapshot.toSeq.sorted
-      .map { case (d, v) => "\"" + d + "\":\"" + v + "\"" }
+    // Fixture build seconds (this JVM), one row per store the board
+    // read: the store cost no timed query carries.
+    val fixturesJson = prepared.toSeq.sortBy(_.name)
+      .flatMap(f => Fixtures.record(spark, sfDir, f)
+        .map(r => "\"" + f.name + "\":" + f"${r.seconds}%.3f"))
       .mkString("{", ",", "}")
     // Field ORDER is survivability engineering: the driver retains only a
     // tail of stdout, so the headline totals + environment stamp go LAST
@@ -637,7 +566,7 @@ object Bench {
     val jvmDiag = f""""jit_total_s":$totalJit%.3f,"codecache_end_mb":${codeCacheUsedMb()}%.1f,"codecache_max_mb":${codeCacheMaxMb()}%.0f,"metaspace_end_mb":${metaspaceUsedMb()}%.1f,"calib_series":$calibJson"""
     val line = f"""{"metric":"total","unit":"sec","queries":$qs,"suspect":$suspects,"retried":$retried,"deferred":$deferred,"cpu_suspect":$cpuSuspects,"ref_suspect":$refSuspects,"errors":$nErr,"error_names":$errNames,"calib_wall_s":$calibWall%.3f,"calib_cpu_s":$calibCpu%.3f,"total_cpu_s":$totalCpu%.3f,"total_gc_s":$totalGc%.3f,"first_attempt_total_s":$firstAttemptTotal%.3f,$jvmDiag,"cores":$cpus,"spark_version":"${spark.version}","sf":"$sfDir","value":$total%.3f}"""
     println(line)
-    val full = f"""{"metric":"total","unit":"sec","queries":$qs,"cpu_s":${numMap(_.cpu)},"gc_s":${numMap(_.gc)},"jit_s":${numMap(_.jit)},"codecache_mb":${numMap(_.ccMb)},"suspect":$suspects,"retried":$retried,"deferred":$deferred,"cpu_suspect":$cpuSuspects,"ref_suspect":$refSuspects,"attempts":$attemptsJson,"first_attempt":${numMap(_.attempts.head._1)},"store_provenance":$provenanceJson,"errors":$nErr,"error_names":$errNames,"calib_wall_s":$calibWall%.3f,"calib_cpu_s":$calibCpu%.3f,"total_cpu_s":$totalCpu%.3f,"total_gc_s":$totalGc%.3f,"first_attempt_total_s":$firstAttemptTotal%.3f,$jvmDiag,"cores":$cpus,"spark_version":"${spark.version}","sf":"$sfDir","value":$total%.3f}"""
+    val full = f"""{"metric":"total","unit":"sec","queries":$qs,"cpu_s":${numMap(_.cpu)},"gc_s":${numMap(_.gc)},"jit_s":${numMap(_.jit)},"codecache_mb":${numMap(_.ccMb)},"suspect":$suspects,"retried":$retried,"deferred":$deferred,"cpu_suspect":$cpuSuspects,"ref_suspect":$refSuspects,"attempts":$attemptsJson,"first_attempt":${numMap(_.attempts.head._1)},"fixtures":$fixturesJson,"errors":$nErr,"error_names":$errNames,"calib_wall_s":$calibWall%.3f,"calib_cpu_s":$calibCpu%.3f,"total_cpu_s":$totalCpu%.3f,"total_gc_s":$totalGc%.3f,"first_attempt_total_s":$firstAttemptTotal%.3f,$jvmDiag,"cores":$cpus,"spark_version":"${spark.version}","sf":"$sfDir","value":$total%.3f}"""
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/BENCH_LAST.json")), full + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] could not write BENCH_LAST.json: $e") }

@@ -4,8 +4,8 @@ package graft
   * for a comma-separated list of declared queries to one file each —
   * the `plans/r<n>/<query>_{before,after}.txt` artifacts the
   * optimization rounds commit. Plans only; no query is executed beyond
-  * what plan CONSTRUCTION itself runs (trained-model loops and *Once
-  * store ensures run eagerly inside some query builders by design).
+  * what plan CONSTRUCTION itself runs (trained-model loops inside some
+  * query builders, and the store fixtures a query declares).
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> <suffix> <q1,q2,...>
   */

@@ -42,24 +42,6 @@ object DocStore {
       .mode("overwrite")
       .parquet(outDir)
 
-  /** [[write]] once per (outDir, span) per JVM — the layout is a pure
-    * function of its inputs, and query paths against it (q64) should
-    * measure the pruned lookup, not re-ingestion (same idempotence
-    * contract as [[EventLogStore.writePartitioned]]).
-    */
-  def writeOnce(docs: DataFrame, outDir: String, span: Long): Unit = {
-    val key = (outDir, span)
-    if (!written.contains(key)) synchronized {
-      if (!written.contains(key)) {
-        StoreProvenance.built(outDir)
-        write(docs, outDir, span)
-        written += key
-      }
-    } else StoreProvenance.reused(outDir)
-  }
-
-  private val written = scala.collection.mutable.Set.empty[(String, Long)]
-
   /** The stored corpus (canonical column set, bucket column retained). */
   def read(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(dir)

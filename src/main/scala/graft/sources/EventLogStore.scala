@@ -33,31 +33,17 @@ object EventLogStore {
     * time-partitioned log. `repartition` by bucket bounds files-per-
     * partition; the in-partition sort gives row-group stats their
     * pruning power.
-    *
-    * Idempotent per JVM: the layout is a pure function of (input dir,
-    * bucket), so repeat calls with the same arguments skip the rewrite —
-    * the layout is ingest-time storage, written once, and queries
-    * against it (q01b) should measure the pruned scan, not re-ingest.
     */
-  def writePartitioned(events: DataFrame, outDir: String, bucketUs: Long): Unit = {
-    val key = (outDir, bucketUs)
-    if (!written.contains(key)) synchronized {
-      if (!written.contains(key)) {
-        events
-          .select(rowCols.map(col): _*)
-          .withColumn("t_bucket", expr(s"ts_us div ${bucketUs}L"))
-          .repartition(col("t_bucket"))
-          .sortWithinPartitions("ts_us", "event_id")
-          .write
-          .partitionBy("t_bucket")
-          .mode("overwrite")
-          .parquet(outDir)
-        written += key
-      }
-    }
-  }
-
-  private val written = scala.collection.mutable.Set.empty[(String, Long)]
+  def writePartitioned(events: DataFrame, outDir: String, bucketUs: Long): Unit =
+    events
+      .select(rowCols.map(col): _*)
+      .withColumn("t_bucket", expr(s"ts_us div ${bucketUs}L"))
+      .repartition(col("t_bucket"))
+      .sortWithinPartitions("ts_us", "event_id")
+      .write
+      .partitionBy("t_bucket")
+      .mode("overwrite")
+      .parquet(outDir)
 
   /** Incremental append: a batch of new events lands in its buckets as
     * ADDITIONAL files — history is never rewritten (the object-store

@@ -594,7 +594,7 @@ object FactStore {
     * columns, constraints — must be identical for a rebase to be safe. */
   private def coreMeta(m: Map[String, String]): Map[String, String] =
     m.filterNot { case (k, _) =>
-      k == "colmap" || k == "colretired" || k.startsWith("lastBatchId.") }
+      k == "colmap" || k == "colretired" || k.startsWith(M.BatchIdPrefix) }
 
   private def commitAppendRebasing(spark: SparkSession, dir: String,
                                    firstPrior: M.Snapshot, firstSeg: M.Segment,
@@ -663,11 +663,7 @@ object FactStore {
     * rows in the lake. */
   def appendStreamBatch(spark: SparkSession, dir: String, df: DataFrame,
                         nFiles: Int, batchId: Long, appId: String = "stream"): Long = synchronized {
-    require(!appId.contains(' ') && appId.nonEmpty, "appId must be a non-empty string")
-    val key = s"lastBatchId.$appId"
-    val last = M.snapshot(spark, dir).meta.get(key).map(_.toLong).getOrElse(-1L)
-    if (batchId <= last) M.currentVersion(spark, dir)
-    else appendImpl(spark, dir, df, nFiles, Map(key -> batchId.toString))
+    M.exactlyOnce(spark, dir, batchId, appId)(appendImpl(spark, dir, df, nFiles, _))
   }
 
   /** Exactly-once streaming CDC MERGE: the replay guard over
@@ -676,11 +672,7 @@ object FactStore {
     * batches, and a crash-replayed batch is a version no-op. */
   def upsertStreamBatch(spark: SparkSession, dir: String, df: DataFrame,
                         nFiles: Int, batchId: Long, appId: String = "stream"): Long = synchronized {
-    require(!appId.contains(' ') && appId.nonEmpty, "appId must be a non-empty string")
-    val key = s"lastBatchId.$appId"
-    val last = M.snapshot(spark, dir).meta.get(key).map(_.toLong).getOrElse(-1L)
-    if (batchId <= last) M.currentVersion(spark, dir)
-    else upsertImpl(spark, dir, df, nFiles, Map(key -> batchId.toString))
+    M.exactlyOnce(spark, dir, batchId, appId)(upsertImpl(spark, dir, df, nFiles, _))
   }
 
   /** INSERT OVERWRITE: replace the table's live rows with `df` in ONE
@@ -894,11 +886,7 @@ object FactStore {
   def mergeStreamBatch(spark: SparkSession, dir: String, source: DataFrame,
                        nFiles: Int, clauses: Seq[MergeClause], batchId: Long,
                        appId: String = "stream"): Long = synchronized {
-    require(!appId.contains(' ') && appId.nonEmpty, "appId must be a non-empty string")
-    val key = s"lastBatchId.$appId"
-    val last = M.snapshot(spark, dir).meta.get(key).map(_.toLong).getOrElse(-1L)
-    if (batchId <= last) M.currentVersion(spark, dir)
-    else mergeImpl(spark, dir, source, nFiles, clauses, Map(key -> batchId.toString))
+    M.exactlyOnce(spark, dir, batchId, appId)(mergeImpl(spark, dir, source, nFiles, clauses, _))
   }
 
   private def mergeImpl(spark: SparkSession, dir: String, source: DataFrame,
@@ -1818,19 +1806,5 @@ object FactStore {
     def logical(p: String): String = cm.find(_._1 == p).map(_._2).getOrElse(p)
     (logical(snap.meta("keyCol")),
       snap.meta("statsCols").split(' ').toSeq.filter(_.nonEmpty).map(logical))
-  }
-
-  // ------------------------------------------------ memoized lifecycle
-
-  /** Build-once guard (the [[SkippingStore.writeOnce]] convention),
-    * keyed on the lifecycle's TERMINAL version so a half-built store
-    * (crashed mid-lifecycle, earlier versions committed) is rebuilt
-    * rather than silently served. `make` must start with [[build]]
-    * (which wipes the dir). */
-  def lifecycleOnce(spark: SparkSession, dir: String, finalVersion: Long)
-                   (make: => Unit): Unit = synchronized {
-    if (M.currentVersion(spark, dir) != finalVersion) {
-      StoreProvenance.built(dir); make
-    } else StoreProvenance.reused(dir)
   }
 }

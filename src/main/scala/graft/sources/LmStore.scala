@@ -183,55 +183,4 @@ object LmStore {
   /** The one-row token total (n_total). */
   def stats(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/stats")
-
-  /** [[build]] once per (dir, nBuckets) per JVM (the store-family
-    * idempotence contract).
-    */
-  def buildOnce(docs: DataFrame, dir: String, nBuckets: Int): Unit = synchronized {
-    val key = (dir, nBuckets)
-    if (!built.contains(key)) {
-      StoreProvenance.built(dir)
-      build(docs, dir, nBuckets)
-      built += key
-    } else StoreProvenance.reused(dir)
-  }
-
-  /** Build-on-base + append-the-rest, once per JVM. */
-  def buildAppendedOnce(spark: SparkSession, dir: String, baseDocs: DataFrame,
-                        newDocs: DataFrame, nBuckets: Int): Unit = synchronized {
-    val key = (dir, nBuckets)
-    if (!appended.contains(key)) {
-      build(baseDocs, dir, nBuckets)
-      append(spark, dir, newDocs, nBuckets)
-      appended += key
-    }
-  }
-
-  /** Build + negative-segment delete, once per JVM. */
-  def buildDeletedOnce(spark: SparkSession, dir: String, docs: DataFrame,
-                       delDocs: DataFrame, nBuckets: Int): Unit = synchronized {
-    val key = (dir, nBuckets)
-    if (!deletedBuilt.contains(key)) {
-      build(docs, dir, nBuckets)
-      deleteDocs(spark, dir, delDocs, nBuckets)
-      deletedBuilt += key
-    }
-  }
-
-  /** Build + delete + [[compact]], once per JVM. */
-  def buildCompactedOnce(spark: SparkSession, dir: String, docs: DataFrame,
-                         delDocs: DataFrame, nBuckets: Int): Unit = synchronized {
-    val key = (dir, nBuckets)
-    if (!compacted.contains(key)) {
-      build(docs, dir, nBuckets)
-      deleteDocs(spark, dir, delDocs, nBuckets)
-      compact(spark, dir)
-      compacted += key
-    }
-  }
-
-  private val built = scala.collection.mutable.Set.empty[(String, Int)]
-  private val appended = scala.collection.mutable.Set.empty[(String, Int)]
-  private val deletedBuilt = scala.collection.mutable.Set.empty[(String, Int)]
-  private val compacted = scala.collection.mutable.Set.empty[(String, Int)]
 }

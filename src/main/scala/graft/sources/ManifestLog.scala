@@ -47,6 +47,28 @@ object ManifestLog {
   /** Sentinel for "latest committed version". */
   val Latest: Long = -1L
 
+  /** Meta-key prefix of the per-`appId` streaming replay cursors. */
+  val BatchIdPrefix = "lastBatchId."
+
+  /** The exactly-once guard of every `*StreamBatch` writer: the
+    * manifest meta carries the last applied batch id per `appId`
+    * (`lastBatchId.<appId>`), so a re-delivered batch (`batchId` at or
+    * below the recorded one) is a version no-op returning the current
+    * version; a new one runs `commit` with the meta entry its commit
+    * must carry. An `appId` is non-empty, with no whitespace or control
+    * characters — it is part of a meta key.
+    */
+  def exactlyOnce(spark: SparkSession, dir: String, batchId: Long, appId: String)
+                 (commit: Map[String, String] => Long): Long = {
+    require(appId.nonEmpty && !appId.exists(c =>
+        Character.isWhitespace(c) || Character.isSpaceChar(c) || Character.isISOControl(c)),
+      "appId must be non-empty, with no whitespace or control characters")
+    val key = BatchIdPrefix + appId
+    val last = snapshot(spark, dir).meta.get(key).map(_.toLong).getOrElse(-1L)
+    if (batchId <= last) currentVersion(spark, dir)
+    else commit(Map(key -> batchId.toString))
+  }
+
   def fs(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 

@@ -412,44 +412,4 @@ object SkippingStore {
     if (kept.isEmpty) readAll(spark, dir).where(lit(false))
     else spark.read.parquet(kept.map(f => s"$dir/$f"): _*).where(pred)
   }
-
-  /** Idempotent-per-JVM write (the `*Once` store convention). */
-  def writeOnce(df: DataFrame, dir: String, orderCols: Seq[String],
-                nFiles: Int, bloomCols: Seq[String] = Seq.empty): Unit = synchronized {
-    val key = (dir, (orderCols ++ bloomCols).mkString(","), nFiles, "write")
-    if (!written.contains(key)) {
-      StoreProvenance.built(dir)
-      write(df, dir, orderCols, nFiles, bloomCols = bloomCols)
-      written += key
-    } else StoreProvenance.reused(dir)
-  }
-
-  /** The q114 pre-optimize state, idempotent per JVM: base write plus
-    * one appended batch — sound but box-loosened pruning.
-    */
-  def lifecycleAppendedOnce(baseDf: DataFrame, batchDf: DataFrame, dir: String,
-                            orderCols: Seq[String], nFiles: Int): Unit = synchronized {
-    val key = (dir, orderCols.mkString(","), nFiles, "app")
-    if (!written.contains(key)) {
-      write(baseDf, dir, orderCols, nFiles)
-      append(baseDf.sparkSession, dir, batchDf, math.max(1, nFiles / 4))
-      written += key
-    }
-  }
-
-  /** The q114 lifecycle, idempotent per JVM: base write on `baseDf`,
-    * one appended batch, then OPTIMIZE back to one generation.
-    */
-  def lifecycleOptimizedOnce(baseDf: DataFrame, batchDf: DataFrame, dir: String,
-                             orderCols: Seq[String], nFiles: Int): Unit = synchronized {
-    val key = (dir, orderCols.mkString(","), nFiles, "opt")
-    if (!written.contains(key)) {
-      write(baseDf, dir, orderCols, nFiles)
-      append(baseDf.sparkSession, dir, batchDf, math.max(1, nFiles / 4))
-      optimize(baseDf.sparkSession, dir, nFiles)
-      written += key
-    }
-  }
-
-  private val written = scala.collection.mutable.Set.empty[(String, String, Int, String)]
 }

@@ -75,33 +75,34 @@ object VersionedTextIndex {
       .withColumn("words", split(col("text"), " "))
       .withColumn("dl", size(col("words")).cast("long"))
 
-  /** The postings frame (term, doc_id, dl, tf, t_bucket) — the ONE
-    * definition of the bucketing formula; [[bucketOf]] is its Scala
+  /** (term, doc_id, dl, positions, t_bucket): per (term, doc) the
+    * SORTED 0-based token offsets of every occurrence — the ONE
+    * tokenized, grouped frame both doc segments derive from, and the
+    * ONE definition of the bucketing formula; [[bucketOf]] is its Scala
     * twin, and a drift between them would silently prune the wrong
     * buckets at serve time.
     */
-  private def postingsFrame(docs: DataFrame, nBuckets: Int): DataFrame =
+  private def termsFrame(docs: DataFrame, nBuckets: Int): DataFrame =
     docLengths(docs)
-      .select(col("doc_id"), col("dl"), explode(col("words")).as("term"))
+      .select(col("doc_id"), col("dl"), posexplode(col("words")).as(Seq("pos", "term")))
       .groupBy("term", "doc_id", "dl")
-      .agg(count(lit(1)).as("tf"))
-      .withColumn("t_bucket", pmod(expr(hash48("term")), lit(nBuckets.toLong)))
-
-  /** Positional postings (term, doc_id, positions, t_bucket): per
-    * (term, doc) the SORTED 0-based token offsets of every occurrence,
-    * bucketed by the SAME formula as the postings so a phrase query's
-    * terms file-prune exactly as BM25's do. A separate segment kind,
-    * not a postings column, because offsets are the heavy payload (Σtf
-    * longs vs one tf per row) and frequency-only queries must not scan
-    * past them. `size(positions) == tf` by construction — both derive
-    * from [[docLengths]]'s split.
-    */
-  private def positionsFrame(docs: DataFrame, nBuckets: Int): DataFrame =
-    docLengths(docs)
-      .select(col("doc_id"), posexplode(col("words")).as(Seq("pos", "term")))
-      .groupBy("term", "doc_id")
       .agg(sort_array(collect_list(col("pos").cast("long"))).as("positions"))
       .withColumn("t_bucket", pmod(expr(hash48("term")), lit(nBuckets.toLong)))
+
+  /** The postings frame (term, doc_id, dl, tf, t_bucket): postings are
+    * positions with `tf = size(positions)`. */
+  private def postingsFrame(terms: DataFrame): DataFrame =
+    terms.select(col("term"), col("doc_id"), col("dl"),
+      size(col("positions")).cast("long").as("tf"), col("t_bucket"))
+
+  /** Positional postings (term, doc_id, positions, t_bucket), bucketed
+    * like the postings so a phrase query's terms file-prune exactly as
+    * BM25's do. A separate segment kind, not a postings column, because
+    * offsets are the heavy payload (Σtf longs vs one tf per row) and
+    * frequency-only queries must not scan past them.
+    */
+  private def positionsFrame(terms: DataFrame): DataFrame =
+    terms.select(col("term"), col("doc_id"), col("positions"), col("t_bucket"))
 
   /** The bucket a term's rows live in — the Scala twin of the build's
     * `hash48(term) mod nBuckets` (VersionedTextIndexSpec pins the
@@ -129,12 +130,13 @@ object VersionedTextIndex {
     * concurrently.
     */
   private def writeDocSegments(spark: SparkSession, dir: String, v: Long, op: String,
-                               docs: DataFrame, nBuckets: Int): Seq[Segment] =
+                               docs: DataFrame, nBuckets: Int): Seq[Segment] = {
+    val terms = termsFrame(docs, nBuckets)
     ParallelSteps.run(
-      () => writeBucketedSegment(spark, dir, segName(v, op), "postings",
-        postingsFrame(docs, nBuckets)),
+      () => writeBucketedSegment(spark, dir, segName(v, op), "postings", postingsFrame(terms)),
       () => writeBucketedSegment(spark, dir, segName(v, s"$op-pos"), "positions",
-        positionsFrame(docs, nBuckets)))
+        positionsFrame(terms)))
+  }
 
   private def writeStatsSegment(spark: SparkSession, dir: String, name: String,
                                 nDocs: Long, totalDl: Long): Segment = {
@@ -437,11 +439,7 @@ object VersionedTextIndex {
     */
   def appendStreamBatch(spark: SparkSession, dir: String, newDocs: DataFrame,
                         batchId: Long, appId: String = "stream"): Long = synchronized {
-    require(!appId.contains('\u0000') && appId.nonEmpty, "appId must be a non-empty string")
-    val key = s"lastBatchId.$appId"
-    val last = snapshot(spark, dir).meta.get(key).map(_.toLong).getOrElse(-1L)
-    if (batchId <= last) currentVersion(spark, dir)
-    else appendImpl(spark, dir, newDocs, Map(key -> batchId.toString))
+    M.exactlyOnce(spark, dir, batchId, appId)(appendImpl(spark, dir, newDocs, _))
   }
 
   private def appendImpl(spark: SparkSession, dir: String, newDocs: DataFrame,
@@ -494,11 +492,7 @@ object VersionedTextIndex {
     */
   def upsertStreamBatch(spark: SparkSession, dir: String, docs: DataFrame,
                         batchId: Long, appId: String = "stream"): Long = synchronized {
-    require(!appId.contains(' ') && appId.nonEmpty, "appId must be a non-empty string")
-    val key = s"lastBatchId.$appId"
-    val last = snapshot(spark, dir).meta.get(key).map(_.toLong).getOrElse(-1L)
-    if (batchId <= last) currentVersion(spark, dir)
-    else upsertImpl(spark, dir, docs, Map(key -> batchId.toString))
+    M.exactlyOnce(spark, dir, batchId, appId)(upsertImpl(spark, dir, docs, _))
   }
 
   private def upsertImpl(spark: SparkSession, dir: String, docs: DataFrame,

@@ -418,8 +418,14 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     // Window specs must always carry a partitionBy: an empty Partition
     // spec collapses the relation into one task (round-1's q10/q20
     // scale-killer). Checked across every registered query.
-    for ((name, fn) <- SparkEntry.queries) {
+    // The same loop pins fixture completeness: once a query's declared
+    // fixtures are prepared, its builder builds nothing — a store read
+    // left undeclared would otherwise bill its build to a timed query.
+    for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
+      Fixtures.prepare(spark, sf, SparkEntry.fixturesOf(name))
+      val builds = Fixtures.builds
       val p = fn(spark, sf).queryExecution.sparkPlan.toString
+      assert(Fixtures.builds == builds, s"$name builds a fixture it does not declare")
       val bad = "Window \\[[^\\]]*\\], \\[\\]".r.findFirstIn(p)
       assert(bad.isEmpty, s"$name has an un-partitioned window: $bad")
     }

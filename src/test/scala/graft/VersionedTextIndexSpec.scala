@@ -293,6 +293,29 @@ class VersionedTextIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("postings and positions segments keep their parquet file schemas") {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.schema.Type
+    def describe(t: Type): String =
+      if (t.isPrimitive) s"${t.getRepetition} ${t.getName} ${t.asPrimitiveType.getPrimitiveTypeName}"
+      else s"${t.getRepetition} ${t.getName} " +
+        t.asGroupType.getFields.toArray(Array.empty[Type]).map(describe).mkString("(", ", ", ")")
+    def fileSchema(kind: String): Seq[String] = {
+      val seg = V.snapshot(spark, full).segments.find(_.kind == kind).get
+      val path = new org.apache.hadoop.fs.Path(s"$full/${seg.dir}/${seg.files.head}")
+      val r = ParquetFileReader.open(
+        HadoopInputFile.fromPath(path, spark.sparkContext.hadoopConfiguration))
+      try r.getFooter.getFileMetaData.getSchema.getFields.toArray(Array.empty[Type])
+        .map(describe).toSeq
+      finally r.close()
+    }
+    assert(fileSchema("postings") == Seq("REQUIRED term BINARY", "OPTIONAL doc_id INT64",
+      "OPTIONAL dl INT64", "REQUIRED tf INT64"))
+    assert(fileSchema("positions") == Seq("REQUIRED term BINARY", "OPTIONAL doc_id INT64",
+      "REQUIRED positions (REPEATED list (REQUIRED element INT64))"))
+  }
+
   test("a query's postings scan prunes unqueried buckets at FILE level") {
     val p = V.postings(spark, full)
     val all = filesTouched(p)

@@ -19,9 +19,10 @@ inflates the 2x acceptance bar. Two mechanisms:
     recorded in ``drift_notes`` (and printed) — the ratchet can rise,
     but never silently.
 
-The run's ``store_provenance`` (built vs reused per memoized /tmp
-store) rides along so cross-round per-query comparisons against this
-reference are interpretable.
+The run's ``fixtures`` row (build seconds per /tmp store, prepared
+untimed before the queries that read it) rides along so cross-round
+per-query comparisons against this reference are interpretable: no
+query's wall carries a store build.
 
 Usage: python3 tools/mkref.py [in=BENCH_LAST.json] [out=BENCH_REF.json]
 """
@@ -90,7 +91,7 @@ ref = {
     "cpu_hist": {k: [round(x, 3) for x in v] for k, v in sorted(cpu_hist.items())},
     "wall_hist": {k: [round(x, 3) for x in v] for k, v in sorted(wall_hist.items())},
     "drift_notes": drift_notes,
-    "store_provenance": a.get("store_provenance", {}),
+    "fixtures": a.get("fixtures", {}),
 }
 json.dump(ref, open(out, "w"), indent=1)
 print(f"wrote {out}: {len(cpu)} query references, calib {ref['calib_cpu_s']}")
