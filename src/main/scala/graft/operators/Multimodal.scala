@@ -162,7 +162,7 @@ object Multimodal {
     ingest(blobs).write.mode("overwrite").parquet(path)
 
   def readBlobStore(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    graft.sources.Parquet.read(spark, path)
 
   /** Deterministic tiny REAL PNGs: image `id` is (8 + id·37 mod 24) ×
     * (8 + id·53 mod 24) pixels of gray v(x,y) = (7x + 13y + id) mod 256,

@@ -44,7 +44,7 @@ object DocStore {
 
   /** The stored corpus (canonical column set, bucket column retained). */
   def read(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir)
+    Parquet.read(spark, dir)
 
   /** Id-range lookup over the partitioned layout. The bucket range is
     * implied by the row predicate but Catalyst does not infer it across

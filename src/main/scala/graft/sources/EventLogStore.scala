@@ -97,7 +97,7 @@ object EventLogStore {
       val prevMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
       spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
       try {
-        spark.read.parquet(outDir)
+        Parquet.read(spark, outDir)
           .filter(col("t_bucket").isin(oversize.keys.toSeq: _*))
           .withColumn("_nf", element_at(typedlit(oversize), col("t_bucket")))
           .withColumn("_slice",
@@ -147,7 +147,7 @@ object EventLogStore {
       bucketUs: Long): DataFrame = {
     val loBucket = (lastKnownUs + 1) / bucketUs
     val hiBucket = serverTUs / bucketUs
-    spark.read.parquet(dir)
+    Parquet.read(spark, dir)
       .filter(
         col("t_bucket") >= loBucket && col("t_bucket") <= hiBucket &&
           col("ts_us") > lastKnownUs && col("ts_us") <= serverTUs)

@@ -354,9 +354,7 @@ object FactStore {
     val out = f.create(new Path(s"$dir/$name/_filestats.json"), false)
     try out.write(mapper.writerWithDefaultPrettyPrinter()
       .writeValueAsString(root).getBytes("UTF-8")) finally out.close()
-    val files = M.listParquet(f, new Path(s"$dir/$name"))
-    val rows = if (files.isEmpty) 0L else spark.read.parquet(s"$dir/$name").count()
-    M.Segment("data", name, files, rows)
+    M.segment(spark, dir, "data", name)
   }
 
   private def writeTombSegment(spark: SparkSession, dir: String, name: String,
@@ -364,9 +362,7 @@ object FactStore {
     val segDir = s"$dir/$name"
     keys.select(col(keyCol).cast("long").as(keyCol)).distinct()
       .coalesce(1).write.mode("overwrite").parquet(segDir)
-    val files = M.listParquet(M.fs(spark, dir), new Path(segDir))
-    val rows = if (files.isEmpty) 0L else spark.read.parquet(segDir).count()
-    M.Segment("tomb", name, files, rows)
+    M.segment(spark, dir, "tomb", name)
   }
 
   // --------------------------------------------------------- mutations
@@ -1189,7 +1185,7 @@ object FactStore {
         case Some(t) =>
           val tt = t.select(col(keyCol).as("_t_key"), col("_tomb_v"))
           dataSegs.map { s =>
-            spark.read.parquet(s.files.map(f => s"$dir/${s.dir}/$f"): _*)
+            Parquet.read(spark, s.files.map(f => s"$dir/${s.dir}/$f"))
               .select(col(keyCol))
               .withColumn("_seg", lit(s.dir))
               .withColumn("_seg_v", lit(M.createdVersion(s)))
@@ -1454,7 +1450,7 @@ object FactStore {
   private def readScopedTolerant(spark: SparkSession, dir: String,
                                  segs: Seq[M.Segment], vCol: String): Option[DataFrame] = {
     val frames = segs.filter(s => s.kind == "data" && s.files.nonEmpty).map { s =>
-      spark.read.parquet(s.files.map(f => s"$dir/${s.dir}/$f"): _*)
+      Parquet.read(spark, s.files.map(f => s"$dir/${s.dir}/$f"))
         .withColumn(vCol, lit(M.createdVersion(s)))
     }
     frames.reduceOption(_.unionByName(_, allowMissingColumns = true))
@@ -1490,7 +1486,7 @@ object FactStore {
   private def emptyLike(spark: SparkSession, dir: String, snap: M.Snapshot): DataFrame = {
     val anySeg = snap.segments.find(_.kind == "data")
     require(anySeg.isDefined, s"fact store at $dir has no data segments")
-    applyWiden(spark.read.parquet(s"$dir/${anySeg.get.dir}").where(lit(false)),
+    applyWiden(Parquet.read(spark, s"$dir/${anySeg.get.dir}").where(lit(false)),
       widenedOf(snap))
   }
 

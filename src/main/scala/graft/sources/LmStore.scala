@@ -93,7 +93,7 @@ object LmStore {
   def deletedIds(spark: SparkSession, dir: String): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/deleted_ids")
     if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      spark.read.parquet(s"$dir/deleted_ids")
+      Parquet.read(spark, s"$dir/deleted_ids")
     else {
       import spark.implicits._
       spark.emptyDataset[Long].toDF("doc_id")
@@ -105,7 +105,7 @@ object LmStore {
     val p = new Path(s"$dir/deleted_ids")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return
-    val led = spark.read.parquet(p.toString)
+    val led = Parquet.read(spark, p.toString)
     if (led.join(broadcast(ids), Seq("doc_id"), "left_semi").isEmpty) return
     val tmp = new Path(s"$dir/deleted_ids_rewriting")
     fs.delete(tmp, true)
@@ -167,7 +167,7 @@ object LmStore {
       .write.partitionBy("w_bucket").mode(mode).parquet(s"$dir/vocab")
 
   private def rawSegments(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/vocab")
+    Parquet.read(spark, s"$dir/vocab")
       .select(col("word"), col("n_w"), col("w_bucket").cast("long").as("w_bucket"))
 
   /** The SERVING view of the frequency table (word, n_w): net count
@@ -182,5 +182,5 @@ object LmStore {
 
   /** The one-row token total (n_total). */
   def stats(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/stats")
+    Parquet.read(spark, s"$dir/stats")
 }

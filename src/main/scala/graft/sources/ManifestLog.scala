@@ -251,9 +251,7 @@ object ManifestLog {
                    kind: String, partitioned: Boolean): Option[DataFrame] = {
     val frames = segs.filter(s => s.kind == kind && s.files.nonEmpty).map { s =>
       val segDir = s"$dir/${s.dir}"
-      val paths = s.files.map(f => s"$segDir/$f")
-      val r = if (partitioned) spark.read.option("basePath", segDir) else spark.read
-      r.parquet(paths: _*)
+      Parquet.read(spark, s.files.map(f => s"$segDir/$f"), Option.when(partitioned)(segDir))
     }
     frames.reduceOption(_ unionByName _)
   }
@@ -289,9 +287,8 @@ object ManifestLog {
     import org.apache.spark.sql.functions.lit
     val frames = segs.filter(s => s.kind == kind && s.files.nonEmpty).map { s =>
       val segDir = s"$dir/${s.dir}"
-      val paths = s.files.map(f => s"$segDir/$f")
-      val r = if (partitioned) spark.read.option("basePath", segDir) else spark.read
-      r.parquet(paths: _*).withColumn(vCol, lit(createdVersion(s)))
+      Parquet.read(spark, s.files.map(f => s"$segDir/$f"), Option.when(partitioned)(segDir))
+        .withColumn(vCol, lit(createdVersion(s)))
     }
     frames.reduceOption(_ unionByName _)
   }

@@ -183,7 +183,7 @@ object SkippingStore {
     val bloomUdaf = udaf(new BloomAgg(bloom.m, bloom.k))
     val bloomAggs = bloom.cols.map(c => bloomUdaf(col(c).cast("long")).as(s"bf_$c"))
     val aggs = statAggs ++ bloomAggs
-    spark.read.parquet(s"$dir/$sub")
+    Parquet.read(spark, s"$dir/$sub")
       .groupBy(input_file_name().as("_f"))
       .agg(aggs.head, aggs.tail: _*)
       .collect()
@@ -337,7 +337,7 @@ object SkippingStore {
   /** Every live row (the manifest's full file list). */
   def readAll(spark: SparkSession, dir: String): DataFrame = {
     val m = readManifest(spark, dir)
-    spark.read.parquet(m.files.map(f => s"$dir/${f.file}"): _*)
+    Parquet.read(spark, m.files.map(f => s"$dir/${f.file}"))
   }
 
   /** File lists for a box predicate: (kept, total) — the metadata-only
@@ -393,7 +393,7 @@ object SkippingStore {
                 values: Seq[Long]): DataFrame = {
     val (kept, _) = pruneFilesPoint(spark, dir, column, values)
     if (kept.isEmpty) readAll(spark, dir).where(lit(false))
-    else spark.read.parquet(kept.map(f => s"$dir/$f"): _*)
+    else Parquet.read(spark, kept.map(f => s"$dir/$f"))
       .where(col(column).cast("long").isin(values: _*))
   }
 
@@ -410,6 +410,6 @@ object SkippingStore {
       col(c).cast("long").between(lo, hi)
     }.reduce(_ && _)
     if (kept.isEmpty) readAll(spark, dir).where(lit(false))
-    else spark.read.parquet(kept.map(f => s"$dir/$f"): _*).where(pred)
+    else Parquet.read(spark, kept.map(f => s"$dir/$f")).where(pred)
   }
 }

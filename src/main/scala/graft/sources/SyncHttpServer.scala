@@ -219,7 +219,14 @@ class SyncHttpServer(
           reply(ex, 200, serialize(resp))
       }
     } catch {
-      case e: Exception => try reply(ex, 500, s"""{"error":"${e.getClass.getSimpleName}"}""") catch { case _: Exception => () }
+      case e: Exception =>
+        // The client gets the class name only; the cause, with its
+        // stack, goes to stderr in one write under the stream's id.
+        val trace = new java.io.StringWriter
+        e.printStackTrace(new java.io.PrintWriter(trace))
+        val stream = ex.getRequestURI.getPath.split("/").lift(1).getOrElse("")
+        System.err.print(s"graft-sync: 500 on stream '$stream': $trace")
+        try reply(ex, 500, s"""{"error":"${e.getClass.getSimpleName}"}""") catch { case _: Exception => () }
     } finally ex.close()
 
   /** GameResponse wire JSON (main.go:101-115): Go-exported field names,

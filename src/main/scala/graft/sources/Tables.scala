@@ -47,7 +47,7 @@ object Tables {
     * the one with raw-column predicate pushdown — is the one taken.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    val raw = spark.read.parquet(path(dir, "events"))
+    val raw = Parquet.read(spark, path(dir, "events"))
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw
@@ -72,7 +72,7 @@ object Tables {
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
-    else spark.read.parquet(path(dir, name))
+    else Parquet.read(spark, path(dir, name))
 
   /** Ingest-parallelism guard for per-row-heavy operators (MinHash,
     * SimHash, cosine folds, tokenization): if the scan yields fewer

@@ -210,11 +210,11 @@ object VersionedVectorIndex {
 
   /** The version's coarse quantizer (cid, cemb). */
   def centroids(spark: SparkSession, dir: String, version: Long = Latest): DataFrame =
-    spark.read.parquet(s"$dir/${snapshot(spark, dir, version).modelDir}/centroids")
+    Parquet.read(spark, s"$dir/${snapshot(spark, dir, version).modelDir}/centroids")
 
   /** The version's PQ sub-codebooks (m, cid, cemb). */
   def codebooks(spark: SparkSession, dir: String, version: Long = Latest): DataFrame =
-    spark.read.parquet(s"$dir/${snapshot(spark, dir, version).modelDir}/codebooks")
+    Parquet.read(spark, s"$dir/${snapshot(spark, dir, version).modelDir}/codebooks")
 
   /** The ADC serving artifacts of ONE resolved snapshot: the model,
     * the live code table, and the `nSub` the model was trained with,

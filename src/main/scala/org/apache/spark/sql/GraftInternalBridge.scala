@@ -1,8 +1,13 @@
 package org.apache.spark.sql
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.datasources.DataSourceStrategy
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** The graft engine's one `private[sql]` access point (the standard
   * connector-bridge pattern — Delta, Iceberg and XSQL connectors each
@@ -21,6 +26,10 @@ import org.apache.spark.sql.execution.datasources.DataSourceStrategy
   *     a `sources.Filter` — the SupportsDelete capability boundary; the
   *     row-level rule only intercepts DELETEs the capability path would
   *     reject.
+  *   - [[parquetFooterSchema]]: the Spark schema of one parquet file,
+  *     read from its footer on the driver — the schema
+  *     [[graft.sources.Parquet.read]] hands the reader so that no
+  *     inference job runs.
   */
 object GraftInternalBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
@@ -46,6 +55,22 @@ object GraftInternalBridge {
     val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
     spark.internalCreateDataFrame(df.queryExecution.toRdd, df.schema,
       isStreaming = false)
+  }
+
+  /** The schema `spark.read.parquet` would infer from `file`: Spark's
+    * own footer conversion (the Spark row metadata when the file has
+    * it, else the parquet types), with the converter built from the
+    * READING session's conf. `SQLConf.get` would not do: on a thread
+    * with no active session it resolves to the defaults, and the
+    * default `inferTimestampNTZ` turns a tz-less `ts` into
+    * TimestampNTZType. */
+  def parquetFooterSchema(spark: SparkSession, file: Path): StructType = {
+    val conf = spark.asInstanceOf[classic.SparkSession].sessionState.conf
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(file, spark.sparkContext.hadoopConfiguration))
+    val footer = try reader.getFooter finally reader.close()
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer),
+      new ParquetToSparkSchemaConverter(conf))
   }
 
   def translatable(e: Expression): Boolean =

@@ -189,4 +189,20 @@ class HttpSyncSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(srv.liveStreams.isEmpty, "a later tick must still drop the idle stream")
     } finally srv.stop()
   }
+
+  test("a 500 logs its cause, with the stack and the stream id, to stderr") {
+    val srv = new SyncHttpServer(cfg, seed = 7L,
+      clock = () => throw new IllegalStateException("clock failed")).start()
+    val captured = new java.io.ByteArrayOutputStream
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(captured, true, "UTF-8"))
+    val r = try postTo(rootOf(srv), "/boom/a/0", "{}")
+      finally { System.setErr(stderr); srv.stop() }
+    assert(r.statusCode() == 500)
+    assert(r.body() == """{"error":"IllegalStateException"}""")
+    val log = captured.toString("UTF-8")
+    assert(log.contains("500 on stream 'boom'"), log)
+    assert(log.contains("java.lang.IllegalStateException: clock failed"), log)
+    assert(log.contains("\tat "), s"the stack trace must be logged: $log")
+  }
 }
