@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, lit, when}
 import graft.SparkEntry._
 import graft.sources.{DocStore, EventLogStore, LmStore, ManifestLog, ParallelSteps,
-  SkippingStore, Tables, VersionedTextIndex, VersionedVectorIndex}
+  Tables, VersionedTextIndex, VersionedVectorIndex}
 import graft.sources.{FactStore => FS}
 
 /** A derived store: a pure function of (name, SF dir), built by
@@ -318,27 +318,26 @@ object Fixtures {
     Tables.events(s, d).select(col("event_id"), col("user_id"),
       col("ts_us"), col("value"))
   private val SkipOrder = Seq("user_id", "ts_us")
-  /** The q114 base write plus one appended batch (every 4th event, so
+  /** The q114 base build plus one appended batch (every 4th event, so
     * the batch's times span the whole month and its file boxes are
     * wide) — pruning sound but loosened. */
   private def skipAppended(s: SparkSession, d: String, dir: String): Unit = {
     val ev = skipEvents(s, d)
-    SkippingStore.write(ev.filter(col("event_id") % 4 =!= 0), dir, SkipOrder, SkipFiles)
-    SkippingStore.append(s, dir, ev.filter(col("event_id") % 4 === 0),
-      math.max(1, SkipFiles / 4))
+    FS.build(ev.filter(col("event_id") % 4 =!= 0), dir, "event_id", SkipOrder, SkipFiles)
+    FS.append(s, dir, ev.filter(col("event_id") % 4 === 0), math.max(1, SkipFiles / 4))
   }
-  /** The z-ordered events layout with the Bloom tier (q113/q116). */
+  /** The z-ordered events fact store (q113/q116): keyed on event_id,
+    * so its files carry the key-column Bloom bitsets q116 probes. */
   val SkipStore: Fixture = fixture("skipstore") { (s, d, dir) =>
-    SkippingStore.write(skipEvents(s, d), dir, SkipOrder, SkipFiles,
-      bloomCols = Seq("event_id"))
+    FS.build(skipEvents(s, d), dir, "event_id", SkipOrder, SkipFiles)
   }
-  /** The layout AFTER an ingest batch (q114). */
+  /** The store AFTER an ingest batch (q114). */
   val AppendedSkip: Fixture = fixture("skipstore_app")(skipAppended)
-  /** The appended layout after OPTIMIZE — one globally z-ordered
+  /** The appended store after compaction — one globally z-ordered
     * generation again (q114b). */
   val OptimizedSkip: Fixture = fixture("skipstore_opt") { (s, d, dir) =>
     skipAppended(s, d, dir)
-    SkippingStore.optimize(s, dir, SkipFiles)
+    FS.compact(s, dir, SkipFiles)
   }
 
   // -------------------------------------------------------- fact stores

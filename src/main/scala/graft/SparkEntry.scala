@@ -2047,41 +2047,40 @@ object SparkEntry {
       // from ONE sorted pass.
       AsofJoin.clickNearestPurchase(s, d, AsofNearestTolUs)),
     "q113_zorder_box" -> reads(F.SkipStore)((s, d) =>
-      // A (user, time) box over the z-ordered layout: the manifest
-      // prunes files in BOTH dimensions before any data I/O, the
-      // residual filter pushes into the surviving scans.
-      graft.sources.SkippingStore.readBox(s, F.SkipStore(s, d),
+      // A (user, time) box over the z-ordered fact store: the stats
+      // sidecars prune files in BOTH dimensions before any data I/O,
+      // the residual filter pushes into the surviving scans.
+      graft.sources.FactStore.readBox(s, F.SkipStore(s, d),
         Map("user_id" -> (SkipUserLo, SkipUserHi), "ts_us" -> (SkipTsLo, SkipTsHi)))
         .orderBy("event_id")),
     "q113b_zorder_timeslice" -> reads(F.SkipStore)((s, d) =>
       // A time-only slice — the dimension a user-sorted linear layout
       // could not skip on at all; the interleave still prunes it.
-      graft.sources.SkippingStore.readBox(s, F.SkipStore(s, d),
+      graft.sources.FactStore.readBox(s, F.SkipStore(s, d),
         Map("ts_us" -> (SkipTs2Lo, SkipTs2Hi)))
         .orderBy("event_id")),
     "q114_layout_append" -> reads(F.AppendedSkip)((s, d) =>
-      // The same box AFTER an ingest batch landed as its own subdir:
+      // The same box AFTER an ingest batch landed as its own segment:
       // pruning is sound unconditionally (its stats entries are exact),
       // just looser — and the answer is STILL the plain scan's.
-      graft.sources.SkippingStore.readBox(s, F.AppendedSkip(s, d),
+      graft.sources.FactStore.readBox(s, F.AppendedSkip(s, d),
         Map("user_id" -> (SkipUserLo, SkipUserHi), "ts_us" -> (SkipTsLo, SkipTsHi)))
         .orderBy("event_id")),
     "q114b_layout_optimized" -> reads(F.OptimizedSkip)((s, d) =>
-      // After OPTIMIZE rewrote everything into one globally z-ordered
-      // generation (atomic manifest swap, old files left for vacuum):
+      // After compaction rewrote everything into one globally z-ordered
+      // generation (one manifest commit, old files left for vacuum):
       // same answer, tight pruning again.
-      graft.sources.SkippingStore.readBox(s, F.OptimizedSkip(s, d),
+      graft.sources.FactStore.readBox(s, F.OptimizedSkip(s, d),
         Map("user_id" -> (SkipUserLo, SkipUserHi), "ts_us" -> (SkipTsLo, SkipTsHi)))
         .orderBy("event_id")),
     "q116_bloom_point_lookup" -> reads(F.SkipStore)((s, d) =>
       // An IN-list probe on event_id — high-cardinality, uncorrelated
       // with the (user, time) z-order, so every file's [min, max]
       // spans the domain and zone maps prune NOTHING; the per-file
-      // Bloom bitsets in the manifest prune at file level before any
-      // data I/O (false positives read extra files, the residual IN
-      // keeps the answer exact).
-      graft.sources.SkippingStore.readPoint(s, F.SkipStore(s, d),
-        "event_id", BloomProbeIds)
+      // key Bloom bitsets in the stats sidecars prune at file level
+      // before any data I/O (false positives read extra files, the
+      // residual IN keeps the answer exact).
+      graft.sources.FactStore.readPoint(s, F.SkipStore(s, d), BloomProbeIds)
         .orderBy("event_id")),
     "q115_change_feed" -> reads(F.UpsertedText)((s, d) =>
       // The change data feed of the v4 upsert: content-based per-doc
@@ -4980,7 +4979,7 @@ object SparkEntry {
     "q112c_asof_forward" -> asofOracleSql("ASOF LEFT JOIN", "<="),
     "q112d_asof_nearest" -> asofNearestOracleSql(AsofNearestTolUs),
     // Q113/q113b: the skipping layout must answer exactly the plain
-    // scan — pruning is an I/O property (pinned by SkippingStoreSpec),
+    // scan — pruning is an I/O property (pinned by FactStoreSpec),
     // never a semantics change.
     "q113_zorder_box" ->
       s"""SELECT event_id, user_id, epoch_us(ts) AS ts_us, value
@@ -4993,9 +4992,9 @@ object SparkEntry {
           FROM events
           WHERE epoch_us(ts) BETWEEN $SkipTs2Lo AND $SkipTs2Hi
           ORDER BY event_id""",
-    // Q114/q114b: append-then-optimize must not change a single row —
+    // Q114/q114b: append-then-compact must not change a single row —
     // both states answer exactly the q113 box (base ∪ batch = all
-    // events); the pruning-fraction movement is SkippingStoreSpec's.
+    // events); the pruning-fraction movement is FactStoreSpec's.
     "q114_layout_append" ->
       s"""SELECT event_id, user_id, epoch_us(ts) AS ts_us, value
           FROM events
@@ -5010,7 +5009,7 @@ object SparkEntry {
           ORDER BY event_id""",
     // Q116: like q113, the Bloom tier is pure I/O — the answer is the
     // plain IN-list scan's, exactly (file skipping is pinned by
-    // SkippingStoreSpec, where the oracle cannot see it).
+    // FactStoreSpec, where the oracle cannot see it).
     "q116_bloom_point_lookup" ->
       s"""SELECT event_id, user_id, epoch_us(ts) AS ts_us, value
           FROM events

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import graft.streaming.{GameState, SyncConfig, SyncCore}
+import graft.streaming.{GameState, SyncConfig, SyncCore, SyncResponse}
 
 /** One scheduled sync request (derived from the events table: each event
   * becomes "its user syncs now, posting this event and a state update").
@@ -93,11 +93,7 @@ object SyncReplay {
           def next(): (Long, GameState) = {
             val sid = it.head.stream_id
             var g = SyncCore.init(it.head.now, seed)
-            while (it.hasNext && it.head.stream_id == sid) {
-              val r = it.next()
-              g = SyncCore.process(cfg, g, r.now, r.client_id, None,
-                Seq((r.event_type, r.body)), Some(Map("last_event" -> r.body)))._1
-            }
+            while (it.hasNext && it.head.stream_id == sid) g = step(cfg, g, it.next())._1
             (sid, g)
           }
         }
@@ -138,22 +134,34 @@ object SyncReplay {
             sid = r.stream_id
             g = SyncCore.init(r.now, seed)
           }
-          val (g2, resp) = SyncCore.process(
-            cfg, g, r.now, r.client_id, None,
-            events = Seq((r.event_type, r.body)),
-            state = Some(Map("last_event" -> r.body)))
+          val (g2, out) = summarize(cfg, sid, g, r)
           g = g2
-          SyncSummary(
-            stream_id = sid,
-            sync_seq = g.syncSeq,
-            user_id = r.client_id.toLong,
-            t = resp.t,
-            proxy_id = resp.proxyId,
-            n_delta_events = resp.deltaEvents.size.toLong,
-            delta_events_hash = resp.deltaEventsHash,
-            n_delta_states = resp.deltaStates.size.toLong,
-            delta_states_hash = resp.deltaStatesHash)
+          out
         }
       }
+  }
+
+  /** One scheduled request's sync: [[SyncCore.process]] posting the
+    * request's event and `{last_event -> body}` as the state update. */
+  private[graft] def step(cfg: SyncConfig, g: GameState,
+                          r: SyncRequest): (GameState, SyncResponse) =
+    SyncCore.process(cfg, g, r.now, r.client_id, None,
+      events = Seq((r.event_type, r.body)),
+      state = Some(Map("last_event" -> r.body)))
+
+  /** [[step]] plus the sync's [[SyncSummary]] row on stream `sid`. */
+  private[graft] def summarize(cfg: SyncConfig, sid: Long, g: GameState,
+                               r: SyncRequest): (GameState, SyncSummary) = {
+    val (g2, resp) = step(cfg, g, r)
+    (g2, SyncSummary(
+      stream_id = sid,
+      sync_seq = g2.syncSeq,
+      user_id = r.client_id.toLong,
+      t = resp.t,
+      proxy_id = resp.proxyId,
+      n_delta_events = resp.deltaEvents.size.toLong,
+      delta_events_hash = resp.deltaEventsHash,
+      n_delta_states = resp.deltaStates.size.toLong,
+      delta_states_hash = resp.deltaStatesHash))
   }
 }

@@ -2,7 +2,9 @@ package graft.sources
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 /** Row-level DML + versioning for the RAW fact tables — the lakehouse
@@ -16,12 +18,13 @@ import org.apache.spark.sql.functions._
   *     manifest commit — append-only version lineage, snapshot
   *     isolation, time travel, restore, vacuum; a crash before the
   *     commit leaves unreferenced files (invisible by construction).
-  *   - [[SkippingStore]]'s z-order layout machinery (shared code, not
-  *     a copy): each data segment is z-sorted on the declared order
-  *     columns with exact per-file [min, max] stats recorded in a
+  *   - a z-order layout ([[writeSubdir]]): each data segment is
+  *     z-sorted on the declared order columns with exact per-file
+  *     [min, max] stats and a key-column Bloom bitset recorded in a
   *     sidecar (`_filestats.json`, written BEFORE the manifest commit
   *     so stats and data become visible atomically together), so box
-  *     reads prune files before any data I/O — through every DML
+  *     reads ([[readBox]], q113/q114) and key probes ([[readPoint]],
+  *     q116) prune files before any data I/O — through every DML
   *     generation.
   *
   * DML semantics are the q111 version-scoped tombstone rule
@@ -317,43 +320,171 @@ object FactStore {
         .getOrElse(Seq.empty)
     }
 
-  // -------------------------------------------------- segment writers
+  // ------------------------------------------------ z-order layout kernel
+  //
+  // Multi-dimensional data skipping — the Iceberg/Delta trick of
+  // pruning FILES by per-file column stats, with a Z-ORDER clustering
+  // so the stats are tight in EVERY indexed dimension at once:
+  //
+  //   - each order column is fixed-width-bucketed to 10 bits from its
+  //     global [min, max] (one agg pass; exact integer math), the
+  //     buckets BIT-INTERLEAVE into a z-value, and the frame range-
+  //     partitions + sorts on it — so each file covers a small
+  //     HYPER-RECTANGLE of the index space, not a thin slab of one
+  //     dimension (a single-column sort prunes perfectly on that column
+  //     and not at all on any other);
+  //   - one grouped pass over `input_file_name()` records each file's
+  //     exact per-column [min, max] plus a Bloom bitset of the key
+  //     column — the tier for EQUALITY probes on a high-cardinality key
+  //     the layout scatters, where min/max spans everything;
+  //   - reads keep only files whose stats overlap every bound (and
+  //     whose Bloom may hold a probe key) — a driver-side metadata
+  //     decision — and the residual filter still pushes into the
+  //     surviving parquet scans, where the z-sort makes ROW-GROUP
+  //     min/max pruning tight too.
 
-  /** Z-sort `df` into a new data segment and record its per-file stats
-    * sidecar. Uses [[SkippingStore.writeSubdir]] — the SAME z-order +
-    * one-pass-stats code the layout store runs, so the two stores
-    * cannot drift. */
-  private def writeDataSegment(spark: SparkSession, dir: String, name: String,
-                               df: DataFrame, orderCols: Seq[String],
-                               statsCols: Seq[String], nFiles: Int,
-                               bloomKeyCol: String): M.Segment = {
-    // Split-block Bloom sidecar on the key column (the SkippingStore
-    // q116 tier): 4 KB per file buys point lookups that prune to the
-    // files that MAY hold the key — at 100 TB, a primary-key probe
-    // reads a handful of files instead of every min/max survivor.
-    val bloom = SkippingStore.BloomConf(Seq(bloomKeyCol),
-      SkippingStore.DefaultBloomBits, SkippingStore.DefaultBloomK)
-    val entries = SkippingStore.writeSubdir(df, dir, name, orderCols,
-      statsCols, bloom, nFiles)
-    // Stats sidecar INSIDE the segment dir: unreferenced until the
-    // manifest commit lands, deleted with the segment at vacuum.
+  private val Bits = 10
+
+  /** Bloom sizing: 2^15 bits (4 KB) / 5 probes per file — ~10 bits per
+    * key at the store's file granularity, <1% false positives. The FP
+    * rate only costs extra files READ, never a wrong answer (the
+    * residual filter still runs). */
+  private val BloomBits: Int = 1 << 15
+  private val BloomK: Int = 5
+
+  /** The Bloom hash family — pure Scala (NOT a SQL builtin) because
+    * the same function must run on executors at build time (inside the
+    * Aggregator) and on the driver at probe time; self-consistency is
+    * the only requirement. Finalizer is splitmix64; probe i uses
+    * double hashing h1 + i·h2 (Kirsch–Mitzenmacher). */
+  private def mix64(z0: Long): Long = {
+    var z = z0 + 0x9e3779b97f4a7c15L
+    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
+    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
+    z ^ (z >>> 31)
+  }
+
+  private def bloomPositions(value: Long, m: Int, k: Int): Array[Int] = {
+    val h1 = mix64(value)
+    val h2 = mix64(value ^ 0x5851f42d4c957f2dL) | 1L
+    Array.tabulate(k)(i => java.lang.Long.remainderUnsigned(h1 + i * h2, m).toInt)
+  }
+
+  private def mayContain(bits: Array[Long], value: Long, k: Int): Boolean =
+    bloomPositions(value, bits.length * 64, k).forall(p =>
+      (bits(p >> 6) & (1L << (p & 63))) != 0L)
+
+  /** Per-file Bloom build as a typed Aggregator: buffer = the fixed
+    * m-bit bitset (m/64 longs), reduce sets the value's k bits, merge
+    * ORs two bitsets — constant executor state per file at any size. */
+  private final class BloomAgg(m: Int, k: Int)
+      extends Aggregator[Long, Array[Long], Array[Long]] {
+    def zero: Array[Long] = new Array[Long](m / 64)
+    def reduce(b: Array[Long], v: Long): Array[Long] = {
+      bloomPositions(v, m, k).foreach(p => b(p >> 6) |= 1L << (p & 63))
+      b
+    }
+    def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
+      var i = 0; while (i < a.length) { a(i) |= b(i); i += 1 }; a
+    }
+    def finish(b: Array[Long]): Array[Long] = b
+    def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+    def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+  }
+
+  private def encodeBits(bits: Array[Long]): String = {
+    val bb = java.nio.ByteBuffer.allocate(bits.length * 8)
+    bits.foreach(bb.putLong)
+    java.util.Base64.getEncoder.encodeToString(bb.array())
+  }
+
+  private def decodeBits(s: String): Array[Long] = {
+    val bytes = java.util.Base64.getDecoder.decode(s)
+    val bb = java.nio.ByteBuffer.wrap(bytes)
+    Array.fill(bytes.length / 8)(bb.getLong)
+  }
+
+  /** One file's sidecar entry: name, exact per-stats-column [min, max],
+    * and the encoded key-column Bloom bitset (None for a carrier). */
+  private final case class FileEntry(file: String, mins: Seq[Long], maxs: Seq[Long],
+                                     bloom: Option[String])
+
+  /** Z-sort `df` on `orderCols` (integral-typed) into `nFiles` files
+    * under `dir/$sub` and return the new files' entries — stats and
+    * Bloom bitsets from ONE grouped pass over the written files. */
+  private def writeSubdir(df: DataFrame, dir: String, sub: String,
+                          orderCols: Seq[String], statsCols: Seq[String],
+                          bloomCol: String, nFiles: Int): Seq[FileEntry] = {
+    val rangeAggs = orderCols.flatMap(c =>
+      Seq(min(col(c).cast("long")).as(s"mn_$c"), max(col(c).cast("long")).as(s"mx_$c")))
+    val ranges = df.agg(rangeAggs.head, rangeAggs.tail: _*).first()
+    // 10-bit fixed-width bucket per column from its global range —
+    // deterministic and one-pass; skew only loosens file boxes, never
+    // correctness, because the stats record what actually landed.
+    val buckets = orderCols.zipWithIndex.map { case (c, i) =>
+      val mn = ranges.getLong(2 * i)
+      val span = math.max(1L, ranges.getLong(2 * i + 1) - mn + 1)
+      s"(((CAST($c AS BIGINT) - ${mn}L) * ${1L << Bits}L) DIV ${span}L)"
+    }
+    val k = orderCols.length
+    val zExpr = (for (i <- 0 until k; j <- 0 until Bits)
+      yield s"(((${buckets(i)} >> $j) & 1) << ${j * k + i})").mkString(" + ")
+    df.withColumn("_z", expr(zExpr))
+      .repartitionByRange(nFiles, col("_z"))
+      .sortWithinPartitions("_z")
+      .drop("_z")
+      .write.mode("overwrite").parquet(s"$dir/$sub")
+    val statAggs = statsCols.flatMap(c =>
+      Seq(min(col(c).cast("long")).as(s"mn_$c"), max(col(c).cast("long")).as(s"mx_$c")))
+    val bloomUdaf = udaf(new BloomAgg(BloomBits, BloomK))
+    val aggs = statAggs :+ bloomUdaf(col(bloomCol).cast("long"))
+    Parquet.read(df.sparkSession, s"$dir/$sub")
+      .groupBy(input_file_name().as("_f"))
+      .agg(aggs.head, aggs.tail: _*)
+      .collect()
+      .map { r =>
+        FileEntry(r.getString(0).substring(r.getString(0).lastIndexOf('/') + 1),
+          statsCols.indices.map(i => r.getLong(1 + 2 * i)),
+          statsCols.indices.map(i => r.getLong(2 + 2 * i)),
+          Some(encodeBits(r.getSeq[Long](1 + 2 * statsCols.length).toArray)))
+      }.toSeq
+  }
+
+  /** The segment's stats sidecar, INSIDE the segment dir: unreferenced
+    * until the manifest commit lands, deleted with the segment at
+    * vacuum. */
+  private def writeSidecar(spark: SparkSession, dir: String, name: String,
+                           statsCols: Seq[String], keyCol: String,
+                           entries: Seq[FileEntry]): Unit = {
     val root = mapper.createObjectNode()
     val cArr = root.putArray("statsCols"); statsCols.foreach(cArr.add)
-    root.put("bloomCol", bloomKeyCol)
-    root.put("bloomM", bloom.m)
-    root.put("bloomK", bloom.k)
+    root.put("bloomCol", keyCol)
+    root.put("bloomM", BloomBits)
+    root.put("bloomK", BloomK)
     val fArr = root.putArray("files")
     entries.foreach { e =>
       val n = fArr.addObject()
-      n.put("file", e.file.split('/').last)
+      n.put("file", e.file)
       val mn = n.putArray("min"); val mx = n.putArray("max")
       e.mins.foreach(mn.add); e.maxs.foreach(mx.add)
-      e.blooms.headOption.foreach(n.put("bloom", _))
+      e.bloom.foreach(n.put("bloom", _))
     }
-    val f = M.fs(spark, dir)
-    val out = f.create(new Path(s"$dir/$name/_filestats.json"), false)
+    val out = M.fs(spark, dir).create(new Path(s"$dir/$name/_filestats.json"), false)
     try out.write(mapper.writerWithDefaultPrettyPrinter()
       .writeValueAsString(root).getBytes("UTF-8")) finally out.close()
+  }
+
+  // -------------------------------------------------- segment writers
+
+  /** Z-sort `df` into a new data segment and record its per-file stats
+    * and key-column Bloom sidecar: 4 KB per file buys point lookups
+    * that prune to the files that MAY hold the key. */
+  private def writeDataSegment(spark: SparkSession, dir: String, name: String,
+                               df: DataFrame, orderCols: Seq[String],
+                               statsCols: Seq[String], nFiles: Int,
+                               keyCol: String): M.Segment = {
+    val entries = writeSubdir(df, dir, name, orderCols, statsCols, keyCol, nFiles)
+    writeSidecar(spark, dir, name, statsCols, keyCol, entries)
     M.segment(spark, dir, "data", name)
   }
 
@@ -448,22 +579,9 @@ object FactStore {
     spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
       .repartition(1).write.mode("overwrite").parquet(s"$dir/$name")
     val sidecarCols = (statsCols :+ keyCol).distinct
-    val root = mapper.createObjectNode()
-    val cArr = root.putArray("statsCols"); sidecarCols.foreach(cArr.add)
-    root.put("bloomCol", keyCol)
-    root.put("bloomM", SkippingStore.DefaultBloomBits)
-    root.put("bloomK", SkippingStore.DefaultBloomK)
-    val fArr = root.putArray("files")
     val files = M.listParquet(f, new Path(s"$dir/$name"))
-    files.foreach { file =>
-      val n = fArr.addObject()
-      n.put("file", file)
-      val mn = n.putArray("min"); val mx = n.putArray("max")
-      sidecarCols.foreach { _ => mn.add(Long.MaxValue); mx.add(Long.MinValue) }
-    }
-    val out = f.create(new Path(s"$dir/$name/_filestats.json"), false)
-    try out.write(mapper.writerWithDefaultPrettyPrinter()
-      .writeValueAsString(root).getBytes("UTF-8")) finally out.close()
+    writeSidecar(spark, dir, name, sidecarCols, keyCol, files.map(file =>
+      FileEntry(file, sidecarCols.map(_ => Long.MaxValue), sidecarCols.map(_ => Long.MinValue), None)))
     M.Segment("data", name, files, 0L)
   }
 
@@ -1156,9 +1274,8 @@ object FactStore {
     * `maxFilesPerSeg`; every healthy segment is carried BY REFERENCE
     * (same immutable files, same stats sidecar, same creating version —
     * zero I/O). The same over-limit-only rule as
-    * [[EventLogStore.compact]] and [[SkippingStore]]'s per-subdirectory
-    * OPTIMIZE, applied to the manifest lineage: rewrite cost ∝ the
-    * unhealthy fraction, not the table.
+    * [[EventLogStore.compact]], applied to the manifest lineage:
+    * rewrite cost ∝ the unhealthy fraction, not the table.
     *
     * Tombstones are retired selectively: a tombstone segment is carried
     * only while some carried data segment predates it (the scoped rule
@@ -1460,23 +1577,23 @@ object FactStore {
                        dataSegs: Seq[M.Segment],
                        keepFiles: Option[Map[String, Seq[String]]] = None): DataFrame = {
     val keyCol = snap.meta("keyCol")
-    val segs = keepFiles match {
+    val segs = (keepFiles match {
       case None => dataSegs
-      case Some(k) => dataSegs
-        .map(s => s.copy(files = k.getOrElse(s.dir, Seq.empty)))
-        .filter(_.files.nonEmpty)
-    }
-    val data = readScopedTolerant(spark, dir, segs, "_seg_v")
-      .getOrElse(return emptyLike(spark, dir, snap))
+      case Some(k) => dataSegs.map(s => s.copy(files = k.getOrElse(s.dir, Seq.empty)))
+    }).filter(s => s.kind == "data" && s.files.nonEmpty)
+    if (segs.isEmpty) return emptyLike(spark, dir, snap)
     val live = M.readSegmentsScoped(spark, dir, snap.segments, "tomb",
       partitioned = false, "_tomb_v") match {
       case Some(t) =>
+        val data = readScopedTolerant(spark, dir, segs, "_seg_v").get
         val tt = t.select(col(keyCol).as("_t_key"), col("_tomb_v"))
         data.join(broadcast(tt),
             data(keyCol) === tt("_t_key") && tt("_tomb_v") > data("_seg_v"),
             "left_anti")
           .drop("_seg_v")
-      case None => data.drop("_seg_v")
+      // No tombstone to scope: rows need no version stamp, so segments
+      // sharing a schema read as one scan.
+      case None => Parquet.readUnion(spark, segs.map(s => s.files.map(f => s"$dir/${s.dir}/$f")))
     }
     // Serve the snapshot's DECLARED types: old narrow-typed segments
     // read through a lossless cast (the widen contract).
@@ -1672,7 +1789,7 @@ object FactStore {
     val cols = (0 until root.get("statsCols").size())
       .map(i => root.get("statsCols").get(i).asText())
     val bloomCol = if (root.has("bloomCol")) Some(root.get("bloomCol").asText()) else None
-    val bloomK = if (root.has("bloomK")) root.get("bloomK").asInt() else SkippingStore.DefaultBloomK
+    val bloomK = if (root.has("bloomK")) root.get("bloomK").asInt() else BloomK
     val files = (0 until root.get("files").size()).map { i =>
       val n = root.get("files").get(i)
       (n.get("file").asText(),
@@ -1683,9 +1800,6 @@ object FactStore {
     SegStats(seg.dir, cols, bloomCol, bloomK, files)
   }
 
-  /** Per-segment surviving files for a box — the driver-side metadata
-    * decision, exposed for spec assertions: (kept files per segment,
-    * total file count at the version). */
   /** Translate box-bound column names (the version's LOGICAL names) to
     * the physical names the stats sidecars and files carry. */
   private def physicalBounds(snap: M.Snapshot, bounds: Map[String, (Long, Long)]): Map[String, (Long, Long)] =
@@ -1700,9 +1814,15 @@ object FactStore {
         }
     }
 
+  /** Per-segment surviving files for a box — the driver-side metadata
+    * decision, exposed for spec assertions: (kept files per segment,
+    * total file count at the version). */
   def pruneBox(spark: SparkSession, dir: String, boundsLogical: Map[String, (Long, Long)],
-               version: Long = M.Latest): (Map[String, Seq[String]], Int) = {
-    val snap = M.snapshot(spark, dir, version)
+               version: Long = M.Latest): (Map[String, Seq[String]], Int) =
+    pruneBoxAt(spark, dir, M.snapshot(spark, dir, version), boundsLogical)
+
+  private def pruneBoxAt(spark: SparkSession, dir: String, snap: M.Snapshot,
+                         boundsLogical: Map[String, (Long, Long)]): (Map[String, Seq[String]], Int) = {
     val bounds = physicalBounds(snap, boundsLogical)
     // A bound must name a DECLARED stats column at this version — a
     // typo fails loudly here, not as an unpruned scan.
@@ -1733,16 +1853,8 @@ object FactStore {
     * tombstone anti-join STILL applies — a deleted row can never
     * resurface through the pruned path. */
   def readBox(spark: SparkSession, dir: String, bounds: Map[String, (Long, Long)],
-              version: Long = M.Latest): DataFrame = {
-    val snap = M.snapshot(spark, dir, version)
-    val (kept, _) = pruneBox(spark, dir, bounds, version)
-    val base = readLive(spark, dir, snap,
-      snap.segments.filter(_.kind == "data"), Some(kept))
-    val physical = physicalBounds(snap, bounds).foldLeft(base) {
-      case (df, (c, (lo, hi))) => df.where(col(c).cast("long").between(lo, hi))
-    }
-    colmapOf(snap).map(toLogical(physical, _)).getOrElse(physical)
-  }
+              version: Long = M.Latest): DataFrame =
+    readPruned(spark, dir, M.snapshot(spark, dir, version), Right(bounds))._1
 
   // --------------------------------------------------- point lookups
 
@@ -1754,9 +1866,12 @@ object FactStore {
     * pre-Bloom segment) degrades to kept — extra I/O, never a dropped
     * row. */
   def prunePoint(spark: SparkSession, dir: String, values: Seq[Long],
-                 version: Long = M.Latest): (Map[String, Seq[String]], Int) = {
+                 version: Long = M.Latest): (Map[String, Seq[String]], Int) =
+    prunePointAt(spark, dir, M.snapshot(spark, dir, version), values)
+
+  private def prunePointAt(spark: SparkSession, dir: String, snap: M.Snapshot,
+                           values: Seq[Long]): (Map[String, Seq[String]], Int) = {
     require(values.nonEmpty, "a point probe needs at least one value")
-    val snap = M.snapshot(spark, dir, version)
     val keyCol = snap.meta("keyCol")
     var total = 0
     val kept = snap.segments.filter(_.kind == "data").map { s =>
@@ -1768,8 +1883,8 @@ object FactStore {
         case (f, mins, maxs, bloom)
           if (ki < 0 || values.exists(v => v >= mins(ki) && v <= maxs(ki))) &&
             (!bloomOk || bloom.isEmpty || {
-              val bits = SkippingStore.decodeBits(bloom.get)
-              values.exists(SkippingStore.mayContain(bits, _, st.bloomK))
+              val bits = decodeBits(bloom.get)
+              values.exists(mayContain(bits, _, st.bloomK))
             }) => f
       }
     }.toMap
@@ -1781,14 +1896,26 @@ object FactStore {
     * tombstones still apply (a deleted key can never resurface), and
     * the output serves the version's logical schema. */
   def readPoint(spark: SparkSession, dir: String, values: Seq[Long],
-                version: Long = M.Latest): DataFrame = {
-    val snap = M.snapshot(spark, dir, version)
-    val keyCol = snap.meta("keyCol")
-    val (kept, _) = prunePoint(spark, dir, values, version)
-    val base = readLive(spark, dir, snap,
-      snap.segments.filter(_.kind == "data"), Some(kept))
-      .where(col(keyCol).cast("long").isin(values: _*))
-    colmapOf(snap).map(toLogical(base, _)).getOrElse(base)
+                version: Long = M.Latest): DataFrame =
+    readPruned(spark, dir, M.snapshot(spark, dir, version), Left(values))._1
+
+  /** A pruned read on ONE resolved snapshot — a key probe (`Left`) or a
+    * box (`Right`) — returning the frame with its (kept, total) file
+    * counts. The prune and the scan see the same segment list: pruning
+    * against a newer manifest than the scan (a compaction committing in
+    * between) would key the kept files by segments the scan never reads
+    * and silently serve zero rows. */
+  private[graft] def readPruned(spark: SparkSession, dir: String, snap: M.Snapshot,
+                                probe: Either[Seq[Long], Map[String, (Long, Long)]]): (DataFrame, Int, Int) = {
+    val (kept, total) = probe.fold(prunePointAt(spark, dir, snap, _), pruneBoxAt(spark, dir, snap, _))
+    val live = readLive(spark, dir, snap, snap.segments.filter(_.kind == "data"), Some(kept))
+    val hit = probe match {
+      case Left(values) => live.where(col(snap.meta("keyCol")).cast("long").isin(values: _*))
+      case Right(bounds) => physicalBounds(snap, bounds).foldLeft(live) {
+        case (df, (c, (lo, hi))) => df.where(col(c).cast("long").between(lo, hi))
+      }
+    }
+    (colmapOf(snap).map(toLogical(hit, _)).getOrElse(hit), kept.values.map(_.length).sum, total)
   }
 
   /** The LOGICAL names of the pruning tier at a version — (key column,

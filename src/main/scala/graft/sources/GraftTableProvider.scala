@@ -447,7 +447,9 @@ class GraftV1Relation(ctx: SQLContext, dir: String, version: Long,
   override def needConversion: Boolean = false
   override def buildScan(): RDD[Row] = {
     val spark = ctx.sparkSession
-    val (keyCol, statsCols) = FactStore.pruningSurface(spark, dir, version)
+    // ONE resolved snapshot serves the surface, the prune and the scan.
+    val snap = ManifestLog.snapshot(spark, dir, version)
+    val (keyCol, statsCols) = FactStore.pruningSurface(spark, dir, snap.version)
 
     // The same metadata-tier axes the statistics estimate derives —
     // one shared extraction ([[GraftScanPrune.axes]]), so planning and
@@ -455,19 +457,15 @@ class GraftV1Relation(ctx: SQLContext, dir: String, version: Long,
     val (keyVals, bounds) = GraftScanPrune.axes(pushed, keyCol, statsCols)
 
     val base: DataFrame =
-      if (keyVals.nonEmpty) {
-        val (kept, total) = FactStore.prunePoint(spark, dir, keyVals, version)
-        GraftTableProvider.lastPrune =
-          Some(("point", kept.values.map(_.length).sum, total))
-        FactStore.readPoint(spark, dir, keyVals, version)
-      } else if (bounds.nonEmpty) {
-        val (kept, total) = FactStore.pruneBox(spark, dir, bounds, version)
-        GraftTableProvider.lastPrune =
-          Some(("box", kept.values.map(_.length).sum, total))
-        FactStore.readBox(spark, dir, bounds, version)
-      } else {
+      if (keyVals.isEmpty && bounds.isEmpty) {
         GraftTableProvider.lastPrune = Some(("full", -1, -1))
-        FactStore.read(spark, dir, version)
+        FactStore.read(spark, dir, snap.version)
+      } else {
+        val (df, kept, total) = FactStore.readPruned(spark, dir, snap,
+          if (keyVals.nonEmpty) Left(keyVals) else Right(bounds))
+        GraftTableProvider.lastPrune =
+          Some((if (keyVals.nonEmpty) "point" else "box", kept, total))
+        df
       }
     // Every ACCEPTED filter is applied exactly, inside the frame (it
     // reaches the surviving parquet scans as an ordinary pushdown);

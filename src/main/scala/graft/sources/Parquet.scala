@@ -23,6 +23,19 @@ object Parquet {
     basePath.fold(reader)(reader.option("basePath", _)).parquet(paths: _*)
   }
 
+  /** Read file groups whose schemas may differ (a store's segments
+    * across an additive schema change): ONE scan when every group's
+    * footer schema is the same — a union of per-group scans costs a
+    * file index, a scan and a plan subtree per group (1.5x the wall of
+    * one scan on a two-segment pruned read) — else a by-name union
+    * that null-fills the columns a group lacks. */
+  def readUnion(spark: SparkSession, groups: Seq[Seq[String]]): DataFrame = {
+    val schemas = groups.map(g => GraftInternalBridge.parquetFooterSchema(spark, firstDataFile(spark, g)))
+    if (schemas.distinct.size == 1) spark.read.schema(schemas.head).parquet(groups.flatten: _*)
+    else groups.zip(schemas).map { case (g, schema) => spark.read.schema(schema).parquet(g: _*) }
+      .reduce(_.unionByName(_, allowMissingColumns = true))
+  }
+
   /** Names Spark's file index skips: `_SUCCESS`, `_filestats.json`,
     * `.crc` files, `_temporary` dirs. */
   private def hidden(name: String): Boolean = name.startsWith("_") || name.startsWith(".")

@@ -39,7 +39,9 @@ import graft.streaming.{GameState, SyncConfig, SyncCore, SyncResponse}
   * those listeners spool (S4 file-streamed wire-JSON ingestion).
   *
   * Deliberate divergences, documented: malformed JSON → 400 (the
-  * reference panics per request, main.go:66-68 — a server must not);
+  * reference panics per request, main.go:66-68 — a server must not); a
+  * body over [[SyncHttpServer.MaxBodyBytes]] → 413 (the reference reads
+  * any size);
   * the expiry sweep is a scheduled task the TESTS can also drive
   * directly via [[sweep]] with an injected clock (the reference's
   * 1-minute ticker, main.go:14-24, is `startSweeper`).
@@ -183,8 +185,15 @@ class SyncHttpServer(
       val (streamName, clientId) = (parts(1), parts(2))
       val lastKnownT = try parts(3).toLong catch { case _: NumberFormatException => 0L }
 
+      // Bounded read: a body over MaxBodyBytes is a 413 before it is
+      // decoded, spooled or takes a lock — one request cannot exhaust
+      // the heap.
+      val raw = ex.getRequestBody.readNBytes(SyncHttpServer.MaxBodyBytes + 1)
+      if (raw.length > SyncHttpServer.MaxBodyBytes) {
+        reply(ex, 413, """{"error":"request body too large"}"""); return
+      }
       // Body decode (main.go:63-69); malformed → 400, not a crash.
-      val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
+      val body = new String(raw, StandardCharsets.UTF_8)
       val parsed =
         try {
           val root = mapper.readTree(if (body.isEmpty) "{}" else body)
@@ -256,4 +265,9 @@ class SyncHttpServer(
     if (bytes.isEmpty) ex.sendResponseHeaders(code, -1)
     else { ex.sendResponseHeaders(code, bytes.length); ex.getResponseBody.write(bytes) }
   }
+}
+
+object SyncHttpServer {
+  /** The largest request body a sync may carry (1 MiB). */
+  val MaxBodyBytes: Int = 1 << 20
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.operators.{SyncRequest, SyncSummary}
+import graft.operators.{SyncReplay, SyncRequest, SyncSummary}
 
 /** The reference server as a Structured Streaming job: one
   * `flatMapGroupsWithState` keyed by stream id, whose state value is the
@@ -95,21 +95,9 @@ object SyncEngine {
       else {
         var g = state.getOption.getOrElse(SyncCore.init(reqs.head.now, seed))
         val out = reqs.map { r =>
-          val (g2, resp) = SyncCore.process(
-            cfg, g, r.now, r.client_id, None,
-            events = Seq((r.event_type, r.body)),
-            state = Some(Map("last_event" -> r.body)))
+          val (g2, row) = SyncReplay.summarize(cfg, sid, g, r)
           g = g2
-          SyncSummary(
-            stream_id = sid,
-            sync_seq = g.syncSeq,
-            user_id = r.client_id.toLong,
-            t = resp.t,
-            proxy_id = resp.proxyId,
-            n_delta_events = resp.deltaEvents.size.toLong,
-            delta_events_hash = resp.deltaEventsHash,
-            n_delta_states = resp.deltaStates.size.toLong,
-            delta_states_hash = resp.deltaStatesHash)
+          row
         }
         state.update(g)
         if (gameTimeoutUs > 0) state.setTimeoutDuration(gameTimeoutUs / 1000L)

@@ -1002,4 +1002,188 @@ class FactStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     val v3 = F.mergeStreamBatch(spark, d, batch, nFiles, clauses, batchId = 1L)
     assert(v3 == 3L, "the next batch commits normally")
   }
+
+  // ------------------------------------------------ the z-order layout tier
+  //
+  // The data-skipping contracts behind q113–q116: pruning is real (files
+  // skipped on EVERY indexed dimension), sound (an excluded file
+  // provably holds no matching row), and pure I/O (answers equal the
+  // plain scan — pinned by the oracles; here we pin the file counts the
+  // oracles cannot see).
+
+  private val layoutFiles = 16
+  private val sliceLo = 1705708800000000L // 2024-01-20
+  private val sliceHi = 1705881600000000L // 2024-01-22
+  private val layoutBox = Map("user_id" -> (3L, 7L), "ts_us" -> (sliceLo, sliceHi))
+  private lazy val layoutWant = ids(ev.where(col("user_id").between(3, 7) &&
+    col("ts_us").between(sliceLo, sliceHi)))
+
+  private def ids(df: DataFrame): Seq[Long] =
+    df.select("event_id").collect().map(_.getLong(0)).sorted.toSeq
+  private def keptFiles(kept: Map[String, Seq[String]]): Int = kept.values.map(_.size).sum
+
+  /** The rows of every data file at the latest version that `kept`
+    * does not list. */
+  private def excludedRows(d: String, kept: Map[String, Seq[String]]): DataFrame = {
+    val files = M.snapshot(spark, d).segments.filter(_.kind == "data").flatMap { s =>
+      s.files.filterNot(kept.getOrElse(s.dir, Seq.empty).toSet).map(f => s"$d/${s.dir}/$f")
+    }
+    assert(files.nonEmpty, "nothing was excluded")
+    spark.read.parquet(files: _*)
+  }
+
+  /** Keyed on event_id (so its files carry the key Bloom bitsets),
+    * z-ordered on (user, time). */
+  private lazy val zDir = {
+    val d = Files.createTempDirectory("graft_fact_z").toString
+    F.build(ev, d, "event_id", Seq("user_id", "ts_us"), layoutFiles)
+    d
+  }
+  /** The single-dimension strawman: sorted by user_id alone, with
+    * ts_us stats still recorded (the LAYOUT decides their power). */
+  private lazy val linDir = {
+    val d = Files.createTempDirectory("graft_fact_lin").toString
+    F.build(ev, d, "event_id", Seq("user_id"), layoutFiles, Seq("user_id", "ts_us"))
+    d
+  }
+
+  test("layout: a two-dimensional box prunes files AND answers exactly the plain filtered scan") {
+    val (kept, total) = F.pruneBox(spark, zDir, layoutBox)
+    assert(total == layoutFiles)
+    assert(keptFiles(kept) > 0 && keptFiles(kept) < total,
+      s"the box must skip files (${keptFiles(kept)}/$total kept)")
+    assert(ids(F.readBox(spark, zDir, layoutBox)) == layoutWant,
+      "skipping must never change an answer")
+  }
+
+  test("layout: the interleave skips on the dimension a linear sort cannot (time-only slice, z-order vs user-sorted)") {
+    val bounds = Map("ts_us" -> (sliceLo, sliceHi))
+    val (z, zTotal) = F.pruneBox(spark, zDir, bounds)
+    val (lin, linTotal) = F.pruneBox(spark, linDir, bounds)
+    // Every user appears in the slice, so every user-sorted file
+    // overlaps it (totals differ slightly: 15 distinct users underfill
+    // the range partitioner; fractions are the honest comparison).
+    assert(keptFiles(lin) == linTotal,
+      s"the strawman should be unable to skip (kept ${keptFiles(lin)}/$linTotal)")
+    assert(keptFiles(z).toDouble / zTotal < keptFiles(lin).toDouble / linTotal,
+      s"z-order must beat the linear layout on its blind dimension " +
+        s"(${keptFiles(z)}/$zTotal vs ${keptFiles(lin)}/$linTotal)")
+    assert(F.readBox(spark, zDir, bounds).count() == F.readBox(spark, linDir, bounds).count())
+  }
+
+  test("layout: skipping is SOUND — every excluded file provably holds no matching row") {
+    val (kept, _) = F.pruneBox(spark, zDir, layoutBox)
+    val leaked = excludedRows(zDir, kept)
+      .where(col("user_id").between(3, 7) && col("ts_us").between(sliceLo, sliceHi)).count()
+    assert(leaked == 0L, s"$leaked matching rows hid in excluded files")
+  }
+
+  test("layout: a box outside the data's range reads zero files and zero rows, safely") {
+    val bounds = Map("user_id" -> (100000L, 200000L))
+    assert(keptFiles(F.pruneBox(spark, zDir, bounds)._1) == 0)
+    assert(F.readBox(spark, zDir, bounds).count() == 0L)
+  }
+
+  test("layout: an unindexed bound is rejected, not silently unskipped") {
+    val ex = intercept[IllegalArgumentException] {
+      F.pruneBox(spark, zDir, Map("value" -> (0L, 1L)))
+    }
+    assert(ex.getMessage.contains("no stats for column value"))
+  }
+
+  test("layout: append stays sound but loosens pruning; compact restores it; vacuum reclaims only unreferenced segments") {
+    val d = Files.createTempDirectory("graft_fact_life").toString
+    F.build(ev.where(col("event_id") % 4 =!= 0), d, "event_id", Seq("user_id", "ts_us"), layoutFiles)
+    F.append(spark, d, ev.where(col("event_id") % 4 === 0), 4)
+    assert(ids(F.readBox(spark, d, layoutBox)) == layoutWant,
+      "an appended batch must be served, exactly")
+    val (app, appTotal) = F.pruneBox(spark, d, layoutBox)
+    F.compact(spark, d, layoutFiles)
+    assert(ids(F.readBox(spark, d, layoutBox)) == layoutWant, "compact must not change a single row")
+    val (cmp, cmpTotal) = F.pruneBox(spark, d, layoutBox)
+    assert(cmpTotal < appTotal, "compact folds the generations")
+    assert(keptFiles(cmp).toDouble / cmpTotal <= keptFiles(app).toDouble / appTotal,
+      s"compact must not loosen pruning (${keptFiles(cmp)}/$cmpTotal vs ${keptFiles(app)}/$appTotal)")
+    // Old generations linger for pinned readers, then vacuum reclaims
+    // exactly them.
+    val segDirs = () => new java.io.File(d).listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("seg-")).map(_.getName).toSet
+    assert(segDirs().exists(_.contains("-base-")) && segDirs().exists(_.contains("-append-")))
+    F.vacuum(spark, d, retain = 1)
+    assert(segDirs().forall(_.contains("-compact-")),
+      s"vacuum must drop unreferenced segments, left ${segDirs()}")
+    assert(ids(F.readBox(spark, d, layoutBox)) == layoutWant,
+      "the compacted generation serves after vacuum")
+  }
+
+  // The Bloom tier (q116): event_id is the high-cardinality key the
+  // (user, time) z-order scatters, so its per-file [min, max] spans
+  // nearly everything; zDir records no key stats at all, so every
+  // exclusion below is the Bloom bitset's alone.
+  private val probeIds = Seq(11L, 203L, 555L, 909L)
+
+  test("layout: a Bloom point probe prunes files zone maps cannot, and answers exactly the plain IN scan") {
+    val (kept, total) = F.prunePoint(spark, zDir, probeIds)
+    assert(total == layoutFiles)
+    assert(keptFiles(kept) > 0 && keptFiles(kept) < total,
+      s"the Bloom tier must skip files (${keptFiles(kept)}/$total kept)")
+    val want = ids(ev.where(col("event_id").isin(probeIds: _*)))
+    assert(ids(F.readPoint(spark, zDir, probeIds)) == want && want.size == probeIds.size)
+  }
+
+  test("layout: Bloom exclusion is SOUND — an excluded file holds no probe value") {
+    val (kept, _) = F.prunePoint(spark, zDir, probeIds)
+    val leaked = excludedRows(zDir, kept).where(col("event_id").isin(probeIds: _*)).count()
+    assert(leaked == 0L, s"$leaked probe rows hid in Bloom-excluded files")
+  }
+
+  test("layout: a probe for absent values reads (almost) nothing and returns zero rows") {
+    val ghosts = Seq(-5L, -77L, Long.MaxValue / 2)
+    val (kept, total) = F.prunePoint(spark, zDir, ghosts)
+    // False positives are allowed but must be rare at ~10 bits/key.
+    assert(keptFiles(kept) <= total / 4, s"${keptFiles(kept)}/$total kept for absent values")
+    assert(F.readPoint(spark, zDir, ghosts).count() == 0L)
+  }
+
+  test("layout: appends carry Bloom bitsets — an appended key is probe-visible, via its batch segment") {
+    val d = Files.createTempDirectory("graft_fact_bloom_app").toString
+    F.build(ev.where(col("event_id") =!= 500L), d, "event_id", Seq("user_id", "ts_us"), layoutFiles)
+    assert(F.readPoint(spark, d, Seq(500L)).count() == 0L)
+    F.append(spark, d, ev.where(col("event_id") === 500L), 1)
+    val (kept, _) = F.prunePoint(spark, d, Seq(500L))
+    assert(kept.exists { case (seg, files) => seg.contains("-append-") && files.nonEmpty },
+      s"the appended batch's bloom must admit its own row, kept: $kept")
+    assert(F.readPoint(spark, d, Seq(500L)).count() == 1L)
+  }
+
+  test("layout: a crashed append (segment written, no manifest commit) is invisible") {
+    val d = Files.createTempDirectory("graft_fact_crash").toString
+    F.build(ev, d, "event_id", Seq("user_id", "ts_us"), layoutFiles)
+    val before = F.read(spark, d).count()
+    F.testBeforeCommitHook = () => throw new IllegalStateException("crash before commit")
+    intercept[IllegalStateException](F.append(spark, d, ev.limit(50), 1))
+    assert(new java.io.File(d).listFiles().exists(_.getName.contains("-append-")),
+      "the crashed append's segment must be on disk")
+    assert(F.read(spark, d).count() == before,
+      "reads resolve the manifest's file list — unreferenced files must not leak in")
+  }
+
+  test("a pruned read keys the prune and the scan by ONE snapshot: compacting past it changes nothing") {
+    val d = Files.createTempDirectory("graft_fact_snap").toString
+    F.build(ev.where(col("event_id") % 2 === 0), d, "event_id", Seq("user_id", "ts_us"), nFiles)
+    F.append(spark, d, ev.where(col("event_id") % 2 =!= 0), nFiles)
+    val snap = M.snapshot(spark, d)
+    F.compact(spark, d, nFiles)
+    assert(M.currentVersion(spark, d) == snap.version + 1)
+    val (box, keptBox, totalBox) = F.readPruned(spark, d, snap, Right(layoutBox))
+    val (atSnap, atSnapTotal) = F.pruneBox(spark, d, layoutBox, snap.version)
+    assert(keptBox > 0 && (keptBox, totalBox) == (keptFiles(atSnap), atSnapTotal),
+      "the counts must be the pinned version's, not the compacted one's")
+    assert(sortedRows(box) == sortedRows(F.read(spark, d, snap.version)
+      .where(col("user_id").between(3, 7) && col("ts_us").between(sliceLo, sliceHi))))
+    val (point, keptPoint, _) = F.readPruned(spark, d, snap, Left(probeIds))
+    assert(keptPoint > 0)
+    assert(sortedRows(point) == sortedRows(F.read(spark, d, snap.version)
+      .where(col("event_id").isin(probeIds: _*))))
+  }
 }

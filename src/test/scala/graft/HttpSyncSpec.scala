@@ -205,4 +205,31 @@ class HttpSyncSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(log.contains("java.lang.IllegalStateException: clock failed"), log)
     assert(log.contains("\tat "), s"the stack trace must be logged: $log")
   }
+
+  test("an oversized body is a 413 that leaves the streams, the spool and the next sync unchanged") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_http_413")
+    def open(name: String) = new SyncHttpServer(cfg, clock = () => nowMs, seed = 7L,
+      spoolPath = Some(dir.resolve(name).toString)).start()
+    // `a` receives the oversized requests, its twin `b` never does.
+    val (a, b) = (open("a.jsonl"), open("b.jsonl"))
+    val next = """{"Events":[{"Type":"e","Body":"2"}]}"""
+    val (nextA, nextB) = try {
+      nowMs = 6000000L
+      Seq(a, b).foreach(srv =>
+        assert(postTo(rootOf(srv), "/big/c/0", """{"Events":[{"Type":"e","Body":"1"}]}""")
+          .statusCode() == 200))
+      nowMs += 60
+      val huge = s"""{"Events":[{"Type":"e","Body":"${"x" * SyncHttpServer.MaxBodyBytes}"}]}"""
+      assert(postTo(rootOf(a), "/big/c/1", huge).statusCode() == 413)
+      assert(postTo(rootOf(a), "/fresh/c/0", huge).statusCode() == 413)
+      assert(a.liveStreams == Seq("big"), "a rejected body must not create a stream")
+      nowMs += 60
+      (postTo(rootOf(a), "/big/c/1", next), postTo(rootOf(b), "/big/c/1", next))
+    } finally { a.stop(); b.stop() }
+    assert(nextA.statusCode() == 200 && nextA.body() == nextB.body(),
+      "the next sync must answer as if the oversized requests never came")
+    assert(java.nio.file.Files.readAllLines(dir.resolve("a.jsonl")) ==
+      java.nio.file.Files.readAllLines(dir.resolve("b.jsonl")),
+      "a rejected body must not reach the spool")
+  }
 }
