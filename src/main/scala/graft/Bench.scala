@@ -141,9 +141,11 @@ object Bench {
   // ------------------------------------------------- reference costs
   /** Per-query cpu-second reference from a clean acceptance run —
     * BENCH_REF.json, refreshed whenever the board changes. Missing
-    * file or missing query => no cpu-based retry for it (never guess). */
+    * file or missing query => no cpu-based retry for it (never guess).
+    * This default and BENCH_LAST.json resolve against the working
+    * directory, so a run reads and writes the checkout it runs from. */
   private def loadRef(sfDir: String): (Double, Map[String, Double], Map[String, Double]) = {
-    val path = sys.env.getOrElse("SPARK_GRAFT_REF", "/root/repo/BENCH_REF.json")
+    val path = sys.env.getOrElse("SPARK_GRAFT_REF", "BENCH_REF.json")
     try {
       val mapper = new com.fasterxml.jackson.databind.ObjectMapper
       val root = mapper.readTree(new java.io.File(path))
@@ -314,7 +316,7 @@ object Bench {
     println(line)
     val full = s"""{"metric":"total","unit":"sec",$common,"cpu_s":${mergeMap("cpu_s")},"gc_s":${mergeMap("gc_s")},"jit_s":${mergeMap("jit_s")},"codecache_mb":${mergeMap("codecache_mb")},"attempts":${mergeMap("attempts")},"first_attempt":${mergeMap("first_attempt")},"fixtures":$fixturesJson,"value":${f"$total%.3f"}}"""
     try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/BENCH_LAST.json")), full + "\n")
+      java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LAST.json")), full + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] could not write BENCH_LAST.json: $e") }
     files.foreach(_.delete())
     if (nErr > 0) sys.exit(1)
@@ -568,7 +570,7 @@ object Bench {
     println(line)
     val full = f"""{"metric":"total","unit":"sec","queries":$qs,"cpu_s":${numMap(_.cpu)},"gc_s":${numMap(_.gc)},"jit_s":${numMap(_.jit)},"codecache_mb":${numMap(_.ccMb)},"suspect":$suspects,"retried":$retried,"deferred":$deferred,"cpu_suspect":$cpuSuspects,"ref_suspect":$refSuspects,"attempts":$attemptsJson,"first_attempt":${numMap(_.attempts.head._1)},"fixtures":$fixturesJson,"errors":$nErr,"error_names":$errNames,"calib_wall_s":$calibWall%.3f,"calib_cpu_s":$calibCpu%.3f,"total_cpu_s":$totalCpu%.3f,"total_gc_s":$totalGc%.3f,"first_attempt_total_s":$firstAttemptTotal%.3f,$jvmDiag,"cores":$cpus,"spark_version":"${spark.version}","sf":"$sfDir","value":$total%.3f}"""
     try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/BENCH_LAST.json")), full + "\n")
+      java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LAST.json")), full + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] could not write BENCH_LAST.json: $e") }
     spark.stop()
     if (nErr > 0) sys.exit(1)

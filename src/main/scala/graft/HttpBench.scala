@@ -93,7 +93,7 @@ object HttpBench {
       }.mkString("[", ",", "]")
       val line = f"""{"metric":"http_syncs_per_sec","value":$best%.1f,"unit":"syncs/sec","points":$js,"reference_syncs_per_sec":2560,"reference_latency_bound_ms":200}"""
       println(line)
-      java.nio.file.Files.writeString(java.nio.file.Paths.get("/root/repo/HTTP_BENCH.json"), line + "\n")
+      java.nio.file.Files.writeString(java.nio.file.Paths.get("HTTP_BENCH.json"), line + "\n")
     } finally server.stop()
   }
 }

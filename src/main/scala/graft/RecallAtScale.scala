@@ -110,7 +110,7 @@ object RecallAtScale {
     println(json)
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_RECALL_OUT", "/root/repo/RECALL_LAST.json")),
+        sys.env.getOrElse("SPARK_GRAFT_RECALL_OUT", "RECALL_LAST.json")),
       json + "\n")
     catch { case e: Throwable => System.err.println(s"[recall] could not write artifact: $e") }
     spark.stop()

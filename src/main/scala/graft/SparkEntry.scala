@@ -7,7 +7,7 @@ import graft.{Fixtures => F}
 import graft.sources.{DocStore, EventLogStore, Tables,
   VersionedTextIndex, VersionedVectorIndex}
 
-/** Driver contract — see /root/repo/SURVEY.md §2C for the declared query
+/** Driver contract — see SURVEY.md §2C for the declared query
   * inventory. Every entry in [[queries]] has, where SQL-expressible, an
   * equivalent DuckDB oracle in [[oracleSql]]; column names and types are
   * aligned pairwise (the driver sorts columns by name and hash-compares
@@ -175,9 +175,7 @@ object SparkEntry {
   /** Query batch (qid, emb) for the stored-index searches — the q85
     * convention: vec_id < BatchQueries are the queries. */
   private def annQueryBatch(s: SparkSession, d: String): DataFrame =
-    Similarity.withEmb(Tables.table(s, d, "embeddings"))
-      .filter(col("vec_id") < BatchQueries)
-      .select(col("vec_id").as("qid"), col("emb"))
+    Similarity.queryVectors(Tables.table(s, d, "embeddings"), col("vec_id") < BatchQueries)
   /** IVF-PQ ADC search of the query batch against ONE resolved
     * snapshot of the ANN store at `dir` (Latest unless pinned): the
     * live codes of the vec_id ≥ BatchQueries corpus, nSub from the
@@ -185,7 +183,7 @@ object SparkEntry {
   private def annSearch(s: SparkSession, d: String, dir: String,
                         version: Long = VersionedVectorIndex.Latest): DataFrame = {
     val a = VersionedVectorIndex.serving(s, dir, version)
-    Similarity.ivfPqSearchFrames(annQueryBatch(s, d), a.centroids, a.codebooks,
+    Similarity.ivfPqSearchFrames(annQueryBatch(s, d), a.model,
       a.liveCodes.filter(col("vec_id") >= BatchQueries), a.nSub, BatchTopK, IvfPqProbes)
   }
   /** The stored code table summarized for the oracle: one row per
@@ -1785,11 +1783,11 @@ object SparkEntry {
       codesSummary(s, F.AnnStore(s, d))),
     "q89b_stored_ivf_search" -> reads(F.AnnStore)((s, d) =>
       Similarity.ivfSearchFrames(Tables.table(s, d, "embeddings"),
-        VersionedVectorIndex.centroids(s, F.AnnStore(s, d)), BatchQueries, BatchTopK)),
+        VersionedVectorIndex.model(s, F.AnnStore(s, d)).coarse, BatchQueries, BatchTopK)),
     "q89c_stored_adc_search" -> reads(F.AnnStore)((s, d) => annSearch(s, d, F.AnnStore(s, d))),
     "q89d_stored_rerank" -> reads(F.AnnStore)((s, d) => {
       val a = VersionedVectorIndex.serving(s, F.AnnStore(s, d))
-      Similarity.ivfPqRerankFrames(annQueryBatch(s, d), a.centroids, a.codebooks,
+      Similarity.ivfPqRerankFrames(annQueryBatch(s, d), a.model,
         a.liveCodes.filter(col("vec_id") >= BatchQueries),
         Similarity.withEmb(Tables.table(s, d, "embeddings")),
         a.nSub, PqShortlist, BatchTopK, IvfPqProbes)
@@ -1803,7 +1801,7 @@ object SparkEntry {
       val allowed = Tables.table(s, d, "embeddings")
         .filter(col("label") === FilterLabel && col("vec_id") >= BatchQueries)
         .select("vec_id")
-      Similarity.ivfPqFilteredSearch(annQueryBatch(s, d), a.centroids, a.codebooks,
+      Similarity.ivfPqFilteredSearch(annQueryBatch(s, d), a.model,
         a.liveCodes.filter(col("vec_id") >= BatchQueries),
         allowed, a.nSub, BatchTopK, IvfPqProbes)
     }),
@@ -1945,7 +1943,7 @@ object SparkEntry {
       val dir = F.VersionedAnn(s, d)
       val v = VersionedVectorIndex.currentVersion(s, dir)
       val a = VersionedVectorIndex.serving(s, dir, v)
-      Similarity.ivfPqRerankPruned(annQueryBatch(s, d), a.centroids, a.codebooks,
+      Similarity.ivfPqRerankPruned(annQueryBatch(s, d), a.model,
         a.liveCodes.filter(col("vec_id") >= BatchQueries),
         VersionedVectorIndex.liveVectors(s, dir, v)
           .withColumn("emb", col("embedding").cast("array<double>"))
@@ -1996,8 +1994,7 @@ object SparkEntry {
         F.VersionedText(s, d), VersionedTextIndex.Latest,
         F.VersionedAnn(s, d), VersionedVectorIndex.Latest,
         Bm25Terms, Bm25K, RrfK, IvfPqProbes,
-        Similarity.withEmb(Tables.table(s, d, "embeddings"))
-          .filter(col("vec_id") === 0L).select(col("vec_id").as("qid"), col("emb")),
+        Similarity.queryVectors(Tables.table(s, d, "embeddings"), col("vec_id") === 0L),
         BatchQueries.toLong)
     }),
     "q111_upserted_bm25" -> reads(F.UpsertedText)((s, d) =>
@@ -2112,8 +2109,7 @@ object SparkEntry {
         F.TextIndex(s, d), VersionedTextIndex.Latest,
         F.AnnStore(s, d), VersionedVectorIndex.Latest,
         Bm25Terms, Bm25K, RrfK, IvfPqProbes,
-        Similarity.withEmb(Tables.table(s, d, "embeddings"))
-          .filter(col("vec_id") === 0L).select(col("vec_id").as("qid"), col("emb")),
+        Similarity.queryVectors(Tables.table(s, d, "embeddings"), col("vec_id") === 0L),
         BatchQueries.toLong)),
     "q120_triple_hybrid" -> reads(F.TextIndex, F.AnnStore)((s, d) => {
       // The full modern retrieval stack: BM25 + learned-sparse +
@@ -2122,8 +2118,7 @@ object SparkEntry {
       // scales never meet — only ranks do).
       Similarity.hybridRrf3Stored(s, F.TextIndex(s, d), F.AnnStore(s, d),
         Bm25Terms, SparseQueryWeights, Bm25K, RrfK, IvfPqProbes,
-        Similarity.withEmb(Tables.table(s, d, "embeddings"))
-          .filter(col("vec_id") === 0L).select(col("vec_id").as("qid"), col("emb")),
+        Similarity.queryVectors(Tables.table(s, d, "embeddings"), col("vec_id") === 0L),
         BatchQueries.toLong)
     }),
     "q86_bm25" -> ((s, d) =>

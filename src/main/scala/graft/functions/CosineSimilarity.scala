@@ -46,17 +46,8 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override protected def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    if (n != y.numElements()) null
-    else {
-      var dot = 0.0; var nx = 0.0; var ny = 0.0; var i = 0
-      while (i < n) {
-        val p = x.getDouble(i); val q = y.getDouble(i)
-        dot += p * q; nx += p * p; ny += q * q
-        i += 1
-      }
-      dot / (math.sqrt(nx) * math.sqrt(ny))
-    }
+    if (x.numElements() != y.numElements()) null
+    else CosineSimilarity.of(x.toDoubleArray(), y.toDoubleArray())
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -92,6 +83,18 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 object CosineSimilarity {
+
+  /** The generated code's fold, for equal-length arrays; the interpreted
+    * path and driver-side callers share it, so they get the same doubles. */
+  def of(x: Array[Double], y: Array[Double]): Double = {
+    var dot = 0.0; var nx = 0.0; var ny = 0.0; var i = 0
+    while (i < x.length) {
+      val p = x(i); val q = y(i)
+      dot += p * q; nx += p * p; ny += q * q
+      i += 1
+    }
+    dot / (math.sqrt(nx) * math.sqrt(ny))
+  }
 
   /** Registration triple for `SparkSessionExtensions.injectFunction` /
     * `FunctionRegistry` — exposes `cosine_sim(a, b)` to SQL and

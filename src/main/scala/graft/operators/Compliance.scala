@@ -77,7 +77,7 @@ object Compliance {
       .select(lit("phrase").as("surface"), lit(0L).as("qid"), col("rnk"),
         col("id"), col("sc").cast("double").as("score"))
     val ann = graft.sources.VersionedVectorIndex.serving(spark, annDir)
-    val den = Similarity.ivfPqSearchFrames(queries, ann.centroids, ann.codebooks,
+    val den = Similarity.ivfPqSearchFrames(queries, ann.model,
         ann.liveCodes.filter(col("vec_id") >= denseFrom), ann.nSub, kAnn, nProbe)
       .select(lit("ann").as("surface"), col("qid"), col("rnk"),
         col("vec_id").as("id"), col("adc").as("score"))

@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.CosineSimilarity
 import graft.functions.Deterministic.roundTo
 
 /** Driver-side centroid entry (the bounded trained model), injected
@@ -16,11 +18,10 @@ import graft.functions.Deterministic.roundTo
   * nCentroids=8 × dim=64 doubles (4 KB), sub-codebooks 4×8×16 (4 KB),
   * and query LUTs nQueries×nProbe=8 rows (~2 KB): far below anything
   * that bloats analysis or codegen. A config change that grows a model
-  * past ~1 MB of literal (≈16k centroids at dim 64) should switch that
-  * consumer back to the broadcast-row variants kept alongside
-  * ([[Similarity.assignTo]], [[Similarity.encodeResiduals]],
-  * [[Similarity.adcScoreCodes]]) — same expressions, model shipped as
-  * a broadcast instead of a literal. */
+  * past ~1 MB of literal (≈16k centroids at dim 64) should ship that
+  * model as a broadcast row instead, as [[Similarity.assignTo]] does
+  * (same expression). The query LUTs are built on the driver
+  * ([[Similarity.queryLuts]]); only their scoring rides the plan. */
 private[graft] case class CentLit(cid: Long, cemb: Seq[Double])
 
 /** [[CentLit]] with its PQ subspace — one sub-codebook entry. */
@@ -33,6 +34,10 @@ private[graft] case class BookLit(m: Int, cid: Long, cemb: Seq[Double])
   * `collect_list(struct(qid, pcid, lut))` row the scoring lambda
   * references, so the evaluated expression is unchanged. */
 private[graft] case class LutLit(qid: Long, pcid: Long, lut: Seq[Map[Long, Long]])
+
+/** The bounded half of an IVF-PQ index as driver values (a few KB):
+  * coarse quantizer and PQ sub-codebooks; the code table stays a frame. */
+private[graft] final case class IvfPqModel(coarse: Seq[CentLit], books: Seq[BookLit])
 
 /** Embedding similarity search (north-star LLM-pipeline surface;
   * SURVEY.md §2C Q18).
@@ -68,6 +73,13 @@ object Similarity {
   private[graft] def withEmb(emb: DataFrame): DataFrame =
     graft.sources.Tables.widen(emb)
       .withColumn("emb", col("embedding").cast("array<double>"))
+
+  /** A query batch `(qid, emb)`: the vectors of `emb` passing `which`.
+    * Not widened: the batch is collected ([[queryLuts]]), and a
+    * round-robin repartition would only add a shuffle to the collect. */
+  private[graft] def queryVectors(emb: DataFrame, which: Column): DataFrame =
+    emb.filter(which)
+      .select(col("vec_id").as("qid"), col("embedding").cast("array<double>").as("emb"))
 
   /** Q18 — brute-force cosine top-k against one query vector (the vector
     * with id `queryVecId`, excluded from the results).
@@ -480,31 +492,20 @@ object Similarity {
   def ivfSearchTrained(emb: DataFrame, nCentroids: Int, iters: Int,
                        nQueries: Int, k: Int): DataFrame = {
     val e = trainInput(withEmb(emb))
-    val cents = kmeansTrainModel(e, nCentroids, iters)._3
-    val assigned = assignToModel(e, cents)
-    val queries = assigned.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("cid"), col("emb").as("qemb"))
-    val corpus = assigned
-      .filter(col("vec_id") >= nQueries)
-      .select(col("cid"), col("vec_id"), col("emb"))
-    val w = Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id"))
-    corpus.join(broadcast(queries), "cid")
-      .withColumn("score", roundTo(expr(cosSql("emb", "qemb")), 4))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .where(col("rnk") <= k)
-      .select("qid", "rnk", "vec_id", "score")
-      .orderBy("qid", "rnk")
+    ivfSearchAssigned(assignToModel(e, kmeansTrainModel(e, nCentroids, iters)._3), nQueries, k)
   }
 
-  /** [[ivfSearchTrained]]'s search half over an EXPLICIT centroid
-    * frame — the stored-index entry point: q18i passes the centroids
-    * it just trained; [[graft.sources.VersionedVectorIndex]] consumers
-    * pass the parquet-read coarse quantizer, so a trained-once index
-    * serves any number of query batches without re-running Lloyd.
+  /** [[ivfSearchTrained]] over an EXPLICIT centroid model — the
+    * stored-index entry point: [[graft.sources.VersionedVectorIndex]]
+    * consumers pass the stored coarse quantizer, so a trained-once
+    * index serves any number of query batches without re-running Lloyd.
     */
-  def ivfSearchFrames(emb: DataFrame, centroids: DataFrame,
-                      nQueries: Int, k: Int): DataFrame = {
-    val assigned = assignTo(withEmb(emb), centroids)
+  def ivfSearchFrames(emb: DataFrame, cents: Seq[CentLit], nQueries: Int, k: Int): DataFrame =
+    ivfSearchAssigned(assignToModel(withEmb(emb), cents), nQueries, k)
+
+  /** The search half of the IVF searches over assigned vectors
+    * `(vec_id, cid, emb)`: queries join their own cell's corpus. */
+  private def ivfSearchAssigned(assigned: DataFrame, nQueries: Int, k: Int): DataFrame = {
     val queries = assigned.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("cid"), col("emb").as("qemb"))
     val corpus = assigned
@@ -1254,7 +1255,7 @@ object Similarity {
                          annVersion: Long, nProbe: Int, queryVec: DataFrame,
                          denseFrom: Long): DataFrame = {
     val a = graft.sources.VersionedVectorIndex.serving(spark, annDir, annVersion)
-    ivfPqSearchFrames(queryVec, a.centroids, a.codebooks,
+    ivfPqSearchFrames(queryVec, a.model,
       a.liveCodes.filter(col("vec_id") >= denseFrom), a.nSub, 10, nProbe)
       .select(col("rnk").as("rd"), col("vec_id").as("id"))
   }
@@ -1425,16 +1426,11 @@ object Similarity {
   private def ivfPqScored(emb: DataFrame, nCentroids: Int, nSub: Int, nCodes: Int,
                           iters: Int, nQueries: Int, nProbe: Int): DataFrame = {
     val (coarse, books, codes) = ivfPqArtifactModels(emb, nCentroids, nSub, nCodes, iters)
-    val queries = withEmb(emb).filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("emb"))
-    // Round 14: collect the bounded LUT rows and score against the
-    // literal (see ivfPqSearchFrames) — drops the lutsRow collect_list
-    // aggregation + broadcast exchange from the scoring job, and the
-    // probe set now prunes unprobed cells' code rows before the explode
+    // The probe set prunes unprobed cells' code rows before the explode
     // (behavior-preserving: a row whose cid no query probes matches
     // nothing).
-    val (qluts, probed) = collectLuts(
-      ivfPqQueryLutsModel(queries, coarse, books, nSub, nProbe))
+    val (qluts, probed) = probeLuts(queryVectors(emb, col("vec_id") < nQueries),
+      IvfPqModel(coarse, books), nSub, nProbe)
     adcScoreCodesModel(
       codes.filter(col("vec_id") >= nQueries && col("cid").isin(probed: _*)),
       qluts, nSub)
@@ -1473,43 +1469,9 @@ object Similarity {
     (coarse, books, encodeResidualsModel(resid, books, nSub))
   }
 
-  /** [[ivfPqQueryLuts]] against driver-side models: coarse centroids
-    * and sub-codebooks ride as plan literals — probe selection, the
-    * per-cell residual, and the LUT build are one map-only projection
-    * of the bounded query batch, no broadcast exchange anywhere.
-    */
-  private def ivfPqQueryLutsModel(queries: DataFrame, coarse: Seq[CentLit],
-                                  books: Seq[BookLit], nSub: Int,
-                                  nProbe: Int): DataFrame = {
-    val subLen = 64 / nSub
-    queries
-      .withColumn("cents", typedlit(coarse))
-      .withColumn("p", explode(expr(
-        s"""slice(array_sort(transform(cents, c -> named_struct(
-              'negsim', -(floor(${cosSql("emb", "c.cemb")} * 1e6 + 0.5) / 1e6),
-              'cid', c.cid,
-              'cemb', c.cemb))), 1, $nProbe)""")))
-      .withColumn("emb", expr("zip_with(emb, p.cemb, (x, y) -> x - y)"))
-      .select(col("qid"), col("p.cid").as("pcid"), col("emb"))
-      .withColumn("books", typedlit(books))
-      .select(col("qid"), col("pcid"), expr(
-        s"""transform(sequence(0, $nSub - 1), m ->
-              map_from_entries(transform(filter(books, b -> b.m = m),
-                b -> struct(b.cid, ${residErrSql(subLen)}))))""").as("lut"))
-  }
-
-  /** Residuals of every vector w.r.t. its assigned coarse centroid —
-    * map-only: [[assignTo]]'s broadcast argmax plus a broadcast join
-    * back to the bounded centroid frame for the subtraction.
-    */
-  private[graft] def residuals(e: DataFrame, coarse: DataFrame): DataFrame =
-    assignTo(e, coarse)
-      .join(broadcast(coarse), "cid")
-      .withColumn("emb", expr("zip_with(emb, cemb, (x, y) -> x - y)"))
-      .select(col("vec_id"), col("cid"), col("emb"))
-
-  /** [[residuals]] against a driver-side model: the centroid lookup is
-    * a plan-literal map instead of a broadcast join — fully map-only.
+  /** Residuals of every vector w.r.t. its assigned coarse centroid
+    * ([[assignToModel]]); the centroid lookup is a plan-literal map, so
+    * the plan is map-only.
     */
   private[graft] def residualsModel(e: DataFrame, coarse: Seq[CentLit]): DataFrame =
     assignToModel(e, coarse)
@@ -1518,34 +1480,12 @@ object Similarity {
       .withColumn("emb", expr("zip_with(emb, cemb, (x, y) -> x - y)"))
       .select(col("vec_id"), col("cid"), col("emb"))
 
-  /** Subspace-m squared L2 between the row's residual slice and the
-    * subLen-length trained entry b.cemb, on the exact 1e-6 grid.
-    */
-  private def residErrSql(subLen: Int): String =
-    s"""CAST(floor(aggregate(sequence(0, $subLen - 1), CAST(0.0 AS DOUBLE),
-          (acc, i) -> acc + (emb[m * $subLen + i] - b.cemb[i])
-                          * (emb[m * $subLen + i] - b.cemb[i])) * 1e6 + 0.5) AS BIGINT)"""
-
   /** PQ-encode residual vectors `(vec_id, cid, emb)` against list-form
     * sub-codebooks `(m, cid, cemb)`: argmin erri, tie → lowest code
-    * (the q73 contract), map-only under one broadcast codebook row.
+    * (the q73 contract), map-only under the codebooks as a plan literal.
     * This is also the INCREMENTAL-maintenance kernel: new vectors are
     * admitted to a stored index by running exactly this encode against
     * the STORED books — no retraining touches the existing codes.
-    */
-  private[graft] def encodeResiduals(resid: DataFrame, books: DataFrame, nSub: Int): DataFrame = {
-    val booksRow = books
-      .agg(collect_list(struct(col("m"), col("cid"), col("cemb"))).as("books"))
-    resid.crossJoin(broadcast(booksRow))
-      .select(col("vec_id"), col("cid"), expr(
-        s"""transform(sequence(0, $nSub - 1), m ->
-              array_min(transform(filter(books, b -> b.m = m),
-                b -> named_struct('erri', ${residErrSql(64 / nSub)}, 'cid', b.cid))).cid)""")
-        .as("codes"))
-  }
-
-  /** [[encodeResiduals]] against a driver-side model: the codebook row
-    * is a plan literal, so the encode plan has no broadcast exchange.
     */
   private[graft] def encodeResidualsModel(resid: DataFrame, books: Seq[BookLit],
                                           nSub: Int): DataFrame =
@@ -1556,65 +1496,67 @@ object Similarity {
                 b -> named_struct('erri', ${residErrSql(64 / nSub)}, 'cid', b.cid))).cid)""")
         .as("codes"))
 
-  /** Per-(query, probed cell) residual-ADC lookup tables, long form
-    * `(qid, pcid, lut)`: each query probes its `nProbe` nearest coarse
-    * cells and builds a cid-keyed table of subspace distances from its
-    * residual IN THAT CELL (the asymmetric part of IVFADC). Bounded:
-    * nQueries × nProbe rows regardless of corpus size.
+  /** Subspace-m squared L2 between the row's residual slice and the
+    * subLen-length trained entry b.cemb, on the exact 1e-6 grid.
     */
-  private[graft] def ivfPqQueryLuts(queries: DataFrame, coarse: DataFrame,
-                                    books: DataFrame, nSub: Int, nProbe: Int): DataFrame = {
+  private def residErrSql(subLen: Int): String =
+    s"""CAST(floor(aggregate(sequence(0, $subLen - 1), CAST(0.0 AS DOUBLE),
+          (acc, i) -> acc + (emb[m * $subLen + i] - b.cemb[i])
+                          * (emb[m * $subLen + i] - b.cemb[i])) * 1e6 + 0.5) AS BIGINT)"""
+
+  /** Each query's `nProbe` nearest coarse cells and, per probed cell,
+    * its residual-ADC lookup table (subspace → book cid → distance from
+    * the query's residual IN THAT CELL), built on the driver from the
+    * bounded model. Every step is the arithmetic Spark runs for it, so
+    * the tables are bit-identical to the SQL oracles' (QueryLutSpec):
+    * [[CosineSimilarity]]'s index-order fold; negsim = -(floor(cos *
+    * 1e6 + 0.5) / 1e6) sorted with the cell in [[probeOrder]]; entries
+    * floor(Σ (r − b)² * 1e6 + 0.5) summed left to right over the
+    * subspace's slice of r = q − cemb.
+    */
+  private[graft] def queryLuts(queries: Seq[(Long, Array[Double])], model: IvfPqModel,
+                               nSub: Int, nProbe: Int): Seq[LutLit] = {
     val subLen = 64 / nSub
-    val coarseRow = coarse
-      .agg(collect_list(struct(col("cid"), col("cemb"))).as("cents"))
-    val booksRow = books
-      .agg(collect_list(struct(col("m"), col("cid"), col("cemb"))).as("books"))
-    queries
-      .crossJoin(broadcast(coarseRow))
-      .withColumn("p", explode(expr(
-        s"""slice(array_sort(transform(cents, c -> named_struct(
-              'negsim', -(floor(${cosSql("emb", "c.cemb")} * 1e6 + 0.5) / 1e6),
-              'cid', c.cid,
-              'cemb', c.cemb))), 1, $nProbe)""")))
-      .withColumn("emb", expr("zip_with(emb, p.cemb, (x, y) -> x - y)"))
-      .select(col("qid"), col("p.cid").as("pcid"), col("emb"))
-      .crossJoin(broadcast(booksRow))
-      .select(col("qid"), col("pcid"), expr(
-        s"""transform(sequence(0, $nSub - 1), m ->
-              map_from_entries(transform(filter(books, b -> b.m = m),
-                b -> struct(b.cid, ${residErrSql(subLen)}))))""").as("lut"))
+    val books = (0 until nSub).map(m => model.books.filter(_.m == m))
+    def entry(r: Array[Double], m: Int, b: Seq[Double]): Long =
+      math.floor((0 until subLen).foldLeft(0.0) { (acc, i) =>
+        val d = r(m * subLen + i) - b(i); acc + d * d } * 1e6 + 0.5).toLong
+    queries.flatMap { case (qid, q) =>
+      model.coarse.map { c =>
+        require(c.cemb.length == q.length, s"query $qid and cell ${c.cid} differ in dim")
+        (-(math.floor(CosineSimilarity.of(q, c.cemb.toArray) * 1e6 + 0.5).toLong / 1e6),
+          c.cid, c.cemb)
+      }.sorted(probeOrder).take(nProbe).map { case (_, cid, cemb) =>
+        val r = Array.tabulate(q.length)(i => q(i) - cemb(i))
+        LutLit(qid, cid, books.zipWithIndex.map { case (bs, m) =>
+          bs.map(b => b.cid -> entry(r, m, b.cemb)).toMap })
+      }
+    }
   }
 
-  /** ADC scores of every (query, probed-cell code row) pair from the
-    * code table and the long-form query LUTs alone — the serving-time
-    * hot path. The corpus side carries ONLY its `nSub` small code
-    * integers (float vectors are never read); the LUT set folds into
-    * one broadcast row; a code row is scored only for queries probing
-    * its cell.
-    */
-  private[graft] def adcScoreCodes(codes: DataFrame, luts: DataFrame, nSub: Int): DataFrame = {
-    val lutsRow = luts
-      .agg(collect_list(struct(col("qid"), col("pcid"), col("lut"))).as("qluts"))
-    codes.crossJoin(broadcast(lutsRow))
-      .select(col("vec_id"), col("cid"), col("codes"), explode(col("qluts")).as("q"))
-      .where(col("q.pcid") === col("cid"))
-      .withColumn("adc", roundTo(expr(
-        s"""aggregate(sequence(0, $nSub - 1), CAST(0 AS BIGINT),
-              (acc, m) -> acc + element_at(q.lut[m], codes[m]))""").cast("double") / 1e6, 4))
-      .select(col("q.qid").as("qid"), col("vec_id"), col("adc"))
+  /** `array_sort`'s ascending order of the probe struct (negsim, cid,
+    * cemb): doubles by `SQLOrderingUtil.compareDoubles` (-0.0 equals
+    * 0.0, NaN greatest), arrays element-wise, then by length. */
+  private[graft] val probeOrder: Ordering[(Double, Long, Seq[Double])] = (a, b) => {
+    val bySim = SQLOrderingUtil.compareDoubles(a._1, b._1)
+    if (bySim != 0) bySim
+    else if (a._2 != b._2) java.lang.Long.compare(a._2, b._2)
+    else a._3.iterator.zip(b._3.iterator)
+      .map { case (x, y) => SQLOrderingUtil.compareDoubles(x, y) }
+      .find(_ != 0).getOrElse(Integer.compare(a._3.length, b._3.length))
   }
 
-  /** Stored-index IVF-PQ ADC search — [[ivfPqSearch]]'s ranking over
-    * EXPLICIT artifact frames (centroids/codebooks/codes, typically
-    * [[graft.sources.VersionedVectorIndex]] reads): nothing here trains;
-    * the query cost is LUT construction (bounded) plus a scan of the
-    * probed cells' code rows. Because the probe set is bounded
-    * (≤ nQueries × nProbe cell ids), it is collected and pushed into
-    * the code-table scan as an `IN` filter — with the store's
-    * cid-partitioned layout that prunes unprobed cells at FILE level,
-    * so serving reads |probed cells| / |cells| of the code bytes and
-    * none of the float bytes.
-    */
+  /** [[queryLuts]] of a query frame `(qid, emb)`, collected in one job
+    * (the batch is bounded), with the distinct probed cell ids for
+    * file-level pruning of the code and float scans. */
+  private def probeLuts(queries: DataFrame, model: IvfPqModel, nSub: Int,
+                        nProbe: Int): (Seq[LutLit], Seq[Long]) = {
+    val batch = queries.select(col("qid"), col("emb")).collect().toSeq
+      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
+    val luts = queryLuts(batch, model, nSub, nProbe)
+    (luts, luts.map(_.pcid).distinct.sorted)
+  }
+
   /** Q122 — metadata-FILTERED stored-index ANN search: restrict the
     * ADC candidate set to vectors passing a metadata predicate
     * (`allowed` = the predicate's id set from the metadata table),
@@ -1634,27 +1576,26 @@ object Similarity {
     * float vectors, no corpus text, state unchanged from the plain
     * stored search.
     */
-  def ivfPqFilteredSearch(queries: DataFrame, coarse: DataFrame,
-                          books: DataFrame, codes: DataFrame,
+  def ivfPqFilteredSearch(queries: DataFrame, model: IvfPqModel, codes: DataFrame,
                           allowed: DataFrame, nSub: Int, k: Int,
                           nProbe: Int): DataFrame =
-    ivfPqSearchFrames(queries, coarse, books,
+    ivfPqSearchFrames(queries, model,
       codes.join(allowed.select("vec_id"), Seq("vec_id"), "left_semi"),
       nSub, k, nProbe)
 
-  def ivfPqSearchFrames(queries: DataFrame, coarse: DataFrame, books: DataFrame,
-                        codes: DataFrame, nSub: Int, k: Int, nProbe: Int): DataFrame = {
+  /** Stored-index IVF-PQ ADC search — [[ivfPqSearch]]'s ranking over
+    * an explicit model and code table (typically
+    * [[graft.sources.VersionedVectorIndex.serving]]); nothing trains.
+    * The query batch is collected (one job), its LUTs are built on the
+    * driver ([[queryLuts]]) and scored as a plan literal, and the probe
+    * set is pushed into the code scan as an `IN` filter — on the
+    * store's cid-partitioned layout that prunes unprobed cells at FILE
+    * level, so serving reads only the probed cells' code bytes.
+    */
+  def ivfPqSearchFrames(queries: DataFrame, model: IvfPqModel, codes: DataFrame,
+                        nSub: Int, k: Int, nProbe: Int): DataFrame = {
     require(k <= 10, "k is capped by the graft_top10 buffer")
-    // Round 14 (guide §2.4, the r13 driver-model mechanics applied to
-    // the SERVING side): the LUT frame is bounded (nQueries × nProbe
-    // rows), so collect it outright — the probe set falls out of the
-    // same collect (formerly a second job over an eager checkpoint),
-    // and the scoring scan consumes the LUTs as a PLAN LITERAL instead
-    // of rebuilding them into a broadcast row (collect_list aggregation
-    // + broadcast exchange) inside the main job. The LUT VALUES are
-    // still computed by the identical Spark expressions
-    // ([[ivfPqQueryLuts]]) — only where the bounded rows travel changed.
-    val (qluts, probed) = lutsCollected(queries, coarse, books, nSub, nProbe)
+    val (qluts, probed) = probeLuts(queries, model, nSub, nProbe)
     adcScoreCodesModel(codes.filter(col("cid").isin(probed: _*)), qluts, nSub)
       .groupBy(col("qid"))
       .agg(expr(s"slice(graft_top10(-adc, vec_id), 1, $k)").as("top"))
@@ -1664,28 +1605,12 @@ object Similarity {
       .orderBy("qid", "rnk")
   }
 
-  /** The bounded query-LUT rows, collected: (literal list, the distinct
-    * probed cell ids for file-level pruning of the code/float scans).
-    */
-  private def lutsCollected(queries: DataFrame, coarse: DataFrame,
-                            books: DataFrame, nSub: Int,
-                            nProbe: Int): (Seq[LutLit], Seq[Long]) =
-    collectLuts(ivfPqQueryLuts(queries, coarse, books, nSub, nProbe))
-
-  /** Collect a bounded (qid, pcid, lut) frame into the literal model +
-    * its distinct probed cell ids. */
-  private def collectLuts(lutFrame: DataFrame): (Seq[LutLit], Seq[Long]) = {
-    val luts = lutFrame
-      .collect()
-      .map(r => LutLit(r.getLong(0), r.getLong(1),
-        r.getSeq[scala.collection.Map[Long, Long]](2).map(_.toMap)))
-      .toSeq
-    (luts, luts.map(_.pcid).distinct.sorted)
-  }
-
-  /** [[adcScoreCodes]] against the collected LUT model: the LUT set is
+  /** ADC scores of every (query, probed-cell code row) pair — the
+    * serving-time hot path. The corpus side carries ONLY its `nSub`
+    * small code integers (float vectors are never read); the LUT set is
     * a plan literal, so the scoring plan has no broadcast exchange and
-    * no aggregation — one scan of the probed cells' code rows.
+    * no aggregation — one scan of the probed cells' code rows, each
+    * scored only for the queries probing its cell.
     */
   private def adcScoreCodesModel(codes: DataFrame, qluts: Seq[LutLit],
                                  nSub: Int): DataFrame =
@@ -1705,10 +1630,10 @@ object Similarity {
     * (vec_id, emb) float source — at scale the id-keyed vector store,
     * touched for queries × shortlist rows post-pruning.
     */
-  def ivfPqRerankFrames(queries: DataFrame, coarse: DataFrame, books: DataFrame,
+  def ivfPqRerankFrames(queries: DataFrame, model: IvfPqModel,
                         codes: DataFrame, vecs: DataFrame, nSub: Int,
                         shortlist: Int, k: Int, nProbe: Int): DataFrame =
-    rerankWith(queries, coarse, books, codes, nSub, shortlist, k, nProbe,
+    rerankWith(queries, model, codes, nSub, shortlist, k, nProbe,
       _ => vecs.select(col("vec_id"), col("emb")))
 
   /** IVFADC+R with the float re-rank served from CELL-PARTITIONED
@@ -1721,23 +1646,22 @@ object Similarity {
     * of the corpus, which is the missing half of the stored-serving
     * story at 100 TB.
     */
-  def ivfPqRerankPruned(queries: DataFrame, coarse: DataFrame, books: DataFrame,
+  def ivfPqRerankPruned(queries: DataFrame, model: IvfPqModel,
                         codes: DataFrame, cellVecs: DataFrame, nSub: Int,
                         shortlist: Int, k: Int, nProbe: Int): DataFrame =
-    rerankWith(queries, coarse, books, codes, nSub, shortlist, k, nProbe,
+    rerankWith(queries, model, codes, nSub, shortlist, k, nProbe,
       probed => cellVecs.filter(col("cid").isin(probed.toSeq: _*))
         .select(col("vec_id"), col("emb")))
 
   /** Shared IVFADC+R body: ADC shortlist from the probed cells' codes,
     * then exact squared-L2 over the float source `vecsFor(probedCells)`.
     */
-  private def rerankWith(queries: DataFrame, coarse: DataFrame, books: DataFrame,
+  private def rerankWith(queries: DataFrame, model: IvfPqModel,
                          codes: DataFrame, nSub: Int, shortlist: Int, k: Int,
                          nProbe: Int, vecsFor: Seq[Long] => DataFrame): DataFrame = {
     require(shortlist <= 50, "shortlist is capped by the graft_top50 buffer")
     require(k <= 10, "k is capped by the graft_top10 buffer")
-    // Same round-14 serving-side model move as [[ivfPqSearchFrames]].
-    val (qluts, probed) = lutsCollected(queries, coarse, books, nSub, nProbe)
+    val (qluts, probed) = probeLuts(queries, model, nSub, nProbe)
     val short = adcScoreCodesModel(codes.filter(col("cid").isin(probed: _*)), qluts, nSub)
       .groupBy("qid")
       .agg(expr(s"slice(graft_top50(-adc, vec_id), 1, $shortlist)").as("top"))

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.Similarity
+import graft.operators.{BookLit, CentLit, IvfPqModel, Similarity}
 import graft.sources.{ManifestLog => M}
 
 /** Manifest-versioned IVF-PQ index — the train-once / serve-many
@@ -208,26 +208,29 @@ object VersionedVectorIndex {
     antiTombstoned(spark, dir, snap, v)
   }
 
-  /** The version's coarse quantizer (cid, cemb). */
-  def centroids(spark: SparkSession, dir: String, version: Long = Latest): DataFrame =
-    Parquet.read(spark, s"$dir/${snapshot(spark, dir, version).modelDir}/centroids")
-
-  /** The version's PQ sub-codebooks (m, cid, cemb). */
-  def codebooks(spark: SparkSession, dir: String, version: Long = Latest): DataFrame =
-    Parquet.read(spark, s"$dir/${snapshot(spark, dir, version).modelDir}/codebooks")
+  /** The version's coarse quantizer and sub-codebooks as driver
+    * values, read from the model files on the driver
+    * ([[Parquet.readLocal]]: a few KB, no Spark job). */
+  def model(spark: SparkSession, dir: String, version: Long = Latest): IvfPqModel = {
+    val m = s"$dir/${snapshot(spark, dir, version).modelDir}"
+    IvfPqModel(
+      Parquet.readLocal(spark, s"$m/centroids")
+        .map(r => CentLit(r.getAs[Long]("cid"), r.getAs[Seq[Double]]("cemb"))),
+      Parquet.readLocal(spark, s"$m/codebooks")
+        .map(r => BookLit(r.getAs[Int]("m"), r.getAs[Long]("cid"), r.getAs[Seq[Double]]("cemb"))))
+  }
 
   /** The ADC serving artifacts of ONE resolved snapshot: the model,
     * the live code table, and the `nSub` the model was trained with,
     * read from the snapshot's own recorded parameters — a caller-held
-    * copy could disagree with the model and mis-slice the LUT join.
+    * copy could disagree with the model and mis-slice the LUTs.
     */
-  final case class Serving(centroids: DataFrame, codebooks: DataFrame,
-                           liveCodes: DataFrame, nSub: Int)
+  final case class Serving(model: IvfPqModel, liveCodes: DataFrame, nSub: Int)
 
   def serving(spark: SparkSession, dir: String, version: Long = Latest): Serving = {
     val snap = snapshot(spark, dir, version)
-    Serving(centroids(spark, dir, snap.version), codebooks(spark, dir, snap.version),
-      liveCodes(spark, dir, snap.version), snap.meta("nSub").toInt)
+    Serving(model(spark, dir, snap.version), liveCodes(spark, dir, snap.version),
+      snap.meta("nSub").toInt)
   }
 
   /** Change data feed — (vec_id, change ∈ insert | update | delete)
@@ -305,8 +308,8 @@ object VersionedVectorIndex {
 
   /** Admit new vectors against the STORED model without retraining
     * (assign to stored centroids, encode the residual against stored
-    * books with [[Similarity.encodeResiduals]], the kernel the build
-    * used) and commit a version whose
+    * books with [[Similarity.encodeResidualsModel]], the kernel the
+    * build used) and commit a version whose
     * manifest is the prior segments plus new code/vector segments.
     * Existing files and the model are untouched. Returns the committed
     * version.
@@ -323,13 +326,12 @@ object VersionedVectorIndex {
     val prior = snapshot(spark, dir)
     val v = prior.version + 1
     val nSub = prior.meta("nSub").toInt
-    val books = codebooks(spark, dir)
-    val coarse = centroids(spark, dir)
-    val resid = Similarity.residuals(Similarity.withEmb(newVecs), coarse)
+    val m = model(spark, dir, prior.version)
+    val resid = Similarity.residualsModel(Similarity.withEmb(newVecs), m.coarse)
     val seg = writeCodeSegment(spark, dir, segName(v, "append"),
-      Similarity.encodeResiduals(resid, books, nSub))
+      Similarity.encodeResidualsModel(resid, m.books, nSub))
     val vseg = writeVectorSegment(spark, dir, segName(v, "append-vecs"),
-      Similarity.assignTo(Similarity.withEmb(newVecs), coarse))
+      Similarity.assignToModel(Similarity.withEmb(newVecs), m.coarse))
     M.commit(M.fs(spark, dir), dir,
       M.Snapshot(v, "append", prior.modelDir, prior.segments :+ seg :+ vseg,
         prior.meta))
@@ -355,14 +357,13 @@ object VersionedVectorIndex {
       "upsert batch carries duplicate vec_ids — two same-commit " +
         "generations of one id would both survive the scoped tombstone")
     val nSub = prior.meta("nSub").toInt
-    val books = codebooks(spark, dir)
-    val coarse = centroids(spark, dir)
-    val resid = Similarity.residuals(Similarity.withEmb(newVecs), coarse)
+    val m = model(spark, dir, prior.version)
+    val resid = Similarity.residualsModel(Similarity.withEmb(newVecs), m.coarse)
     val tomb = writeTombstoneSegment(spark, dir, segName(v, "upsert-tomb"), ids)
     val seg = writeCodeSegment(spark, dir, segName(v, "upsert"),
-      Similarity.encodeResiduals(resid, books, nSub))
+      Similarity.encodeResidualsModel(resid, m.books, nSub))
     val vseg = writeVectorSegment(spark, dir, segName(v, "upsert-vecs"),
-      Similarity.assignTo(Similarity.withEmb(newVecs), coarse))
+      Similarity.assignToModel(Similarity.withEmb(newVecs), m.coarse))
     M.commit(M.fs(spark, dir), dir,
       M.Snapshot(v, "upsert", prior.modelDir,
         prior.segments :+ tomb :+ seg :+ vseg, prior.meta))

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.Similarity
+import graft.operators.{IvfPqModel, Similarity}
 
 /** Streaming ANN serving — the trained, PERSISTED IVF-PQ index
   * ([[graft.sources.VersionedVectorIndex]]) answering a continuous stream
@@ -27,12 +27,13 @@ import graft.operators.Similarity
 object StreamingAnnServe {
 
   /** Score ONE microbatch of query vectors (qid, embedding float[64])
-    * against stored-index frames. Usable directly under foreachBatch;
-    * pure — the same batch against the same artifacts gives the same
-    * ranking, so stream results replayed batch-at-a-time equal the
-    * one-shot batch call (StreamingSpec pins this).
+    * against a stored index's model and code table. Usable directly
+    * under foreachBatch; pure — the same batch against the same
+    * artifacts gives the same ranking, so stream results replayed
+    * batch-at-a-time equal the one-shot batch call (StreamingSpec pins
+    * this).
     */
-  def scoreBatch(queries: DataFrame, centroids: DataFrame, codebooks: DataFrame,
+  def scoreBatch(queries: DataFrame, model: IvfPqModel,
                  codes: DataFrame, nSub: Int, k: Int, nProbe: Int): DataFrame = {
     // foreachBatch hands over a CLONED session, and the combined plan
     // resolves against the STATIC side's session — re-registering the
@@ -42,7 +43,7 @@ object StreamingAnnServe {
     graft.GraftSession.registerUdafs(codes.sparkSession)
     val q = queries.select(col("qid"),
       col("embedding").cast("array<double>").as("emb"))
-    Similarity.ivfPqSearchFrames(q, centroids, codebooks, codes, nSub, k, nProbe)
+    Similarity.ivfPqSearchFrames(q, model, codes, nSub, k, nProbe)
   }
 
   /** [[scoreBatch]] against the stored index at `dir`: each
@@ -62,7 +63,7 @@ object StreamingAnnServe {
                           corpusFrom: Long = 0L,
                           version: Long = graft.sources.VersionedVectorIndex.Latest): DataFrame = {
     val a = graft.sources.VersionedVectorIndex.serving(queries.sparkSession, dir, version)
-    scoreBatch(queries, a.centroids, a.codebooks,
+    scoreBatch(queries, a.model,
       a.liveCodes.filter(col("vec_id") >= corpusFrom), a.nSub, k, nProbe)
   }
 }

@@ -1,8 +1,8 @@
 package org.apache.spark.sql
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.datasources.DataSourceStrategy
@@ -26,8 +26,8 @@ import org.apache.spark.sql.types.StructType
   *     a `sources.Filter` — the SupportsDelete capability boundary; the
   *     row-level rule only intercepts DELETEs the capability path would
   *     reject.
-  *   - [[parquetFooterSchema]]: the Spark schema of one parquet file,
-  *     read from its footer on the driver — the schema
+  *   - [[parquetFooterSchema]]: the Spark schema of one parquet file's
+  *     footer, read on the driver — the schema
   *     [[graft.sources.Parquet.read]] hands the reader so that no
   *     inference job runs.
   */
@@ -57,21 +57,16 @@ object GraftInternalBridge {
       isStreaming = false)
   }
 
-  /** The schema `spark.read.parquet` would infer from `file`: Spark's
-    * own footer conversion (the Spark row metadata when the file has
-    * it, else the parquet types), with the converter built from the
-    * READING session's conf. `SQLConf.get` would not do: on a thread
-    * with no active session it resolves to the defaults, and the
-    * default `inferTimestampNTZ` turns a tz-less `ts` into
-    * TimestampNTZType. */
-  def parquetFooterSchema(spark: SparkSession, file: Path): StructType = {
-    val conf = spark.asInstanceOf[classic.SparkSession].sessionState.conf
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(file, spark.sparkContext.hadoopConfiguration))
-    val footer = try reader.getFooter finally reader.close()
+  /** The schema `spark.read.parquet` would infer from `file`, given
+    * its `footer`: Spark's own footer conversion (the Spark row
+    * metadata when the file has it, else the parquet types), with the
+    * converter built from the READING session's conf. `SQLConf.get`
+    * would not do: on a thread with no active session it resolves to
+    * the defaults, and the default `inferTimestampNTZ` turns a tz-less
+    * `ts` into TimestampNTZType. */
+  def parquetFooterSchema(spark: SparkSession, file: Path, footer: ParquetMetadata): StructType =
     ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer),
-      new ParquetToSparkSchemaConverter(conf))
-  }
+      new ParquetToSparkSchemaConverter(spark.asInstanceOf[classic.SparkSession].sessionState.conf))
 
   def translatable(e: Expression): Boolean =
     DataSourceStrategy.translateFilter(e, supportNestedPredicatePushdown = true).isDefined

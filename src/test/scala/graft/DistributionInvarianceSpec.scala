@@ -156,8 +156,7 @@ class DistributionInvarianceSpec extends AnyFunSuite with BeforeAndAfterAll {
         Similarity.ivfPqSearchFrames(
           Similarity.withEmb(emb).filter(col("vec_id") < 4)
             .select(col("vec_id").as("qid"), col("emb")),
-          graft.sources.VersionedVectorIndex.centroids(spark, annDir),
-          graft.sources.VersionedVectorIndex.codebooks(spark, annDir),
+          graft.sources.VersionedVectorIndex.model(spark, annDir),
           f(graft.sources.VersionedVectorIndex.codes(spark, annDir)
             .filter(col("vec_id") >= 4)),
           4, 5, 2)

@@ -83,7 +83,7 @@ class ParquetReadSpec extends AnyFunSuite with BeforeAndAfterAll {
       Tables.events(spark, sf).where(col("event_id") % 5 === 1).select("event_id"))
     val reads = Seq[(String, () => Any)](
       "VersionedVectorIndex.serving" -> (() => {
-        val s = VV.serving(spark, vs); Seq(s.centroids, s.codebooks, s.liveCodes)
+        val s = VV.serving(spark, vs); Seq(s.model, s.liveCodes)
       }),
       "VersionedVectorIndex.liveCodes" -> (() => VV.liveCodes(spark, vs)),
       "VersionedTextIndex.bm25" -> (() => VT.bm25(spark, ts, Seq("spark", "join"), 10)),
@@ -94,6 +94,31 @@ class ParquetReadSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(jobs.forall(_._2 == 0), s"jobs launched while building: $jobs")
     // The control: a schema-inferring read is seen to launch its job.
     assert(jobsDuring("inferred read")(spark.read.parquet(Tables.path(sf, "orders"))) >= 1)
+  }
+
+  test("the IVF-PQ model is read on the driver: no job, the rows a Spark read gives") {
+    val vs = vectorStore
+    var model: graft.operators.IvfPqModel = null
+    assert(jobsDuring("VersionedVectorIndex.model") { model = VV.model(spark, vs) } == 0)
+    val modelDir = s"$vs/${VV.snapshot(spark, vs).modelDir}"
+    val cents = Parquet.read(spark, s"$modelDir/centroids").orderBy("cid").collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
+    val books = Parquet.read(spark, s"$modelDir/codebooks").orderBy("m", "cid").collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2))).toSeq
+    assert(model.coarse.map(c => (c.cid, c.cemb)).sortBy(_._1) == cents)
+    assert(model.books.map(b => (b.m, b.cid, b.cemb)).sortBy(b => (b._1, b._2)) == books)
+  }
+
+  test("building q122's frame launches at most one job: the query-batch collect") {
+    // A private SF dir (the embeddings table only), so this suite's ANN
+    // fixture dir is its own and no other test JVM builds into it.
+    val sfCopy = Files.createTempDirectory("graft_parquetspec_sf")
+    Files.copy(Paths.get(Tables.path(sf, "embeddings")),
+      sfCopy.resolve("embeddings.parquet"))
+    val d = sfCopy.toString
+    Fixtures.prepare(spark, d, SparkEntry.fixturesOf("q122_filtered_ann"))
+    val q122 = SparkEntry.queries("q122_filtered_ann")
+    assert(jobsDuring("q122 frame")(q122(spark, d)) <= 1)
   }
 
   test("the footer schema is the inferred schema for every testdata table") {

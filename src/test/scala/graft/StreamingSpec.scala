@@ -1106,8 +1106,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = java.nio.file.Files.createTempDirectory("graft_s19").toString
     val (nSub, k, nProbe) = (4, 10, 2)
     V.build(emb, dir, 8, nSub, 8, 2)
-    val coarse = V.centroids(spark, dir)
-    val books = V.codebooks(spark, dir)
+    val model = V.model(spark, dir)
     val codes = V.codes(spark, dir).filter(col("vec_id") >= 4)
     val queryVecs = emb.filter(col("vec_id") < 4)
       .select(col("vec_id"), col("embedding").cast("array<double>"))
@@ -1117,7 +1116,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val src = MemoryStream[(Long, Seq[Double])]
     val q = src.toDF().toDF("qid", "embedding").writeStream
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        val v = StreamingAnnServe.scoreBatch(b, coarse, books, codes, nSub, k, nProbe)
+        val v = StreamingAnnServe.scoreBatch(b, model, codes, nSub, k, nProbe)
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
         got.synchronized { got ++= v }
         ()
@@ -1131,7 +1130,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val want = graft.operators.Similarity.ivfPqSearchFrames(
       emb.filter(col("vec_id") < 4)
         .select(col("vec_id").as("qid"), col("embedding").cast("array<double>").as("emb")),
-      coarse, books, codes, nSub, k, nProbe)
+      model, codes, nSub, k, nProbe)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
     assert(got.sortBy(r => (r._1, r._2)).toSeq == want.sortBy(r => (r._1, r._2)),
       "stream serving must equal the one-shot batch search exactly")
@@ -1181,7 +1180,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val fresh = graft.operators.Similarity.ivfPqSearchFrames(
       emb.filter(col("vec_id") >= 2 && col("vec_id") < 4)
         .select(col("vec_id").as("qid"), col("embedding").cast("array<double>").as("emb")),
-      V.centroids(spark, dir), V.codebooks(spark, dir),
+      V.model(spark, dir),
       V.codes(spark, dir).filter(col("vec_id") >= 4), 4, 10, 8)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
     assert(perBatch(1).sortBy(r => (r._1, r._2)) == fresh.sortBy(r => (r._1, r._2)),
@@ -1232,7 +1231,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val fresh = graft.operators.Similarity.ivfPqSearchFrames(
       emb.filter(col("vec_id") >= 2 && col("vec_id") < 4)
         .select(col("vec_id").as("qid"), col("embedding").cast("array<double>").as("emb")),
-      V.centroids(spark, dir), V.codebooks(spark, dir),
+      V.model(spark, dir),
       V.liveCodes(spark, dir).filter(col("vec_id") >= 4), 4, 10, 8)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
     assert(perBatch(1).sortBy(r => (r._1, r._2)) == fresh.sortBy(r => (r._1, r._2)),
@@ -1270,7 +1269,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       graft.operators.Similarity.ivfPqSearchFrames(
         emb.filter(col("vec_id") >= 2 && col("vec_id") < 4)
           .select(col("vec_id").as("qid"), col("embedding").cast("array<double>").as("emb")),
-        V.centroids(spark, dir, version), V.codebooks(spark, dir, version),
+        V.model(spark, dir, version),
         V.liveCodes(spark, dir, version).filter(col("vec_id") >= 4), 4, 10, 8)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
         .toSeq.sortBy(r => (r._1, r._2))

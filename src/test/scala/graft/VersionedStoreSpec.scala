@@ -63,7 +63,7 @@ class VersionedStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** ADC search of the query batch over the live codes at `version`. */
   private def search(dir: String, version: Long = V.Latest): Seq[org.apache.spark.sql.Row] =
     Similarity.ivfPqSearchFrames(queries,
-      V.centroids(spark, dir, version), V.codebooks(spark, dir, version),
+      V.model(spark, dir, version),
       V.liveCodes(spark, dir, version).filter(col("vec_id") >= nQ),
       nSub, k, nProbe).collect().toSeq
 
@@ -117,7 +117,7 @@ class VersionedStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("time travel THROUGH compaction: v1 and v2 stay serveable after v3 rewrote the live set") {
     val fromV1 = Similarity.ivfPqSearchFrames(queries,
-      V.centroids(spark, store, 1L), V.codebooks(spark, store, 1L),
+      V.model(spark, store, 1L),
       V.codes(spark, store, 1L).filter(col("vec_id") >= nQ),
       nSub, k, nProbe).collect().toSeq
     // v1 ≡ a fresh build-then-append store's answers (the q90b contract).
@@ -130,11 +130,11 @@ class VersionedStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(fromV1 == appended)
     // v2 (tombstone view) ≡ v3 (compacted) — compaction changes no answer.
     val atV2 = Similarity.ivfPqSearchFrames(queries,
-      V.centroids(spark, store, 2L), V.codebooks(spark, store, 2L),
+      V.model(spark, store, 2L),
       V.liveCodes(spark, store, 2L).filter(col("vec_id") >= nQ),
       nSub, k, nProbe).collect().toSeq
     val atV3 = Similarity.ivfPqSearchFrames(queries,
-      V.centroids(spark, store), V.codebooks(spark, store),
+      V.model(spark, store),
       V.liveCodes(spark, store).filter(col("vec_id") >= nQ),
       nSub, k, nProbe).collect().toSeq
     assert(atV2 == atV3)
@@ -154,7 +154,7 @@ class VersionedStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("vacuum(retain=1) drops old versions and their files; the latest serves byte-identically") {
     val d = freshLifecycle()
     val before = Similarity.ivfPqSearchFrames(queries,
-      V.centroids(spark, d), V.codebooks(spark, d),
+      V.model(spark, d),
       V.liveCodes(spark, d).filter(col("vec_id") >= nQ),
       nSub, k, nProbe).collect().toSeq
     val buildSeg = V.snapshot(spark, d, 0L).segments
@@ -170,7 +170,7 @@ class VersionedStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(f.exists(new org.apache.hadoop.fs.Path(s"$d/$modelDir")),
       "the model is still referenced by the retained version and must survive")
     val after = Similarity.ivfPqSearchFrames(queries,
-      V.centroids(spark, d), V.codebooks(spark, d),
+      V.model(spark, d),
       V.liveCodes(spark, d).filter(col("vec_id") >= nQ),
       nSub, k, nProbe).collect().toSeq
     assert(after == before)
@@ -179,11 +179,11 @@ class VersionedStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("reindex is blue/green: a reader pinned at the old model is untouched; the new version equals a from-scratch build on the live set") {
     val d = freshLifecycle()
     def searchLatest() = Similarity.ivfPqSearchFrames(queries,
-      V.centroids(spark, d), V.codebooks(spark, d),
+      V.model(spark, d),
       V.liveCodes(spark, d).filter(col("vec_id") >= nQ),
       nSub, k, nProbe).collect().toSeq
     def searchAt(v: Long) = Similarity.ivfPqSearchFrames(queries,
-      V.centroids(spark, d, v), V.codebooks(spark, d, v),
+      V.model(spark, d, v),
       V.liveCodes(spark, d, v).filter(col("vec_id") >= nQ),
       nSub, k, nProbe).collect().toSeq
     val oldModel = searchAt(3L)
@@ -206,11 +206,11 @@ class VersionedStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       .withColumn("emb", col("embedding").cast("array<double>"))
       .select(col("vec_id"), col("cid"), col("emb"))
     val pruned = Similarity.ivfPqRerankPruned(queries,
-      V.centroids(spark, store), V.codebooks(spark, store),
+      V.model(spark, store),
       V.liveCodes(spark, store).filter(col("vec_id") >= nQ),
       cellVecs, nSub, 50, k, nProbe).collect().toSeq
     val unpruned = Similarity.ivfPqRerankFrames(queries,
-      V.centroids(spark, store), V.codebooks(spark, store),
+      V.model(spark, store),
       V.liveCodes(spark, store).filter(col("vec_id") >= nQ),
       Similarity.withEmb(emb), nSub, 50, k, nProbe).collect().toSeq
     assert(pruned == unpruned,
@@ -227,7 +227,7 @@ class VersionedStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("vector upsert swaps generations in ONE commit: live search equals the delete-then-append lineage, pinned v3 untouched, revivals included") {
     def res(dir: String, v: Long) = Similarity.ivfPqSearchFrames(queries,
-      V.centroids(spark, dir, v), V.codebooks(spark, dir, v),
+      V.model(spark, dir, v),
       V.liveCodes(spark, dir, v).filter(col("vec_id") >= nQ),
       nSub, k, nProbe).collect().toSeq
     val patch = emb.filter(col("vec_id") >= 400 && col("vec_id") % 5 === 2)
@@ -305,7 +305,7 @@ class VersionedStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("restore rolls the live state back as a new commit: zero data movement, target reproduced exactly, mistake still inspectable") {
     val d = freshLifecycle()
     def search(v: Long) = Similarity.ivfPqSearchFrames(queries,
-      V.centroids(spark, d, v), V.codebooks(spark, d, v),
+      V.model(spark, d, v),
       V.liveCodes(spark, d, v).filter(col("vec_id") >= nQ),
       nSub, k, nProbe).collect().toSeq
     val atV3 = search(3L)
@@ -347,14 +347,12 @@ class VersionedStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("append admits new vectors without retraining: model frozen, existing codes untouched") {
     val d = Files.createTempDirectory("graft_verspec_app").toString
     V.build(base, d, nCents, nSub, nCodes, iters)
-    val centsBefore = V.centroids(spark, d).orderBy("cid").collect().toSeq
-    val booksBefore = V.codebooks(spark, d).orderBy("m", "cid").collect().toSeq
+    val modelBefore = V.model(spark, d)
     val codesBefore = V.codes(spark, d).orderBy("vec_id").collect().toSeq
     V.append(spark, d, rest)
-    assert(V.centroids(spark, d).orderBy("cid").collect().toSeq == centsBefore,
-      "append must not touch the coarse quantizer")
-    assert(V.codebooks(spark, d).orderBy("m", "cid").collect().toSeq == booksBefore,
-      "append must not touch the sub-codebooks")
+    val model = V.model(spark, d)
+    assert(model.coarse == modelBefore.coarse, "append must not touch the coarse quantizer")
+    assert(model.books == modelBefore.books, "append must not touch the sub-codebooks")
     val after = V.codes(spark, d).orderBy("vec_id").collect().toSeq
     assert(after.filter(_.getLong(0) < 400) == codesBefore,
       "existing code rows must be byte-stable under append")
@@ -363,9 +361,9 @@ class VersionedStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       "every vector coded exactly once after append")
     // The appended rows are coded against the STORED model: re-encoding
     // them from the stored artifacts reproduces them.
-    val expected = Similarity.encodeResiduals(
-      Similarity.residuals(Similarity.withEmb(rest), V.centroids(spark, d)),
-      V.codebooks(spark, d), nSub).orderBy("vec_id").collect().toSeq
+    val expected = Similarity.encodeResidualsModel(
+      Similarity.residualsModel(Similarity.withEmb(rest), model.coarse),
+      model.books, nSub).orderBy("vec_id").collect().toSeq
     assert(after.filter(_.getLong(0) >= 400).map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2)))
       == expected.map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2))))
   }
@@ -442,7 +440,7 @@ class VersionedStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("ADC serving never scans the float embedding column on the corpus side") {
     val a = V.serving(spark, full)
     assert(a.nSub == nSub, "nSub comes from the snapshot's recorded training parameters")
-    val q = Similarity.ivfPqSearchFrames(queries, a.centroids, a.codebooks,
+    val q = Similarity.ivfPqSearchFrames(queries, a.model,
       a.liveCodes.filter(col("vec_id") >= nQ), a.nSub, k, nProbe)
     import org.apache.spark.sql.execution.FileSourceScanExec
     val storeScans = q.queryExecution.sparkPlan.collectLeaves().collect {

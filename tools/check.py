@@ -23,7 +23,8 @@ TABLES = "region nation customer supplier part orders lineitem events documents 
 if "--skip-verify" not in sys.argv:
     r = subprocess.run(
         ["sbt", f'runMain graft.Verify {SF} {OUT}'],
-        cwd="/root/repo", capture_output=True, text=True)
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        capture_output=True, text=True)
     tail = "\n".join((r.stdout + r.stderr).splitlines()[-15:])
     if r.returncode != 0:
         print(tail); sys.exit(1)

@@ -25,6 +25,7 @@ per-query comparisons against this reference are interpretable: no
 query's wall carries a store build.
 
 Usage: python3 tools/mkref.py [in=BENCH_LAST.json] [out=BENCH_REF.json]
+(defaults: the two files at the root of the checkout holding this script)
 """
 import json, sys, os
 
@@ -32,8 +33,9 @@ HIST_N = 3
 DRIFT_RATIO = 1.5
 MIN_BASE = 0.3  # references below this are too noisy to call drift on
 
-src = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/BENCH_LAST.json"
-out = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/BENCH_REF.json"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+src = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, "BENCH_LAST.json")
+out = sys.argv[2] if len(sys.argv) > 2 else os.path.join(REPO, "BENCH_REF.json")
 a = json.load(open(src))
 cpu = {k: v for k, v in a.get("cpu_s", {}).items() if isinstance(v, (int, float))}
 wall = {k: v for k, v in a.get("queries", {}).items() if isinstance(v, (int, float))}

@@ -10,7 +10,7 @@ CPUS="${3:-32}"
 SF="${4:-/root/testdata/sf0.1}"
 SNAP=$(mktemp -d /tmp/graft-classes.XXXX)
 trap 'rm -rf "$SNAP"' EXIT
-cp -r /root/repo/target/scala-2.13/classes/* "$SNAP/"
+cp -r "$(dirname "$0")/../target/scala-2.13/classes/"* "$SNAP/"
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic \
